@@ -109,13 +109,17 @@ object GraftDoc {
   }
 
   /** Upsert-resolved view: the latest version of each `_id`, minus keys
-    * whose latest version is a tombstone. One hash shuffle on `_id` (the
-    * floor for any upsert resolution); everything upstream is a pruned
-    * parallel file scan; the tombstone-seq set is a tiny driver-side
-    * manifest read baked into the plan as a literal filter. Intra-commit
-    * duplicate `_id`s are a writer contract violation (the reference
-    * store would apply them in arbitrary put order); dedupe upstream if
-    * the batch can carry them. */
+    * whose latest version is a tombstone. A full read costs one hash
+    * shuffle on `_id` after a pruned parallel file scan. A read filtered
+    * to one key (`snapshot(...).filter(col("_id") === k)`) runs as one
+    * task with no exchange: the scan drops other keys' lines before the
+    * JSON parse and reports itself clustered on `_id` — which Spark uses
+    * while `spark.sql.sources.v2.bucketing.enabled` is on (the default;
+    * off, the read falls back to the shuffle). The tombstone-seq set is a
+    * tiny driver-side manifest read baked into the plan as a literal
+    * filter. Intra-commit duplicate `_id`s are a writer contract
+    * violation (the reference store would apply them in arbitrary put
+    * order); dedupe upstream if the batch can carry them. */
   def snapshot(spark: SparkSession, path: String): DataFrame = {
     val w = Window.partitionBy(col("_id"))
       .orderBy(col(GraftDocLog.CommitCol).desc)

@@ -12,8 +12,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
+import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning}
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
@@ -50,7 +51,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    splits large files into byte-range partitions (newline-aligned, the
   *    classic text-split protocol) so a few big commits still parallelize;
   *  - [[GraftDoc.snapshot]] resolves latest-document-per-`_id` (one
-  *    hash shuffle on `_id`, the minimum any upsert resolution costs);
+  *    hash shuffle on `_id` for a full read; a read whose pushed filters
+  *    pin one `_id` skips other keys' lines before the JSON parse and
+  *    reports key-grouped partitioning, so its versions resolve in one
+  *    task with no exchange while `spark.sql.sources.v2.bucketing.enabled`
+  *    is on, Spark's default);
   *  - [[GraftDoc.compact]] folds history into a single base commit so
   *    read amplification stays bounded.
   *
@@ -80,10 +85,14 @@ class GraftDocDataSource extends TableProvider with DataSourceRegister {
     val doc = GraftDocLog.readSchema(path).getOrElse(throw new IllegalArgumentException(
       s"graft-doc: no ${GraftDocLog.SchemaFile} under $path and no user schema " +
         "(pass .schema(...) or write the table first)"))
+    // every body column reads nullable whatever the writer declared:
+    // tombstone rows carry only `_id`
+    val body = StructType(doc.fields.map(f =>
+      if (f.name == "_id") f else f.copy(nullable = true)))
     // reads expose the commit sequence alongside the document fields —
     // the recency column GraftDoc.snapshot resolves upserts with
     val withCommit =
-      doc.add(StructField(GraftDocLog.CommitCol, LongType, nullable = false))
+      body.add(StructField(GraftDocLog.CommitCol, LongType, nullable = false))
     // opt-in `_op` change-type column (insert|delete): first-class CDC
     // deletes — the flag rides the commit dir name, so it costs the scan
     // nothing (no manifest read, no per-row storage)
@@ -202,8 +211,8 @@ class GraftDocScanBuilder(docSchema: StructType, path: String,
       new SerializableHadoopConf(GraftDocLog.hadoopConf()), readConf)
 }
 
-/** Conjunctive file-level pruning over the pushed filter set. */
-private[connector] object GraftDocFilters {
+/** Conjunctive file- and line-level pruning over the pushed filter set. */
+private[graft] object GraftDocFilters {
   private val Id = "_id"
 
   // range predicates on ANY single column are accepted: `_id`/`_commit`
@@ -220,6 +229,54 @@ private[connector] object GraftDocFilters {
     case LessThanOrEqual(_, _) => true
     case StringStartsWith(c, _) => c == Id // key-prefix scan (reference store range read)
     case _ => false
+  }
+
+  /** The `_id` values the conjunction of `_id` `EqualTo`/`In` filters
+    * admits, or None when no such filter constrains `_id`. An `In` with a
+    * non-string literal does not constrain (conservative); null literals
+    * never match and drop out. */
+  def wantedIds(filters: Array[Filter]): Option[Set[String]] =
+    filters.foldLeft(Option.empty[Set[String]]) { (acc, f) =>
+      val keys = f match {
+        case EqualTo(Id, v: String) => Some(Set(v))
+        case In(Id, vs) if vs.forall(v => v == null || v.isInstanceOf[String]) =>
+          Some(vs.collect { case s: String => s }.toSet)
+        case _ => None
+      }
+      (acc, keys) match {
+        case (Some(a), Some(k)) => Some(a.intersect(k))
+        case (a, None) => a
+        case (None, k) => k
+      }
+    }
+
+  /** The wanted keys as UTF-8 for [[otherKey]], or None when lines
+    * cannot be skipped. A wanted key holding U+FFFD disables the skip: a
+    * malformed byte run decodes to that character, so a byte mismatch
+    * would no longer prove a key mismatch. */
+  def lineSkipKeys(filters: Array[Filter]): Option[Set[UTF8String]] =
+    wantedIds(filters).filterNot(_.exists(_.contains('\uFFFD')))
+      .map(_.map(UTF8String.fromString))
+
+  private val IdPrefix = "{\"_id\":\"".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** True when `line(0 until n)` provably holds a document whose `_id` is
+    * none of `wanted`: it starts with `{"_id":"` (the writer emits `_id`
+    * first, once, with no whitespace) and the value up to its closing
+    * quote carries no backslash, so its raw bytes are the key's UTF-8 and
+    * differ from every wanted key's. Any other shape — a backslash, a
+    * different leading key, an empty or unterminated line — is left to
+    * the JSON parser. */
+  def otherKey(line: Array[Byte], n: Int, wanted: Set[UTF8String]): Boolean = {
+    val p = IdPrefix.length
+    if (n <= p || !java.util.Arrays.equals(line, 0, p, IdPrefix, 0, p)) return false
+    var end = p
+    while (end < n && line(end) != '"') {
+      if (line(end) == '\\') return false
+      end += 1
+    }
+    // a view over the value's bytes: hashed and compared, never copied
+    end < n && !wanted.contains(UTF8String.fromBytes(line, p, end - p))
   }
 
   private def asLong(v: Any): Option[Long] = v match {
@@ -323,14 +380,29 @@ private[connector] object GraftDocFilters {
 
 class GraftDocScan(required: StructType, path: String, pushed: Array[Filter],
     conf: SerializableHadoopConf,
-    readConf: GraftDocReadConf = GraftDocReadConf.default) extends Scan with Batch {
+    readConf: GraftDocReadConf = GraftDocReadConf.default) extends Scan with Batch
+    with SupportsReportPartitioning {
   private val splitBytes = readConf.splitBytes
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-doc $path, PushedFilters: [${pushed.mkString(", ")}]"
 
-  private def partitionsFor(fis: Seq[GraftDocLog.CommitFileInfo]): Array[InputPartition] =
+  /** The one `_id` the pushed filters pin, when `_id` is read. Every row
+    * such a scan can return shares that key, so the scan reports itself
+    * clustered on `_id`: the snapshot window's `ClusteredDistribution(_id)`
+    * is met without an exchange, and Spark groups the batch splits (all
+    * keyed alike) into one task. */
+  private val pinnedId: Option[String] =
+    if (!required.fieldNames.contains("_id")) None
+    else GraftDocFilters.wantedIds(pushed).filter(_.size == 1).map(_.head)
+
+  override def outputPartitioning(): Partitioning =
+    if (pinnedId.isDefined)
+      new KeyGroupedPartitioning(Array(Expressions.identity("_id")), 1)
+    else new UnknownPartitioning(0)
+
+  private def partitionsFor(fis: Seq[GraftDocLog.CommitFileInfo]): Array[GraftDocInputPartition] =
     fis
       .filter(fi => GraftDocFilters.commitOk(pushed, fi.seq) &&
         GraftDocFilters.idOk(pushed, fi.minId, fi.maxId) &&
@@ -340,7 +412,7 @@ class GraftDocScan(required: StructType, path: String, pushed: Array[Filter],
         (0L until n).map { i =>
           GraftDocInputPartition(fi.path, fi.seq, i * splitBytes,
             math.min(splitBytes, fi.bytes - i * splitBytes),
-            fi.tombstone): InputPartition
+            fi.tombstone)
         }
       }.toArray
 
@@ -358,20 +430,25 @@ class GraftDocScan(required: StructType, path: String, pushed: Array[Filter],
     * never even listed) and `_id` (manifest min/max, read only when an
     * `_id` predicate is pushed), then byte-range splits so a few large
     * commit files still spread across the cluster. */
-  override def planInputPartitions(): Array[InputPartition] =
-    partitionsFor(GraftDocLog.listCommitFileInfosInRange(path, 0L, Long.MaxValue,
-      withStats = needsIdStats,
+  override def planInputPartitions(): Array[InputPartition] = {
+    val splits = partitionsFor(GraftDocLog.listCommitFileInfosInRange(path, 0L,
+      Long.MaxValue, withStats = needsIdStats,
       seqOk = seq => GraftDocFilters.commitOk(pushed, seq)))
+    pinnedId match {
+      case Some(id) => splits.map(GraftDocKeyedPartition(_, id))
+      case None => splits.toArray[InputPartition]
+    }
+  }
 
   /** Micro-batch slice: the files of commits in (start, end] — listed by
     * range, so a tailing reader's per-batch planning cost tracks the
-    * slice, not the table's full history. */
+    * slice, not the table's full history. Never key-grouped. */
   private[connector] def streamPartitions(startSeq: Long, endSeq: Long): Array[InputPartition] =
     partitionsFor(GraftDocLog.listCommitFileInfosInRange(path, startSeq, endSeq,
-      withStats = needsIdStats))
+      withStats = needsIdStats)).toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftDocReaderFactory(required.json, conf)
+    new GraftDocReaderFactory(required.json, conf, GraftDocFilters.lineSkipKeys(pushed))
 
   /** Streaming read of the commit log — the table's CDC feed (every
     * document version, in commit order), the source role of the
@@ -510,13 +587,26 @@ class GraftDocMicroBatchStream(scan: GraftDocScan, path: String,
 case class GraftDocInputPartition(file: String, commitSeq: Long,
     start: Long, length: Long, tombstone: Boolean = false) extends InputPartition
 
+/** A split of a scan pinned to one `_id`; Spark groups splits by this key. */
+case class GraftDocKeyedPartition(split: GraftDocInputPartition, id: String)
+    extends HasPartitionKey {
+  override def partitionKey(): InternalRow = InternalRow(UTF8String.fromString(id))
+}
+
+/** `skipKeys`: the `_id`s the pushed filters admit
+  * ([[GraftDocFilters.lineSkipKeys]]); a line that provably holds another
+  * key is dropped before the JSON parse. The filters stay residual. */
 class GraftDocReaderFactory(requiredSchemaJson: String,
-    conf: SerializableHadoopConf) extends PartitionReaderFactory {
+    conf: SerializableHadoopConf,
+    skipKeys: Option[Set[UTF8String]]) extends PartitionReaderFactory {
   private val CommitOrd = -1
   private val OpOrd = -2
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftDocInputPartition]
+    val p = partition match {
+      case k: GraftDocKeyedPartition => k.split
+      case s: GraftDocInputPartition => s
+    }
     val required = GraftDocLog.schemaFromJson(requiredSchemaJson)
     // parse only the document fields Spark asked for (JSON column pruning:
     // the parser skips every other key), then place them — plus the
@@ -543,9 +633,11 @@ class GraftDocReaderFactory(requiredSchemaJson: String,
 
       override def next(): Boolean = {
         while (!pending.hasNext) {
-          val line = lines.readLine()
-          if (line == null) return false
-          if (line.nonEmpty) pending = parser.fromJson(line)
+          val n = lines.nextLine()
+          if (n < 0) return false
+          if (n > 0 && !skipKeys.exists(GraftDocFilters.otherKey(lines.bytes, n, _)))
+            pending = parser.fromJson(
+              new String(lines.bytes, 0, n, java.nio.charset.StandardCharsets.UTF_8))
         }
         val doc = pending.next()
         val out = new GenericInternalRow(outPlan.length)
@@ -626,13 +718,15 @@ private[graft] final class RangeLineReader(
     n
   }
 
-  /** Next owned line, or null when the split is exhausted. */
-  def readLine(): String = {
-    if (pos >= end) return null // next line would start past our range
-    val n = consumeLine()
-    if (n < 0) return null
-    new String(line, 0, n, java.nio.charset.StandardCharsets.UTF_8)
-  }
+  /** Advance to the next owned line and return its byte length (its
+    * bytes are `bytes(0 until n)`, valid until the next call), or -1 when
+    * the split is exhausted. */
+  def nextLine(): Int =
+    if (pos >= end) -1 // next line would start past our range
+    else consumeLine()
+
+  /** The current line's buffer (see [[nextLine]]). */
+  def bytes: Array[Byte] = line
 
   def close(): Unit = in.close()
 }

@@ -166,8 +166,12 @@ class GraftDocConnectorSpec extends SparkSpec {
 
   // -------------------------------------------------- round-3 scale items
 
+  // descends into adaptive plans and their query stages
+  private object Plans
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   private def batchScan(df: org.apache.spark.sql.DataFrame) =
-    df.queryExecution.executedPlan.collect {
+    Plans.collect(df.queryExecution.executedPlan) {
       case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
     }.head
 
@@ -301,7 +305,10 @@ class GraftDocConnectorSpec extends SparkSpec {
       val got = (0L until (total + split - 1) / split).flatMap { i =>
         val r = new graft.connector.RangeLineReader(
           fs.open(p), i * split, math.min(split, total - i * split))
-        try Iterator.continually(r.readLine()).takeWhile(_ != null).toList
+        // each line is decoded before the next nextLine() reuses the buffer
+        try Iterator.continually(r.nextLine()).takeWhile(_ >= 0)
+          .map(n => new String(r.bytes, 0, n, java.nio.charset.StandardCharsets.UTF_8))
+          .toList
         finally r.close()
       }
       assert(got == lines, s"split=$split: $got")
@@ -1080,5 +1087,230 @@ class GraftDocConnectorSpec extends SparkSpec {
     // a snapshot built after the delete sees it applied
     assert(GraftDoc.snapshot(spark, dir).select("_id").as[String]
       .collect().toSeq == Seq("1"))
+  }
+
+  // ------------------------------------------------ key-pinned point reads
+
+  private def withBucketing[T](on: Boolean)(f: => T): T = {
+    val key = "spark.sql.sources.v2.bucketing.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, on.toString)
+    try f
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  private def lookup(dir: String, id: String): Seq[(String, String)] =
+    GraftDoc.snapshot(spark, dir).filter(col("_id") === id)
+      .select("_id", "name").as[(String, String)].collect().toSeq
+
+  /** Jobs, tasks and records read by the Spark jobs `f` runs. */
+  private def counted(f: => Unit): (Int, Int, Long) = {
+    import org.apache.spark.scheduler._
+    val group = s"graft-doc-count-${java.util.UUID.randomUUID()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val records = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) {
+          tasks.incrementAndGet()
+          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "graft-doc lookup count")
+    try {
+      f
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    (jobs.get(), tasks.get(), records.get())
+  }
+
+  /** Keys 1..40 over four files, then: 3 rewritten twice, 5 deleted, 7
+    * deleted and re-inserted. */
+  private def historyTable(): String = {
+    val dir = tmp()
+    GraftDoc.write(spark.range(1, 41).select(col("id").as("k"),
+      concat(lit("v1_"), col("id")).as("name")).repartition(4), "k", dir)
+    GraftDoc.write(Seq((3L, "v2_3"), (8L, "v2_8")).toDF("k", "name"), "k", dir)
+    GraftDoc.write(Seq((3L, "v3_3")).toDF("k", "name"), "k", dir)
+    GraftDoc.delete(spark, dir, Seq(5L, 7L).toDF("k"))
+    GraftDoc.write(Seq((7L, "v4_7")).toDF("k", "name"), "k", dir)
+    dir
+  }
+
+  test("non-nullable body columns: snapshot and compact survive a delete") {
+    val dir = tmp()
+    GraftDoc.write(spark.range(1, 101).select(col("id").as("k"),
+      (col("id") * 2).as("v"), lit("x").as("s")), "k", dir)
+    GraftDoc.delete(spark, dir, spark.range(5, 8).toDF("k"))
+    val want = (1L to 100L).filterNot(k => k >= 5 && k <= 7)
+      .map(k => (k.toString, k * 2, "x"))
+    def snap() = GraftDoc.snapshot(spark, dir).select("_id", "v", "s")
+      .as[(String, Long, String)].collect().sortBy(_._1.toLong).toSeq
+    assert(snap() == want)
+    GraftDoc.compact(spark, dir)
+    assert(snap() == want)
+  }
+
+  test("key-pinned snapshot lookup plans no shuffle and runs one job, one task") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = historyTable()
+    def shuffles(df: org.apache.spark.sql.DataFrame): Int = {
+      df.collect()
+      Plans.collect(df.queryExecution.executedPlan) {
+        case s: ShuffleExchangeExec => s
+      }.length
+    }
+    val q = GraftDoc.snapshot(spark, dir).filter(col("_id") === "3")
+    assert(shuffles(q) == 0, q.queryExecution.executedPlan.treeString)
+    // the same read without key grouping keeps its exchange
+    withBucketing(on = false) {
+      assert(shuffles(GraftDoc.snapshot(spark, dir).filter(col("_id") === "3")) == 1)
+    }
+    // an un-pinned snapshot keeps its exchange too
+    assert(shuffles(GraftDoc.snapshot(spark, dir)) == 1)
+
+    var rows = Seq.empty[(String, String)]
+    val (jobs, tasks, records) = counted { rows = lookup(dir, "3") }
+    assert(rows == Seq("3" -> "v3_3"))
+    assert((jobs, tasks) == (1, 1), s"jobs=$jobs tasks=$tasks")
+    // only key 3's three versions reach the parser's output
+    assert(records == 3L, s"records read: $records")
+  }
+
+  test("key-pinned lookup: same rows as the shuffle plan for every key history") {
+    val dir = historyTable()
+    val want = Map("1" -> Seq("1" -> "v1_1"), "3" -> Seq("3" -> "v3_3"),
+      "5" -> Nil, "7" -> Seq("7" -> "v4_7"), "8" -> Seq("8" -> "v2_8"),
+      "99" -> Nil, "0" -> Nil)
+    want.foreach { case (id, rows) =>
+      assert(lookup(dir, id) == rows, s"key $id")
+      withBucketing(on = false)(assert(lookup(dir, id) == rows, s"key $id, shuffle plan"))
+    }
+  }
+
+  test("key-pinned lookup with every file pruned away returns nothing") {
+    val dir = historyTable()
+    // "zz" sorts above every stored key: no file's manifest range admits it
+    val q = GraftDoc.snapshot(spark, dir).filter(col("_id") === "zz")
+    assert(batchScan(q).inputPartitions.isEmpty)
+    assert(q.collect().isEmpty)
+    assert(GraftDoc.log(spark, dir).filter(col("_id") === "zz").count() == 0)
+  }
+
+  test("line skip: escaped, multi-byte and prefix keys resolve exactly") {
+    val keys = Seq("12", "123", "1", "a\"b", "back\\slash", "ctl\u0001x",
+      "tab\tkey", "é", "日本", "日本語", "emoji\uD83D\uDE00", "plain")
+    val dir = tmp()
+    GraftDoc.write(keys.map(k => (k, s"v1:$k")).toDF("k", "name"), "k", dir)
+    GraftDoc.write(keys.take(6).map(k => (k, s"v2:$k")).toDF("k", "name"), "k", dir)
+    // the writer escaped what JSON requires and kept UTF-8 raw
+    val stored = GraftDocLog.listCommitFiles(dir).map(_._2)
+      .flatMap(f => scala.io.Source.fromFile(f.stripPrefix("file:"), "UTF-8").getLines())
+    assert(stored.exists(_.startsWith("{\"_id\":\"a\\\"b\"")))
+    assert(stored.exists(_.startsWith("{\"_id\":\"ctl\\u0001x\"")))
+    assert(stored.exists(_.startsWith("{\"_id\":\"日本\"")))
+    keys.zipWithIndex.foreach { case (k, i) =>
+      val v = if (i < 6) s"v2:$k" else s"v1:$k"
+      assert(lookup(dir, k) == Seq(k -> v), s"key $k")
+      assert(GraftDoc.log(spark, dir).filter(col("_id") === k).count() ==
+        (if (i < 6) 2 else 1), s"log versions of $k")
+    }
+    assert(lookup(dir, "日") == Nil)
+    assert(lookup(dir, "12 ") == Nil)
+  }
+
+  test("line skip: only lines that provably start with another _id are dropped") {
+    import graft.connector.GraftDocFilters.otherKey
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    def skip(line: String, wanted: String*): Boolean = {
+      val b = line.getBytes(utf8)
+      otherKey(b, b.length, wanted.map(UTF8String.fromString).toSet)
+    }
+    assert(skip("""{"_id":"12","v":1}""", "123"))
+    assert(skip("""{"_id":"123","v":1}""", "12"))
+    assert(!skip("""{"_id":"12","v":1}""", "12"))
+    assert(!skip("""{"_id":"12","v":1}""", "1", "12"))
+    assert(skip("""{"_id":"日本"}""", "日"))
+    assert(!skip("""{"_id":"日本"}""", "日本"))
+    // a backslash anywhere in the value: the parser decides
+    assert(!skip("""{"_id":"a\"b"}""", "x"))
+    assert(!skip("{\"_id\":\"" + "\\" + "u0041\"}", "B"))
+    // any other shape: the parser decides
+    assert(!skip("""{"v":1,"_id":"x"}""", "y"))
+    assert(!skip("""{ "_id":"x"}""", "y"))
+    assert(!skip("""{"_id":5}""", "y"))
+    assert(!skip("""{"_id":"unterminated""", "y"))
+    assert(!skip("", "y"))
+    // the byte buffer may be longer than the line
+    val b = """{"_id":"ab"}XXXX""".getBytes(utf8)
+    assert(!otherKey(b, 12, Set(UTF8String.fromString("ab"))))
+    // the wanted set: conjunction of EqualTo / In on _id
+    import org.apache.spark.sql.sources.{EqualTo, In, GreaterThan}
+    import graft.connector.GraftDocFilters.{lineSkipKeys, wantedIds}
+    assert(wantedIds(Array(In("_id", Array("a", "b", null)), EqualTo("_id", "b"))) ==
+      Some(Set("b")))
+    assert(wantedIds(Array(GreaterThan("_id", "a"), EqualTo("v", "b"))).isEmpty)
+    assert(wantedIds(Array(In("_id", Array("a", 1)))).isEmpty)
+    assert(lineSkipKeys(Array(EqualTo("_id", "x\uFFFD"))).isEmpty)
+  }
+
+  test("line skip: lines led by another key, and empty lines, still parse") {
+    val dir = tmp()
+    GraftDoc.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "name")
+      .coalesce(1), "k", dir)
+    val part = GraftDocLog.listCommitFiles(dir).map(_._2).head.stripPrefix("file:")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(part),
+      "\n{\"name\":\"b2\",\"_id\":\"2\"}\n\n",
+      java.nio.file.StandardOpenOption.APPEND)
+    // the local FS checksums what it wrote; the hand edit drops the stale sum
+    val crc = java.nio.file.Paths.get(part)
+    java.nio.file.Files.delete(crc.resolveSibling(s".${crc.getFileName}.crc"))
+    def ids(id: String) = GraftDoc.log(spark, dir).filter(col("_id") === id)
+      .select("name").as[String].collect().sorted.toSeq
+    assert(ids("2") == Seq("b", "b2"))
+    assert(ids("1") == Seq("a"))
+  }
+
+  test("line skip: isin on _id returns the rows of the unpushed query") {
+    val dir = historyTable()
+    // past the optimizer's InSet threshold, so the long-list path is pushed
+    val ks = Seq("3", "5", "7", "12", "99") ++ (20 to 30).map(_.toString)
+    val all = GraftDoc.snapshot(spark, dir).select("_id", "name")
+      .as[(String, String)].collect().toSeq
+    val got = GraftDoc.snapshot(spark, dir).filter(col("_id").isin(ks: _*))
+      .select("_id", "name").as[(String, String)].collect().sorted.toSeq
+    assert(got == all.filter(r => ks.contains(r._1)).sorted)
+    assert(batchScan(GraftDoc.snapshot(spark, dir).filter(col("_id").isin(ks: _*)))
+      .scan.description().contains("In(_id"))
+  }
+
+  test("line skip: readStream with an _id filter drains every version of the key") {
+    val dir = historyTable()
+    val ckpt = tmp()
+    val q = GraftDoc.readStream(spark, dir).filter(col("_id") === "3")
+      .select("_id", "name", "_commit")
+      .writeStream.format("memory").queryName("graft_doc_key3")
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val got = spark.table("graft_doc_key3").select("name").as[String]
+      .collect().sorted.toSeq
+    assert(got == Seq("v1_3", "v2_3", "v3_3"))
   }
 }
