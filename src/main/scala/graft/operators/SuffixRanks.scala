@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,7 +31,7 @@ import org.apache.spark.sql.functions._
   *     suffixes (suffix STRINGS never move; only integer ranks do).
   *   - The dense rank over key pairs is [[StableIds.assign]] on the
   *     DISTINCT key set: range-partition + per-partition counts +
-  *     triangular offsets — the scale-safe global numbering, not a
+  *     driver-side offsets — the scale-safe global numbering, not a
   *     single-task empty-partitioning window (the oracle's
   *     dense_rank() is the semantic spec; StableIds is its
   *     distributed plan).
@@ -100,24 +105,22 @@ object SuffixRanks {
     * barely collapse (the driver's boilerplate-heavy documents table:
     * 72% of positions still share a 16-char window, measured by
     * `tools/SuffixPruneProbe`), while a mostly-unique corpus crosses
-    * the bar by round 1–2 and rides the shrink. The decision costs one
-    * count per round on the already-materialized round frame. */
+    * the bar by round 1–2 and rides the shrink. The decision reads a
+    * count observed on the round's own lineage cut — no extra job. */
   val PruneMinSettledFraction = 0.15
 
   def roundsWithGroups(d: DataFrame): Seq[DataFrame] =
-    roundsWithGroups(d, d.sparkSession.conf
-      .getOption(IterationCheckpoint.ConfKey).exists(_.nonEmpty))
+    roundsObserved(d).map(_._1)
 
-  /** [[roundsWithGroups]] with the pruning-decision read made explicit
-    * (`dictDecision` defaults to the checkpoint regime in the public
-    * method; the parameter exists so the spec can pin both decision
-    * paths frame-identical without touching the JVM-global checkpoint
-    * directory). */
-  private[graft] def roundsWithGroups(d: DataFrame,
-      dictDecision: Boolean): Seq[DataFrame] = {
-    var active = IterationCheckpoint.cut(positions(d))
+  /** [[roundsWithGroups]], each round paired with its observed active
+    * count — |positions in groups > 1|, the figure the pruning decision
+    * reads (exposed so the spec can pin it to a count of the frame). */
+  private[graft] def roundsObserved(d: DataFrame): Seq[(DataFrame, Long)] = {
+    val totalObs = Observation()
+    var active = IterationCheckpoint.cut(
+      positions(d).observe(totalObs, count(lit(1))))
     var settled = active.filter(lit(false))
-    val total = active.count().toDouble
+    val total = observedCount(totalObs).toDouble
     (1 to Rounds).map { k =>
       val gap = 1 << (k - 1)
       val full = active.unionByName(settled)
@@ -145,27 +148,12 @@ object SuffixRanks {
           lit(0L).as("r2"))
         .join(allKeys, Seq("r1", "r2"))
         .select(col("doc_id"), col("pos"), col("nr").as("r"), col("grp"))
-      val merged = IterationCheckpoint.cut(aNew.unionByName(sNew))
-      // The pruning decision needs |positions in groups > 1|. Two
-      // provably-equal reads (SuffixRanksPropSpec pins them equal on
-      // random two-regime corpora): a corpus-frame count, or Σ grp
-      // over the dict-sized allKeys (every allKeys row matches exactly
-      // grp merged positions — keyCnt keys by construction, keysS
-      // exactly its one settled position, per the disjointness
-      // invariant above). Which is cheaper depends on the CHECKPOINT
-      // REGIME: with executor-local blocks (localCheckpoint — the
-      // local/bench default) the corpus count is one job over memory
-      // blocks and the dict sum costs MORE (3 micro-jobs re-running
-      // the StableIds tail: measured 14.8 vs 16.4 s on qau at sf0.1 —
-      // the dict-always variant was tried and reverted); with a
-      // DURABLE checkpoint dir (the 100 TB cluster conf) the corpus
-      // count re-reads the whole round frame from remote storage per
-      // round, and the dict sum reads only the key dictionary.
-      val nActive =
-        if (dictDecision)
-          allKeys.filter(col("grp") > 1)
-            .agg(coalesce(sum(col("grp")), lit(0L))).head.getLong(0)
-        else merged.filter(col("grp") > 1).count()
+      // the pruning decision's |positions in groups > 1| is observed on
+      // the round's cut itself — the corpus pass that runs anyway
+      val activeObs = Observation()
+      val merged = IterationCheckpoint.cut(aNew.unionByName(sNew)
+        .observe(activeObs, count(when(col("grp") > 1, true))))
+      val nActive = observedCount(activeObs)
       if (total - nActive >= total * PruneMinSettledFraction) {
         active = merged.filter(col("grp") > 1)
           .select(col("doc_id"), col("pos"), col("r"))
@@ -180,9 +168,23 @@ object SuffixRanks {
         settled = merged.filter(lit(false))
           .select(col("doc_id"), col("pos"), col("r"))
       }
-      merged
+      (merged, nActive)
     }
   }
+
+  /** Bound on the wait for an observed metric: the listener bus
+    * delivers it just after the cut's job ends, so a miss here means a
+    * lost or stalled delivery, never a slow job. */
+  private val ObservedWait = 2.minutes
+
+  /** The single count `o` observed, waited for at most [[ObservedWait]]
+    * — never the unbounded `Observation.get`. */
+  private def observedCount(o: Observation): Long =
+    try Await.result(o.future, ObservedWait).getLong(0)
+    catch {
+      case e: TimeoutException => throw new IllegalStateException(
+        s"observed count ${o.name} not delivered within $ObservedWait", e)
+    }
 
   /** All rounds' rank frames: index k = rank_k (k = 1..[[Rounds]]). */
   def rounds(d: DataFrame): Seq[DataFrame] =

@@ -735,8 +735,8 @@ object TextAnalysis {
     // `SUM(n_tokens) OVER (ORDER BY doc_id)` — a global window that funnels
     // the whole corpus through one task (the q0d scale-killer, and exactly
     // why q5f sharded). StableIds.runningTotal gives the same exclusive
-    // prefix sum via range partition + per-partition totals + a
-    // triangular offsets join + pid-partitioned local running sums —
+    // prefix sum via range partition + per-partition totals + offsets
+    // computed on the driver + pid-partitioned local running sums —
     // PlanSpec asserts q5x plans ZERO empty-partitioning WindowExec nodes.
     // All integer arithmetic, so the oracle (the single-node global window
     // itself) matches exactly.
@@ -1563,8 +1563,7 @@ object TextAnalysis {
     // tokens DESC). Scale shape: one token-count aggregate over the
     // corpus (shuffle carries (source, count) only), then every
     // waterfilling step runs on the |sources|-row frame via triangular
-    // joins — never a window, the q9p/StableIds-offsets idiom — and
-    // broadcasts.
+    // joins — never a window, the q9p idiom — and broadcasts.
     QueryDef(
       "qa2_unimax_mix",
       Some("""WITH tok AS (SELECT source,

@@ -262,8 +262,8 @@ class PlanSpec extends SparkSpec {
   test("q1h stable ids: zero empty-partitioning windows (the naive global row_number)") {
     // the whole point of StableIds: identical output to row_number over
     // a total sort, with NO window that funnels every row through one
-    // task — even the cumulative-offset step (a #partitions-row table)
-    // is a triangular self-join, not a global window
+    // task — the cumulative-offset step (a #partitions-row table) runs
+    // on the driver, not in a global window
     val plans = collectAll(executed(q("q1h_stable_ids")))
     val globalWindows = plans.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec
@@ -551,16 +551,11 @@ class PlanSpec extends SparkSpec {
     val plans = collectAll(executed(q("q9k_record_linkage")))
     assert(!plans.exists(_.isInstanceOf[CartesianProductExec]),
       "q9k must pair candidates through the rank equi join")
-    // StableIds' triangular offsets join (pid < pid over the
-    // #partitions-row counts table) IS a broadcast nested loop by
-    // design — tiny by construction; any OTHER nested loop would be the
-    // corpus-sized pair generation gone quadratic
-    val corpusBnlj = plans.collect {
-      case j: BroadcastNestedLoopJoinExec
-          if !j.toString.contains("_sid_") => j
-    }
-    assert(corpusBnlj.isEmpty,
-      s"q9k plans ${corpusBnlj.size} non-StableIds nested-loop join(s)")
+    // StableIds computes its offsets on the driver, so q9k plans no
+    // nested loop at all — one would be the corpus-sized pair
+    // generation gone quadratic
+    val bnlj = plans.collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(bnlj.isEmpty, s"q9k plans ${bnlj.size} nested-loop join(s)")
     assert(plans.exists(p => p.toString.contains("jaro_winkler")),
       "the native jaro_winkler expression should appear in the plan")
     val globalWindows = plans.collect {

@@ -89,13 +89,14 @@ class SuffixRanksPropSpec extends SparkSpec {
     }
   }
 
-  test("dict-derived active count equals the corpus-frame count, every round") {
-    // the pruning decision reads Σ grp over the dict-sized key table
-    // (allKeys) instead of a corpus-sized pass over the round frame;
-    // this replays the round body verbatim (same state machine) and
-    // pins the two counts equal per round, in BOTH regimes (two-regime
-    // corpus: boilerplate docs keep groups active, unique docs settle)
-    import graft.operators.{IterationCheckpoint, StableIds}
+  test("observed active count matches the frame, both regimes") {
+    // the pruning decision reads |positions in groups > 1| as a metric
+    // observed on the round's own cut instead of a separate count job;
+    // pin it to a count of the returned frame in every round, under
+    // executor-local blocks and under a durable checkpoint dir (two
+    // corpus regimes: boilerplate docs keep groups active, unique docs
+    // settle, so some rounds prune and some do not)
+    import graft.operators.IterationCheckpoint
     val rnd = new scala.util.Random(20260819)
     val texts = (0L until 30L).map { i =>
       val t =
@@ -104,54 +105,24 @@ class SuffixRanksPropSpec extends SparkSpec {
       (i, t)
     }
     val d = texts.toDF("doc_id", "text")
-    var active = IterationCheckpoint.cut(SuffixRanks.positions(d))
-    var settled = active.filter(lit(false))
-    val total = active.count().toDouble
-    (1 to SuffixRanks.Rounds).foreach { k =>
-      val gap = 1 << (k - 1)
-      val full = active.unionByName(settled)
-      val shifted = full.select(col("doc_id"),
-        (col("pos") - gap).as("pos"), col("r").as("r2"))
-      val keyedA = IterationCheckpoint.cut(
-        active.join(shifted, Seq("doc_id", "pos"), "left")
-          .select(col("doc_id"), col("pos"), col("r").as("r1"),
-            coalesce(col("r2"), lit(0L)).as("r2")))
-      val keyCnt = keyedA.groupBy(col("r1"), col("r2"))
-        .agg(count(lit(1)).as("grp"))
-      val keysS = settled.select(col("r").as("r1"), lit(0L).as("r2"),
-        lit(1L).as("grp"))
-      val allKeys = StableIds.assign(keyCnt.unionByName(keysS),
-        Seq(col("r1"), col("r2")), SuffixRanks.Partitions, "nr")
-      val aNew = keyedA.join(allKeys, Seq("r1", "r2"))
-        .select(col("doc_id"), col("pos"), col("nr").as("r"), col("grp"))
-      val sNew = settled
-        .select(col("doc_id"), col("pos"), col("r").as("r1"),
-          lit(0L).as("r2"))
-        .join(allKeys, Seq("r1", "r2"))
-        .select(col("doc_id"), col("pos"), col("nr").as("r"), col("grp"))
-      val merged = IterationCheckpoint.cut(aNew.unionByName(sNew))
-      val fromDict = allKeys.filter(col("grp") > 1)
-        .agg(coalesce(sum(col("grp")), lit(0L))).head.getLong(0)
-      val fromCorpus = merged.filter(col("grp") > 1).count()
-      assert(fromDict == fromCorpus,
-        s"round $k: dict count $fromDict != corpus count $fromCorpus")
-      if (total - fromDict >= total * SuffixRanks.PruneMinSettledFraction) {
-        active = merged.filter(col("grp") > 1)
-          .select(col("doc_id"), col("pos"), col("r"))
-        settled = merged.filter(col("grp") === 1)
-          .select(col("doc_id"), col("pos"), col("r"))
-      } else {
-        active = merged.select(col("doc_id"), col("pos"), col("r"))
-        settled = merged.filter(lit(false))
-          .select(col("doc_id"), col("pos"), col("r"))
+    def check(regime: String): Unit =
+      SuffixRanks.roundsObserved(d).zipWithIndex.foreach {
+        case ((merged, observed), k) =>
+          val counted = merged.filter(col("grp") > 1).count()
+          assert(observed == counted,
+            s"$regime round ${k + 1}: observed $observed != counted $counted")
       }
-    }
+    check("local")
+    val dir = java.nio.file.Files.createTempDirectory("graft_sfx_obs").toFile
+    spark.conf.set(IterationCheckpoint.ConfKey, dir.getAbsolutePath)
+    try check("durable")
+    finally spark.conf.unset(IterationCheckpoint.ConfKey)
   }
 
-  test("durable-checkpoint regime (dict-sum pruning decision) yields identical rounds") {
-    // under a durable checkpoint dir the operator decides pruning from
-    // the dict-sized Σ grp instead of a corpus-frame count — the output
-    // frames must be identical either way
+  test("durable-checkpoint regime yields identical rounds") {
+    // under a durable checkpoint dir every cut is a reliable checkpoint
+    // (its observed counts included) — the output frames must be
+    // identical either way
     import graft.operators.IterationCheckpoint
     val rnd = new scala.util.Random(20260820)
     val texts = (0L until 24L).map { i =>
