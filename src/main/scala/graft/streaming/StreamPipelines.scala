@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Structured Streaming pipelines over the events table (SURVEY.md §2.10).
@@ -50,11 +50,12 @@ object StreamPipelines {
     * across executors; for these drains the state is tiny and the fixed
     * cost dominates, so we cap it. Benchmarked at local[32]: q85 14.8 s →
     * ~4 s with the cap; correctness is partition-count-invariant. */
-  private def withStreamShufflePartitions[T](s: SparkSession, n: Int)(f: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", math.min(prev.toInt, n).toString)
-    try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private val StreamShufflePartitions = 8
+
+  private def withStreamShufflePartitions[T](s: SparkSession)(f: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions", math.min(
+      s.conf.get("spark.sql.shuffle.partitions").toInt,
+      StreamShufflePartitions).toString)(f)
 
   /** Persist + materialize a stream-static model frame for the duration
     * of `body`. Without this, every micro-batch re-plans the static side
@@ -104,24 +105,73 @@ object StreamPipelines {
     f.delete()
   }
 
+  /** `body` runs with the path of a fresh [[ephemeralCheckpoint]], which
+    * is deleted afterwards — also when the body fails, so a failed drain
+    * never leaks /dev/shm. Every [[drain]] the body runs against the path
+    * resumes from the offsets the previous one committed. */
+  private def withEphemeralCheckpoint[T](name: String)(body: String => T): T = {
+    val ckpt = ephemeralCheckpoint(name)
+    try body(ckpt.getAbsolutePath) finally deleteRecursively(ckpt)
+  }
+
+  /** The one-shot drain behind [[runToMemory]], [[drainBatches]] and the
+    * q8t wire sink (the two `GraftDoc.writeStream` pipelines keep their
+    * own durable checkpoints): `df` goes to the sink `sink` configures,
+    * under the stateful-parallelism cap ([[withStreamShufflePartitions]],
+    * restored afterwards), with `Trigger.AvailableNow` — all input
+    * present at start is consumed, then the query stops — and a blocking
+    * wait for that termination, so a failure inside the query surfaces
+    * here as a `StreamingQueryException`. */
+  private def drain(s: SparkSession, df: DataFrame, ckpt: String)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    withStreamShufflePartitions(s) {
+      sink(df.writeStream)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+
+  /** A graft-doc table's CDC tail, one commit per micro-batch: commit n
+    * arrives as batch n, so the watermark advances commit by commit and a
+    * fold sees each commit's rows (and, `withOp`, its `_op` change type)
+    * on their own. */
+  private[graft] def cdcTail(s: SparkSession, path: String,
+      withOp: Boolean = false): DataFrame =
+    graft.connector.GraftDoc.readStream(s, path, maxCommitsPerTrigger = Some(1L),
+      withOp = withOp)
+
+  /** Drain `stream` through `fold`, one call per micro-batch, and return
+    * the highest batch id folded (−1 when no batch ran).
+    *
+    * The fold is a multi-step batch computation keyed by batch id, which
+    * is what foreachBatch exists for. foreachBatch is at-least-once: a
+    * retried micro-batch re-arrives with the SAME batch id. Every fold
+    * therefore keys its generations off the batch id — generation v is
+    * read, generation v+1 (or a batch-keyed file) is written with
+    * overwrite — so a replay re-reads the untouched input generation and
+    * rewrites the same output, folding the batch exactly once; a local
+    * counter would fold it twice. The returned id names the final
+    * generation. */
+  private[graft] def drainBatches(s: SparkSession, name: String,
+      stream: DataFrame)(fold: (DataFrame, Long) => Unit): Long = {
+    val last = new java.util.concurrent.atomic.AtomicLong(-1L)
+    withEphemeralCheckpoint(name)(drain(s, stream, _)(
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        fold(batch, batchId)
+        last.accumulateAndGet(batchId, math.max(_, _))
+        ()
+      }))
+    last.get
+  }
+
   /** Run a one-shot (AvailableNow) streaming query into a memory sink and
     * return the materialized result. */
   private def runToMemory(s: SparkSession, df: DataFrame,
       mode: String): DataFrame = {
     val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    val ckpt = ephemeralCheckpoint(name)
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = df.writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode(mode)
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt) // a failed drain must not leak /dev/shm
+    withEphemeralCheckpoint(name)(drain(s, df, _)(
+      _.format("memory").queryName(name).outputMode(mode)))
     // eagerly materialize (localCheckpoint runs the copy job NOW) so the
     // memory-sink temp view can be dropped immediately — the returned
     // frame reads its own cached blocks, not the catalog view, so a
@@ -314,12 +364,12 @@ object StreamPipelines {
     * incremental stream into a real connector. */
   def streamToDocSink(s: SparkSession, sfDir: String): DataFrame = {
     val tmp = graft.TempDirs.create("graft_doc_sink")
-    withStreamShufflePartitions(s, 8) {
-      val q = graft.connector.GraftDoc.writeStream(
+    withStreamShufflePartitions(s) {
+      graft.connector.GraftDoc.writeStream(
         eventsStream(s, sfDir).drop("ts_ns"), // ns long is redundant with ts
         keyField = "event_id",
         path = s"$tmp/out", checkpoint = s"$tmp/ckpt")
-      q.awaitTermination()
+        .awaitTermination()
     }
     graft.connector.GraftDoc.snapshot(s, s"$tmp/out")
       .groupBy(col("event_type"))
@@ -387,17 +437,14 @@ object StreamPipelines {
     // historical corpus: content hashes only (the 100 TB shape)
     val seen = docs.filter(col("doc_id") < 250)
       .select(sha2(col("text"), 256).as("h"))
-    withStreamShufflePartitions(s, 8) {
-      val novel = graft.connector.GraftDoc
-        .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-        .withColumn("h", sha2(col("text"), 256))
-        .join(seen, Seq("h"), "left_anti")
-        .select(col("lang"))
-      runToMemory(s, novel, "append")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_novel"))
-        .orderBy(col("lang"))
-    }
+    val novel = cdcTail(s, s"$tmp/in")
+      .withColumn("h", sha2(col("text"), 256))
+      .join(seen, Seq("h"), "left_anti")
+      .select(col("lang"))
+    runToMemory(s, novel, "append")
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_novel"))
+      .orderBy(col("lang"))
   }
 
   /** Streaming NEAR-dup serve (q8q) — qa5's serve half online: incoming
@@ -455,44 +502,41 @@ object StreamPipelines {
       incoming.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", s"$tmp/in")
     graft.connector.GraftDoc.write(
       incoming.filter(pmod(col("doc_id"), lit(2)) === 1), "doc_id", s"$tmp/in")
-    withStreamShufflePartitions(s, 8) {
-      val idx = s.read.parquet(s"$tmp/buckets")
-      val sets = s.read.parquet(s"$tmp/sets")
-        .select(col("doc_id").as("mid"), col("sh").as("sh_i"))
-      val matches = graft.connector.GraftDoc
-        .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-        .select(col("_id").cast("long").as("doc_id"), col("text"))
-        .crossJoin(broadcast(hotArr))
-        .select(col("doc_id"),
-          array_except(TextExpressions.word_shingles(col("text"), 3),
-            col("hot")).as("sh_q"))
-        .filter(size(col("sh_q")) > 0)
-        .withColumn("sig",
-          HashExpressions.minhash_signature(col("sh_q"), k = 128))
-        .select(col("doc_id"), col("sh_q"),
-          explode(transform(sequence(lit(0), lit(31)),
-            b => struct(b.as("band"),
-              xxhash64(slice(col("sig"), b * 4 + 1, lit(4))).as("bh"))))
-            .as("bb"))
-        .select(col("doc_id"), col("sh_q"),
-          col("bb.band").as("band"), col("bb.bh").as("bh"))
-        .join(idx, Seq("band", "bh"))
-        .join(sets, Seq("mid"))
-        .withColumn("jac",
-          size(array_intersect(col("sh_q"), col("sh_i"))) * 1.0 /
-            size(array_union(col("sh_q"), col("sh_i"))))
-        .filter(col("jac") >= 0.7)
-        .select(col("doc_id"), col("mid"), col("jac"))
-      runToMemory(s, matches, "append")
-        .distinct() // band-duplicate candidate pairs collapse post-drain
-        .groupBy(col("doc_id"))
-        .agg(max(struct(col("jac"), negate(col("mid")).as("nm"),
-          col("mid"))).as("b"),
-          count(lit(1)).as("n_cand"))
-        .select(col("doc_id"), col("b.mid").as("match_id"),
-          round(col("b.jac"), 4).as("jac"), col("n_cand"))
-        .orderBy(col("doc_id"))
-    }
+    val idx = s.read.parquet(s"$tmp/buckets")
+    val sets = s.read.parquet(s"$tmp/sets")
+      .select(col("doc_id").as("mid"), col("sh").as("sh_i"))
+    val matches = cdcTail(s, s"$tmp/in")
+      .select(col("_id").cast("long").as("doc_id"), col("text"))
+      .crossJoin(broadcast(hotArr))
+      .select(col("doc_id"),
+        array_except(TextExpressions.word_shingles(col("text"), 3),
+          col("hot")).as("sh_q"))
+      .filter(size(col("sh_q")) > 0)
+      .withColumn("sig",
+        HashExpressions.minhash_signature(col("sh_q"), k = 128))
+      .select(col("doc_id"), col("sh_q"),
+        explode(transform(sequence(lit(0), lit(31)),
+          b => struct(b.as("band"),
+            xxhash64(slice(col("sig"), b * 4 + 1, lit(4))).as("bh"))))
+          .as("bb"))
+      .select(col("doc_id"), col("sh_q"),
+        col("bb.band").as("band"), col("bb.bh").as("bh"))
+      .join(idx, Seq("band", "bh"))
+      .join(sets, Seq("mid"))
+      .withColumn("jac",
+        size(array_intersect(col("sh_q"), col("sh_i"))) * 1.0 /
+          size(array_union(col("sh_q"), col("sh_i"))))
+      .filter(col("jac") >= 0.7)
+      .select(col("doc_id"), col("mid"), col("jac"))
+    runToMemory(s, matches, "append")
+      .distinct() // band-duplicate candidate pairs collapse post-drain
+      .groupBy(col("doc_id"))
+      .agg(max(struct(col("jac"), negate(col("mid")).as("nm"),
+        col("mid"))).as("b"),
+        count(lit(1)).as("n_cand"))
+      .select(col("doc_id"), col("b.mid").as("match_id"),
+        round(col("b.jac"), 4).as("jac"), col("n_cand"))
+      .orderBy(col("doc_id"))
   }
 
   /** Continuous content-defined chunk dedup — the streaming twin of q5y,
@@ -520,26 +564,23 @@ object StreamPipelines {
       .select(sha2(col("chunk"), 256).as("h"))
       .distinct()
       .withColumn("known", lit(1))
-    withStreamShufflePartitions(s, 8) {
-      val flagged = graft.queries.TextAnalysis
-        .cdcChunks(graft.connector.GraftDoc
-          .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-          // the sink hoisted the key into `_id` (string) — restore it
-          .select(col("_id").cast("long").as("doc_id"), col("text")))
-        .withColumn("h", sha2(col("chunk"), 256))
-        .join(histChunks, Seq("h"), "left")
-        .select(col("doc_id"), col("known"))
-      runToMemory(s, flagged, "append")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_chunks"),
-          sum(when(col("known").isNotNull, 1L).otherwise(0L)).as("n_known"))
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chunks")).as("n_chunks"),
-          sum(col("n_known")).as("n_known_chunks"))
-        .orderBy(col("lang"))
-    }
+    val flagged = graft.queries.TextAnalysis
+      .cdcChunks(cdcTail(s, s"$tmp/in")
+        // the sink hoisted the key into `_id` (string) — restore it
+        .select(col("_id").cast("long").as("doc_id"), col("text")))
+      .withColumn("h", sha2(col("chunk"), 256))
+      .join(histChunks, Seq("h"), "left")
+      .select(col("doc_id"), col("known"))
+    runToMemory(s, flagged, "append")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_chunks"),
+        sum(when(col("known").isNotNull, 1L).otherwise(0L)).as("n_known"))
+      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n_chunks")).as("n_chunks"),
+        sum(col("n_known")).as("n_known_chunks"))
+      .orderBy(col("lang"))
   }
 
   /** q8k: continuous blocklist screening — q93's Aho–Corasick scan lifted
@@ -563,23 +604,20 @@ object StreamPipelines {
       .topBigrams(docs.filter(col("doc_id") < 250), 20)
       .agg(sort_array(collect_list(col("pat"))).as("patterns"))
       .withColumn("k", lit(1))
-    withStreamShufflePartitions(s, 8) {
-      val hits = graft.connector.GraftDoc
-        .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-        .select(col("_id").cast("long").as("doc_id"), col("text"),
-          lit(1).as("k"))
-        .join(broadcast(pats), Seq("k"))
-        .select(col("doc_id"),
-          explode(graft.functions.MultiPattern.multi_pattern_counts(
-            col("text"), col("patterns"))).as("h"))
-        .select(col("doc_id"), col("h.pattern").as("pattern"),
-          col("h.cnt").as("cnt"))
-      runToMemory(s, hits, "append")
-        .groupBy(col("pattern"))
-        .agg(count(when(col("cnt") > 0, lit(1))).as("n_docs"),
-          sum(col("cnt")).cast("long").as("total_hits"))
-        .orderBy(col("pattern"))
-    }
+    val hits = cdcTail(s, s"$tmp/in")
+      .select(col("_id").cast("long").as("doc_id"), col("text"),
+        lit(1).as("k"))
+      .join(broadcast(pats), Seq("k"))
+      .select(col("doc_id"),
+        explode(graft.functions.MultiPattern.multi_pattern_counts(
+          col("text"), col("patterns"))).as("h"))
+      .select(col("doc_id"), col("h.pattern").as("pattern"),
+        col("h.cnt").as("cnt"))
+    runToMemory(s, hits, "append")
+      .groupBy(col("pattern"))
+      .agg(count(when(col("cnt") > 0, lit(1))).as("n_docs"),
+        sum(col("cnt")).cast("long").as("total_hits"))
+      .orderBy(col("pattern"))
   }
 
   /** q8l: continuous BPE tokenization — the trained tokenizer applied to
@@ -603,16 +641,13 @@ object StreamPipelines {
       .bpeMergeFrame(docs.filter(col("doc_id") < 250))
       .withColumn("k", lit(1))
     withFrozenModel(merges0) { merges =>
-      withStreamShufflePartitions(s, 8) {
-        val encoded = graft.queries.TextAnalysis.bpeEncodeCols(
-          graft.connector.GraftDoc
-            .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-            .select(col("_id").cast("long").as("doc_id"), col("text"),
-              lit(1).as("k"))
-            .join(broadcast(merges), Seq("k")))
-        runToMemory(s, encoded, "append")
-          .orderBy(col("doc_id"))
-      }
+      val encoded = graft.queries.TextAnalysis.bpeEncodeCols(
+        cdcTail(s, s"$tmp/in")
+          .select(col("_id").cast("long").as("doc_id"), col("text"),
+            lit(1).as("k"))
+          .join(broadcast(merges), Seq("k")))
+      runToMemory(s, encoded, "append")
+        .orderBy(col("doc_id"))
     }
   }
 
@@ -641,16 +676,13 @@ object StreamPipelines {
       .npMapFrame(docs.filter(col("doc_id") < 250))
       .withColumn("k", lit(1))
     withFrozenModel(model0) { model =>
-      withStreamShufflePartitions(s, 8) {
-        val encoded = graft.operators.UnigramLm.encodeCols(
-          graft.connector.GraftDoc
-            .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-            .select(col("_id").cast("long").as("doc_id"), col("text"),
-              lit(1).as("k"))
-            .join(broadcast(model), Seq("k")))
-        runToMemory(s, encoded, "append")
-          .orderBy(col("doc_id"))
-      }
+      val encoded = graft.operators.UnigramLm.encodeCols(
+        cdcTail(s, s"$tmp/in")
+          .select(col("_id").cast("long").as("doc_id"), col("text"),
+            lit(1).as("k"))
+          .join(broadcast(model), Seq("k")))
+      runToMemory(s, encoded, "append")
+        .orderBy(col("doc_id"))
     }
   }
 
@@ -675,16 +707,13 @@ object StreamPipelines {
       .wpMapFrame(docs.filter(col("doc_id") < 250))
       .withColumn("k", lit(1))
     withFrozenModel(model0) { model =>
-      withStreamShufflePartitions(s, 8) {
-        val encoded = graft.operators.WordPiece.encodeCols(
-          graft.connector.GraftDoc
-            .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-            .select(col("_id").cast("long").as("doc_id"), col("text"),
-              lit(1).as("k"))
-            .join(broadcast(model), Seq("k")))
-        runToMemory(s, encoded, "append")
-          .orderBy(col("doc_id"))
-      }
+      val encoded = graft.operators.WordPiece.encodeCols(
+        cdcTail(s, s"$tmp/in")
+          .select(col("_id").cast("long").as("doc_id"), col("text"),
+            lit(1).as("k"))
+          .join(broadcast(model), Seq("k")))
+      runToMemory(s, encoded, "append")
+        .orderBy(col("doc_id"))
     }
   }
 
@@ -713,16 +742,13 @@ object StreamPipelines {
       .dsirModelFrame(docs.filter(col("doc_id") < 250))
       .withColumn("k", lit(1))
     withFrozenModel(model0) { model =>
-      withStreamShufflePartitions(s, 8) {
-        val scored = graft.queries.TextAnalysis.dsirScoreCols(
-          graft.connector.GraftDoc
-            .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-            .select(col("_id").cast("long").as("doc_id"), col("text"),
-              lit(1).as("k"))
-            .join(broadcast(model), Seq("k")))
-        runToMemory(s, scored, "append")
-          .orderBy(col("doc_id"))
-      }
+      val scored = graft.queries.TextAnalysis.dsirScoreCols(
+        cdcTail(s, s"$tmp/in")
+          .select(col("_id").cast("long").as("doc_id"), col("text"),
+            lit(1).as("k"))
+          .join(broadcast(model), Seq("k")))
+      runToMemory(s, scored, "append")
+        .orderBy(col("doc_id"))
     }
   }
 
@@ -750,16 +776,13 @@ object StreamPipelines {
       .weightsFrame(docs.filter(col("doc_id") < 250))
       .withColumn("k", lit(1))
     withFrozenModel(weights0) { weights =>
-      withStreamShufflePartitions(s, 8) {
-        val scored = graft.operators.QualityClassifier.scoreCols(
-          graft.connector.GraftDoc
-            .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-            .select(col("_id").cast("long").as("doc_id"), col("text"),
-              lit(1).as("k"))
-            .join(broadcast(weights), Seq("k")))
-        runToMemory(s, scored, "append")
-          .orderBy(col("doc_id"))
-      }
+      val scored = graft.operators.QualityClassifier.scoreCols(
+        cdcTail(s, s"$tmp/in")
+          .select(col("_id").cast("long").as("doc_id"), col("text"),
+            lit(1).as("k"))
+          .join(broadcast(weights), Seq("k")))
+      runToMemory(s, scored, "append")
+        .orderBy(col("doc_id"))
     }
   }
 
@@ -792,28 +815,16 @@ object StreamPipelines {
       incoming.filter(pmod(col("doc_id"), lit(2)) === 1), "doc_id", s"$tmp/in")
     val (pT0, lT0, cT0, cuts0) = graft.queries.TextAnalysis
       .knModelTables(docs.filter(col("doc_id") < 250))
-    val ckpt = ephemeralCheckpoint("kn_serve")
-    try {
-      withFrozenModels(Seq(pT0, lT0, cT0, cuts0)) { ms =>
-        val Seq(pT, lT, cT, cuts) = ms
-        withStreamShufflePartitions(s, 8) {
-          val q = graft.connector.GraftDoc
-            .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-            .select(col("_id").cast("long").as("doc_id"), col("text"))
-            .writeStream
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              graft.queries.TextAnalysis
-                .knScoreBatch(batch, pT, lT, cT, cuts)
-                .write.mode("overwrite").parquet(s"$tmp/scored_b$batchId")
-              ()
-            }
-            .option("checkpointLocation", ckpt.getAbsolutePath)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+    withFrozenModels(Seq(pT0, lT0, cT0, cuts0)) { ms =>
+      val Seq(pT, lT, cT, cuts) = ms
+      drainBatches(s, "kn_serve", cdcTail(s, s"$tmp/in")
+          .select(col("_id").cast("long").as("doc_id"), col("text"))) {
+        (batch, batchId) =>
+          graft.queries.TextAnalysis
+            .knScoreBatch(batch, pT, lT, cT, cuts)
+            .write.mode("overwrite").parquet(s"$tmp/scored_b$batchId")
       }
-    } finally deleteRecursively(ckpt)
+    }
     s.read.parquet(s"$tmp/scored_b*")
       .orderBy(col("doc_id"))
   }
@@ -846,24 +857,21 @@ object StreamPipelines {
         .as("front"))
       .withColumn("k", lit(1))
     val spend = pts.select(col("c_custkey"), col("spend"))
-    withStreamShufflePartitions(s, 8) {
-      val flagged = graft.connector.GraftDoc
-        .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-        .select(col("_id").cast("long").as("c_custkey"), col("bal"),
-          lit(1).as("k"))
-        .join(spend, Seq("c_custkey")) // stream-static, stateless
-        .join(broadcast(frontier), Seq("k"))
-        .select(col("c_custkey"), col("spend").as("spend_cents"),
-          col("bal").as("bal_cents"),
-          expr("""CAST(exists(front, f ->
-                 f.spend >= spend AND f.bal >= bal
-                 AND (f.spend > spend OR f.bal > bal)) AS INT)""")
-            .as("dominated"))
-        .withColumn("pareto_new",
-          (lit(1) - col("dominated")).cast("int"))
-      runToMemory(s, flagged, "append")
-        .orderBy(col("c_custkey"))
-    }
+    val flagged = cdcTail(s, s"$tmp/in")
+      .select(col("_id").cast("long").as("c_custkey"), col("bal"),
+        lit(1).as("k"))
+      .join(spend, Seq("c_custkey")) // stream-static, stateless
+      .join(broadcast(frontier), Seq("k"))
+      .select(col("c_custkey"), col("spend").as("spend_cents"),
+        col("bal").as("bal_cents"),
+        expr("""CAST(exists(front, f ->
+               f.spend >= spend AND f.bal >= bal
+               AND (f.spend > spend OR f.bal > bal)) AS INT)""")
+          .as("dominated"))
+      .withColumn("pareto_new",
+        (lit(1) - col("dominated")).cast("int"))
+    runToMemory(s, flagged, "append")
+      .orderBy(col("c_custkey"))
   }
 
   /** q8m: streaming heavy hitters — a running token-frequency table over
@@ -887,8 +895,7 @@ object StreamPipelines {
       docs.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", s"$tmp/in")
     graft.connector.GraftDoc.write(
       docs.filter(pmod(col("doc_id"), lit(2)) === 1), "doc_id", s"$tmp/in")
-    val counts = graft.connector.GraftDoc
-      .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
+    val counts = cdcTail(s, s"$tmp/in")
       .select(explode(
         expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("term"))
       .groupBy(col("term"))
@@ -1024,8 +1031,7 @@ object StreamPipelines {
       graft.connector.GraftDoc.write(
         ev.filter(pmod(col("event_id"), lit(3)) === r), "event_id", s"$tmp/tbl")
     }
-    val cdc = graft.connector.GraftDoc
-      .readStream(s, s"$tmp/tbl", maxCommitsPerTrigger = Some(1L))
+    val cdc = cdcTail(s, s"$tmp/tbl")
       .select(col("event_type"))
     runToMemory(s, cdc, "append")
       .groupBy(col("event_type"))
@@ -1054,8 +1060,7 @@ object StreamPipelines {
         ev.withColumn("d", dayofmonth(col("ts"))).filter(p).drop("d"),
         "event_id", s"$tmp/tbl")
     }
-    val agg = graft.connector.GraftDoc
-      .readStream(s, s"$tmp/tbl", maxCommitsPerTrigger = Some(1L))
+    val agg = cdcTail(s, s"$tmp/tbl")
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -1089,8 +1094,7 @@ object StreamPipelines {
     // deterministic delete set: every 10th event id
     graft.connector.GraftDoc.delete(s, s"$tmp/tbl",
       ev.filter(pmod(col("event_id"), lit(10)) === 0).select(col("event_id")))
-    val cdc = graft.connector.GraftDoc
-      .readStream(s, s"$tmp/tbl", maxCommitsPerTrigger = Some(1L), withOp = true)
+    val cdc = cdcTail(s, s"$tmp/tbl", withOp = true)
       .select(col("_op").as("op"), col("_id"))
     runToMemory(s, cdc, "append")
       .groupBy(col("op"))
@@ -1098,31 +1102,15 @@ object StreamPipelines {
       .orderBy(col("op"))
   }
 
-  /** Streaming corpus ingestion end-to-end — the training-data topology
-    * composed from proven stages: a source table's CDC tail (multi-batch,
-    * one commit per trigger) → stateless quality gate → keyed UPSERT into
-    * a second graft-doc table (exactly-once per epoch) → snapshot rollup.
-    * Deduplication across re-delivered versions needs NO stream state at
-    * all: the sink's upsert-by-`_id` semantics resolve them (last commit
-    * wins), which is the scale answer — a billion-key "seen" state store
-    * would be the wrong tool when the store itself is keyed.
-    *
-    * The source history includes an UPDATE window (docs 100–199 rewritten
-    * with a longer body in a later commit), so the oracle proves
-    * last-write-wins ordering survives the stream: the final corpus holds
-    * the v2 text exactly where v2 passed the gate. */
   /** CONTINUOUS incremental near-dup clustering (q8f) — the streaming
     * closure of the q6a/q6k family: near-dup pair edges arrive through a
     * CDC tail (a graft-doc edge table written in two commits), and every
     * micro-batch folds its edges into the persisted (node, component)
     * label table with [[graft.operators.ConnectedComponents.incremental]]
     * — O(|batch|) reduced-graph CC + one broadcast relabel per batch,
-    * never a corpus re-run. foreachBatch is the right sink shape: the
-    * merge is a multi-step batch computation (read persisted labels →
-    * merge → persist next version) keyed by batchId, exactly what
-    * foreachBatch exists for; label versions are immutable files, so a
-    * replayed batch (stream restart) rewrites the SAME next version
-    * rather than corrupting the current one — idempotent by layout.
+    * never a corpus re-run. Label versions are immutable batch-id-keyed
+    * files, so a replayed batch rewrites the SAME next version rather
+    * than corrupting the current one ([[drainBatches]]).
     *
     * The pair stream is the corpus's Jaccard pair graph split by arrival
     * (the q6k rule: both-old endpoints = standing graph, any-new = the
@@ -1150,35 +1138,14 @@ object StreamPipelines {
     graft.connector.GraftDoc.write(
       keyed.filter(pmod(col("id_a") + col("id_b"), lit(2)) === 1),
       "edge_key", s"$tmp/edges")
-    val version = new AtomicInteger(0)
-    val ckpt = ephemeralCheckpoint("cc_incr")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/edges", maxCommitsPerTrigger = Some(1L))
-          .select(col("id_a"), col("id_b"))
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // foreachBatch is at-least-once: a retried micro-batch
-            // re-arrives with the SAME batchId. Generations are keyed
-            // off batchId — a replay re-reads the untouched input
-            // generation labels_v<id> and overwrites the same output
-            // generation, so a double delivery folds the batch exactly
-            // once instead of twice through a local counter
-            val v = batchId.toInt
-            val cur = s.read.parquet(s"$tmp/labels_v$v")
-            ConnectedComponents.incremental(cur, batch)
-              .write.mode("overwrite").parquet(s"$tmp/labels_v${v + 1}")
-            version.getAndUpdate(g => math.max(g, v + 1))
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
-    s.read.parquet(s"$tmp/labels_v${version.get()}")
+    val last = drainBatches(s, "cc_incr",
+        cdcTail(s, s"$tmp/edges").select(col("id_a"), col("id_b"))) {
+      (batch, batchId) =>
+        val cur = s.read.parquet(s"$tmp/labels_v$batchId")
+        ConnectedComponents.incremental(cur, batch)
+          .write.mode("overwrite").parquet(s"$tmp/labels_v${batchId + 1}")
+    }
+    s.read.parquet(s"$tmp/labels_v${last + 1}")
       .select(col("node").as("doc_id"), col("component"))
       .orderBy(col("doc_id"))
   }
@@ -1210,33 +1177,16 @@ object StreamPipelines {
       incoming.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", s"$tmp/in")
     graft.connector.GraftDoc.write(
       incoming.filter(pmod(col("doc_id"), lit(2)) === 1), "doc_id", s"$tmp/in")
-    val version = new AtomicInteger(0)
-    val ckpt = ephemeralCheckpoint("mh_maint")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-          .select(col("_id").cast("long").as("doc_id"), col("text"))
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // at-least-once replay safety: generation = batchId, so a
-            // redelivered batch re-merges from the untouched idx_v<id>
-            // and overwrites idx_v<id+1> — idempotent, never a
-            // double-fold that would corrupt the DF drop-list cut
-            val v = batchId.toInt
-            DedupQueries.mergeMinhashIndex(
-              s, batch, s"$tmp/idx_v$v", s"$tmp/idx_v${v + 1}")
-            version.getAndUpdate(g => math.max(g, v + 1))
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    // a double fold would corrupt the DF drop-list cut, so the index
+    // generations are keyed by batch id (see drainBatches)
+    val last = drainBatches(s, "mh_maint", cdcTail(s, s"$tmp/in")
+        .select(col("_id").cast("long").as("doc_id"), col("text"))) {
+      (batch, batchId) =>
+        DedupQueries.mergeMinhashIndex(
+          s, batch, s"$tmp/idx_v$batchId", s"$tmp/idx_v${batchId + 1}")
+    }
     DedupQueries.serveMinhashBatch(s,
-      docs.filter(col("doc_id") >= 375), s"$tmp/idx_v${version.get()}")
+      docs.filter(col("doc_id") >= 375), s"$tmp/idx_v${last + 1}")
   }
 
   /** q8x: streaming suffix-structure maintenance — qau's rank table as
@@ -1267,36 +1217,18 @@ object StreamPipelines {
       incoming.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", s"$tmp/in")
     graft.connector.GraftDoc.write(
       incoming.filter(pmod(col("doc_id"), lit(2)) === 1), "doc_id", s"$tmp/in")
-    val version = new AtomicInteger(0)
-    val ckpt = ephemeralCheckpoint("sfx_merge")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-          .select(col("_id").cast("long").as("doc_id"), col("text"))
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // generation = batchId: a replayed batch re-reads the
-            // untouched dict_v<id> and overwrites pos_b<id+1> /
-            // dict_v<id+1> — idempotent under at-least-once delivery
-            val v = batchId.toInt
-            SuffixRanks.suffixKeys(batch)
-              .write.mode("overwrite").parquet(s"$tmp/pos_b${v + 1}")
-            val old = s.read.parquet(s"$tmp/dict_v$v").select(col("key"))
-            SuffixRanks.rankDict(old.unionByName(
-                s.read.parquet(s"$tmp/pos_b${v + 1}").select(col("key"))))
-              .write.mode("overwrite").parquet(s"$tmp/dict_v${v + 1}")
-            version.getAndUpdate(g => math.max(g, v + 1))
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    val last = drainBatches(s, "sfx_merge", cdcTail(s, s"$tmp/in")
+        .select(col("_id").cast("long").as("doc_id"), col("text"))) {
+      (batch, v) =>
+        SuffixRanks.suffixKeys(batch)
+          .write.mode("overwrite").parquet(s"$tmp/pos_b${v + 1}")
+        val old = s.read.parquet(s"$tmp/dict_v$v").select(col("key"))
+        SuffixRanks.rankDict(old.unionByName(
+            s.read.parquet(s"$tmp/pos_b${v + 1}").select(col("key"))))
+          .write.mode("overwrite").parquet(s"$tmp/dict_v${v + 1}")
+    }
     val pos = s.read.parquet(s"$tmp/pos_b*")
-    val dict = s.read.parquet(s"$tmp/dict_v${version.get()}")
+    val dict = s.read.parquet(s"$tmp/dict_v${last + 1}")
     // group sizes from ONE partial-aggregated pass over the narrow key
     // column (this pipeline maintains no counts table — qb8/qc5 do);
     // the corpus frame is then only touched by the sample filter
@@ -1339,26 +1271,13 @@ object StreamPipelines {
       delta.filter(pmod(col("vec_id"), lit(20)) === 0), "vec_id", s"$tmp/in")
     graft.connector.GraftDoc.write(
       delta.filter(pmod(col("vec_id"), lit(20)) === 10), "vec_id", s"$tmp/in")
-    val ckpt = ephemeralCheckpoint("ivf_update")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-          .select(col("_id").cast("long").as("vec_id"), col("embedding"))
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // one broadcast join per batch against the persisted
-            // centroids; a replayed batch rewrites the same file
-            SimilarityQueries.assignTo(batch, ic)
-              .write.mode("overwrite").parquet(s"$tmp/assign_b$batchId")
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    drainBatches(s, "ivf_update", cdcTail(s, s"$tmp/in")
+        .select(col("_id").cast("long").as("vec_id"), col("embedding"))) {
+      (batch, batchId) =>
+        // one broadcast join per batch against the persisted centroids
+        SimilarityQueries.assignTo(batch, ic)
+          .write.mode("overwrite").parquet(s"$tmp/assign_b$batchId")
+    }
     val ia = s.read.parquet(s"$indexPath/assign_base")
       .unionByName(s.read.parquet(s"$tmp/assign_b*"))
     SimilarityQueries.ivfServe(e, ic, ia)
@@ -1399,32 +1318,17 @@ object StreamPipelines {
       delta.filter(pmod(col("vec_id"), lit(2)) === 0), "vec_id", s"$tmp/in")
     graft.connector.GraftDoc.write(
       delta.filter(pmod(col("vec_id"), lit(2)) === 1), "vec_id", s"$tmp/in")
-    val version = new AtomicInteger(-1)
-    val ckpt = ephemeralCheckpoint("graph_insert")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-          .select(col("_id").cast("long").as("vec_id"), col("embedding"))
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val v = batchId.toInt
-            val prev = if (v == 0) s.read.parquet(graphPath)
-              else s.read.parquet(s"$tmp/g_b${v - 1}")
-            NnDescent.insertDeltaOf(e, prev, nBase,
-                batch.select(col("vec_id"), col("embedding")))
-              .write.mode("overwrite").parquet(s"$tmp/g_b$v")
-            version.getAndUpdate(g => math.max(g, v))
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    val last = drainBatches(s, "graph_insert", cdcTail(s, s"$tmp/in")
+        .select(col("_id").cast("long").as("vec_id"), col("embedding"))) {
+      (batch, v) =>
+        val prev = if (v == 0) s.read.parquet(graphPath)
+          else s.read.parquet(s"$tmp/g_b${v - 1}")
+        NnDescent.insertDeltaOf(e, prev, nBase,
+            batch.select(col("vec_id"), col("embedding")))
+          .write.mode("overwrite").parquet(s"$tmp/g_b$v")
+    }
     // qb3's sampled reporting shape, from the FINAL generation
-    val g2 = s.read.parquet(s"$tmp/g_b${version.get()}")
+    val g2 = s.read.parquet(s"$tmp/g_b$last")
     val qS = e.filter(col("vec_id") >= nBase &&
       pmod(col("vec_id"), lit(NnDescent.FlagSampleMod)) === 0)
     val w = org.apache.spark.sql.expressions.Window
@@ -1480,26 +1384,13 @@ object StreamPipelines {
       delta.filter(pmod(col("vec_id"), lit(20)) === 0), "vec_id", s"$tmp/in")
     graft.connector.GraftDoc.write(
       delta.filter(pmod(col("vec_id"), lit(20)) === 10), "vec_id", s"$tmp/in")
-    val ckpt = ephemeralCheckpoint("pq_update")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L))
-          .select(col("_id").cast("long").as("vec_id"), col("embedding"))
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // per-batch argmin encode against the persisted codebook;
-            // a replayed batch rewrites the same file
-            SimilarityQueries.pqCodes(SimilarityQueries.pqSub(batch), icb)
-              .write.mode("overwrite").parquet(s"$tmp/codes_b$batchId")
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    drainBatches(s, "pq_update", cdcTail(s, s"$tmp/in")
+        .select(col("_id").cast("long").as("vec_id"), col("embedding"))) {
+      (batch, batchId) =>
+        // per-batch argmin encode against the persisted codebook
+        SimilarityQueries.pqCodes(SimilarityQueries.pqSub(batch), icb)
+          .write.mode("overwrite").parquet(s"$tmp/codes_b$batchId")
+    }
     val codes = s.read.parquet(s"$tmp/base_codes")
       .unionByName(s.read.parquet(s"$tmp/codes_b*"))
     val qf = e.filter(col("vec_id") < 10)
@@ -1556,37 +1447,20 @@ object StreamPipelines {
     // v0 tombstone state: empty
     s.range(0).select(col("id").as("vec_id"))
       .write.mode("overwrite").parquet(s"$tmp/tomb_v0")
-    val version = new AtomicInteger(0)
-    val ckpt = ephemeralCheckpoint("ivf_del")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L),
-            withOp = true)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val v = batchId
-            val ins = batch.filter(col("_op") === "insert")
-              .select(col("_id").cast("long").as("vec_id"), col("embedding"))
-            val del = batch.filter(col("_op") === "delete")
-              .select(col("_id").cast("long").as("vec_id"))
-            // inserts: one broadcast join against the persisted
-            // centroids (a replayed batch rewrites the same file)
-            SimilarityQueries.assignTo(ins, ic)
-              .write.mode("overwrite").parquet(s"$tmp/assign_b$v")
-            // deletes: versioned tombstone fold, O(|batch|) rows
-            s.read.parquet(s"$tmp/tomb_v$v").unionByName(del)
-              .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
-            version.getAndUpdate(g => math.max(g, (v + 1).toInt))
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
-    val tomb = s.read.parquet(s"$tmp/tomb_v${version.get()}")
+    val last = drainBatches(s, "ivf_del", cdcTail(s, s"$tmp/in", withOp = true)) {
+      (batch, v) =>
+        val ins = batch.filter(col("_op") === "insert")
+          .select(col("_id").cast("long").as("vec_id"), col("embedding"))
+        val del = batch.filter(col("_op") === "delete")
+          .select(col("_id").cast("long").as("vec_id"))
+        // inserts: one broadcast join against the persisted centroids
+        SimilarityQueries.assignTo(ins, ic)
+          .write.mode("overwrite").parquet(s"$tmp/assign_b$v")
+        // deletes: versioned tombstone fold, O(|batch|) rows
+        s.read.parquet(s"$tmp/tomb_v$v").unionByName(del)
+          .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
+    }
+    val tomb = s.read.parquet(s"$tmp/tomb_v${last + 1}")
     val nT = Some(tomb.count())
     val ia = graft.operators.Tombstones.antiJoin(
       s.read.parquet(s"$indexPath/assign_base")
@@ -1636,34 +1510,18 @@ object StreamPipelines {
       delta.filter(pmod(col("vec_id"), lit(20)) === 10), "vec_id", s"$tmp/in")
     s.range(0).select(col("id").as("vec_id"))
       .write.mode("overwrite").parquet(s"$tmp/tomb_v0")
-    val version = new AtomicInteger(0)
-    val ckpt = ephemeralCheckpoint("pq_del")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L),
-            withOp = true)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val v = batchId
-            val ins = batch.filter(col("_op") === "insert")
-              .select(col("_id").cast("long").as("vec_id"), col("embedding"))
-            val del = batch.filter(col("_op") === "delete")
-              .select(col("_id").cast("long").as("vec_id"))
-            SimilarityQueries.pqCodes(SimilarityQueries.pqSub(ins), icb)
-              .write.mode("overwrite").parquet(s"$tmp/codes_b$v")
-            s.read.parquet(s"$tmp/tomb_v$v").unionByName(del)
-              .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
-            version.getAndUpdate(g => math.max(g, (v + 1).toInt))
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
-    val tomb = s.read.parquet(s"$tmp/tomb_v${version.get()}")
+    val last = drainBatches(s, "pq_del", cdcTail(s, s"$tmp/in", withOp = true)) {
+      (batch, v) =>
+        val ins = batch.filter(col("_op") === "insert")
+          .select(col("_id").cast("long").as("vec_id"), col("embedding"))
+        val del = batch.filter(col("_op") === "delete")
+          .select(col("_id").cast("long").as("vec_id"))
+        SimilarityQueries.pqCodes(SimilarityQueries.pqSub(ins), icb)
+          .write.mode("overwrite").parquet(s"$tmp/codes_b$v")
+        s.read.parquet(s"$tmp/tomb_v$v").unionByName(del)
+          .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
+    }
+    val tomb = s.read.parquet(s"$tmp/tomb_v${last + 1}")
     val nT = Some(tomb.count())
     val codes = graft.operators.Tombstones.antiJoin(
       s.read.parquet(s"$tmp/base_codes")
@@ -1722,42 +1580,25 @@ object StreamPipelines {
         .select(col("vec_id")))
     s.range(0).select(col("id").as("vec_id"))
       .write.mode("overwrite").parquet(s"$tmp/tomb_v0")
-    val version = new AtomicInteger(-1)
-    val ckpt = ephemeralCheckpoint("graph_del")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/tbl", maxCommitsPerTrigger = Some(1L),
-            withOp = true)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val v = batchId.toInt
-            val del = batch.filter(col("_op") === "delete")
-              .select(col("_id").cast("long").as("vec_id"))
-            val prev = if (v == 0) s.read.parquet(graphPath)
-              else s.read.parquet(s"$tmp/g_b${v - 1}")
-            // the batch's affected survivors, recorded BEFORE the
-            // repair (the reporting set — repair work touches exactly
-            // these lists); the snapshot batch's set is empty
-            prev.join(broadcast(del), Seq("vec_id"), "left_anti")
-              .join(broadcast(del.select(col("vec_id").as("nid"))),
-                Seq("nid"), "left_semi")
-              .select(col("vec_id")).distinct()
-              .write.mode("overwrite").parquet(s"$tmp/tch_b$v")
-            NnDescent.deleteRepairOf(e, prev, del)
-              .write.mode("overwrite").parquet(s"$tmp/g_b$v")
-            s.read.parquet(s"$tmp/tomb_v$v").unionByName(del)
-              .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
-            version.getAndUpdate(g => math.max(g, v))
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
-    val fv = version.get()
+    val fv = drainBatches(s, "graph_del", cdcTail(s, s"$tmp/tbl", withOp = true)) {
+      (batch, v) =>
+        val del = batch.filter(col("_op") === "delete")
+          .select(col("_id").cast("long").as("vec_id"))
+        val prev = if (v == 0) s.read.parquet(graphPath)
+          else s.read.parquet(s"$tmp/g_b${v - 1}")
+        // the batch's affected survivors, recorded BEFORE the repair (the
+        // reporting set — repair work touches exactly these lists); the
+        // snapshot batch's set is empty
+        prev.join(broadcast(del), Seq("vec_id"), "left_anti")
+          .join(broadcast(del.select(col("vec_id").as("nid"))),
+            Seq("nid"), "left_semi")
+          .select(col("vec_id")).distinct()
+          .write.mode("overwrite").parquet(s"$tmp/tch_b$v")
+        NnDescent.deleteRepairOf(e, prev, del)
+          .write.mode("overwrite").parquet(s"$tmp/g_b$v")
+        s.read.parquet(s"$tmp/tomb_v$v").unionByName(del)
+          .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
+    }
     val g2 = s.read.parquet(s"$tmp/g_b$fv")
     // sampled touched SURVIVORS: a gen-1-touched node deleted by gen 2
     // gets no serve (anti join against the final tombstone set)
@@ -1829,63 +1670,46 @@ object StreamPipelines {
       delta.filter(pmod(col("vec_id"), lit(2)) === 1), "vec_id", s"$tmp/in")
     s.range(0).select(col("id").as("vec_id"))
       .write.mode("overwrite").parquet(s"$tmp/tomb_v0")
-    val version = new AtomicInteger(-1)
     // running tombstone cardinality, threaded into the folds so the
     // Tombstones joins never pay a fallback count() action (v0 is the
     // known-empty frame; each batch adds its own delete count — one
     // cheap action on the in-batch frame replacing two frame counts)
     val tombTotal = new java.util.concurrent.atomic.AtomicLong(0L)
-    val ckpt = ephemeralCheckpoint("graph_cdc")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L),
-            withOp = true)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val v = batchId.toInt
-            val ins = batch.filter(col("_op") === "insert")
-              .select(col("_id").cast("long").as("vec_id"), col("embedding"))
-            val del = batch.filter(col("_op") === "delete")
-              .select(col("_id").cast("long").as("vec_id"))
-            val prev = if (v == 0) s.read.parquet(graphPath)
-              else s.read.parquet(s"$tmp/g_b${v - 1}")
-            val prevTomb = s.read.parquet(s"$tmp/tomb_v$v")
-            // one verb per commit here, but the fold composes both for
-            // generality (inserts before deletes — the qc0 order): each
-            // half is the identity on an empty frame
-            val nDel = del.count()
-            // materialized once per batch: the merged graph feeds the
-            // touched-survivor write (2 joins) AND deleteRepairOf, which
-            // references its g0 argument four times (survivors/cleaned/
-            // lost-edges/dead-lists) — uncut, the whole insert fold's
-            // lazy tail (merge + refine over the checkpointed pool)
-            // re-executed per reference
-            val inserted = graft.operators.IterationCheckpoint.cut(
-              NnDescent.insertDeltaOf(e, prev, nBase, ins,
-                Some(prevTomb), Some(tombTotal.get())))
-            // touched survivors recorded BEFORE the repair (qd1's
-            // reporting set; empty on insert-only batches)
-            inserted.join(broadcast(del), Seq("vec_id"), "left_anti")
-              .join(broadcast(del.select(col("vec_id").as("nid"))),
-                Seq("nid"), "left_semi")
-              .select(col("vec_id")).distinct()
-              .write.mode("overwrite").parquet(s"$tmp/tch_b$v")
-            NnDescent.deleteRepairOf(e, inserted, del, Some(nDel))
-              .write.mode("overwrite").parquet(s"$tmp/g_b$v")
-            prevTomb.unionByName(del)
-              .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
-            tombTotal.addAndGet(nDel)
-            version.getAndUpdate(g => math.max(g, v))
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
-    val fv = version.get()
+    val fv = drainBatches(s, "graph_cdc", cdcTail(s, s"$tmp/in", withOp = true)) {
+      (batch, v) =>
+        val ins = batch.filter(col("_op") === "insert")
+          .select(col("_id").cast("long").as("vec_id"), col("embedding"))
+        val del = batch.filter(col("_op") === "delete")
+          .select(col("_id").cast("long").as("vec_id"))
+        val prev = if (v == 0) s.read.parquet(graphPath)
+          else s.read.parquet(s"$tmp/g_b${v - 1}")
+        val prevTomb = s.read.parquet(s"$tmp/tomb_v$v")
+        // one verb per commit here, but the fold composes both for
+        // generality (inserts before deletes — the qc0 order): each half
+        // is the identity on an empty frame
+        val nDel = del.count()
+        // materialized once per batch: the merged graph feeds the
+        // touched-survivor write (2 joins) AND deleteRepairOf, which
+        // references its g0 argument four times (survivors/cleaned/
+        // lost-edges/dead-lists) — uncut, the whole insert fold's lazy
+        // tail (merge + refine over the checkpointed pool) re-executed
+        // per reference
+        val inserted = graft.operators.IterationCheckpoint.cut(
+          NnDescent.insertDeltaOf(e, prev, nBase, ins,
+            Some(prevTomb), Some(tombTotal.get())))
+        // touched survivors recorded BEFORE the repair (qd1's reporting
+        // set; empty on insert-only batches)
+        inserted.join(broadcast(del), Seq("vec_id"), "left_anti")
+          .join(broadcast(del.select(col("vec_id").as("nid"))),
+            Seq("nid"), "left_semi")
+          .select(col("vec_id")).distinct()
+          .write.mode("overwrite").parquet(s"$tmp/tch_b$v")
+        NnDescent.deleteRepairOf(e, inserted, del, Some(nDel))
+          .write.mode("overwrite").parquet(s"$tmp/g_b$v")
+        prevTomb.unionByName(del)
+          .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
+        tombTotal.addAndGet(nDel)
+    }
     val gFin = s.read.parquet(s"$tmp/g_b$fv")
     val rpt = delta.select(col("vec_id"))
       .unionByName(s.read.parquet(s"$tmp/tch_b*"))
@@ -1958,59 +1782,39 @@ object StreamPipelines {
       incoming.filter(pmod(col("doc_id"), lit(2)) === 1 &&
           pmod(col("doc_id"), lit(5)) === 0)
         .select(col("doc_id")))
-    val version = new AtomicInteger(0)
-    val ckpt = ephemeralCheckpoint("mh_del")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/in", maxCommitsPerTrigger = Some(1L),
-            withOp = true)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val v = batchId.toInt
-            val ins = batch.filter(col("_op") === "insert")
-              .select(col("_id").cast("long").as("doc_id"), col("text"))
-            val del = batch.filter(col("_op") === "delete")
-              .select(col("_id").cast("long").as("doc_id"))
-            // one verb per commit here, but the fold composes both for
-            // generality (inserts merge first — the qc0 order — then
-            // deletes compact the merged result). The identity half is
-            // SKIPPED rather than run: each half rewrites the full
-            // frame set, so running it on an empty frame would copy the
-            // index once per batch. Two cheap in-batch counts decide;
-            // the delete count doubles as the compaction's threaded
-            // tombstone cardinality. Generation = batchId either way —
-            // a replayed batch re-reads the untouched idx_v<id> and
-            // overwrites idx_v<id+1>, idempotent under at-least-once.
-            val nIns = ins.count()
-            val nDel = del.count()
-            val merged =
-              if (nIns == 0) s"$tmp/idx_v$v"
-              else {
-                val out = if (nDel == 0) s"$tmp/idx_v${v + 1}"
-                  else s"$tmp/m_b$v"
-                DedupQueries.mergeMinhashIndex(s, ins, s"$tmp/idx_v$v", out)
-                out
-              }
-            if (nDel > 0)
-              DedupQueries.compactMinhashIndex(s, del, merged,
-                s"$tmp/idx_v${v + 1}", tombCount = Some(nDel))
-            else if (nIns == 0)
-              // an empty redelivered commit: carry the generation
-              // forward so the chain stays batch-id-keyed
-              DedupQueries.mergeMinhashIndex(
-                s, ins, s"$tmp/idx_v$v", s"$tmp/idx_v${v + 1}")
-            version.getAndUpdate(g => math.max(g, v + 1))
-            ()
+    val last = drainBatches(s, "mh_del", cdcTail(s, s"$tmp/in", withOp = true)) {
+      (batch, v) =>
+        val ins = batch.filter(col("_op") === "insert")
+          .select(col("_id").cast("long").as("doc_id"), col("text"))
+        val del = batch.filter(col("_op") === "delete")
+          .select(col("_id").cast("long").as("doc_id"))
+        // one verb per commit here, but the fold composes both for
+        // generality (inserts merge first — the qc0 order — then deletes
+        // compact the merged result). The identity half is SKIPPED rather
+        // than run: each half rewrites the full frame set, so running it
+        // on an empty frame would copy the index once per batch. Two cheap
+        // in-batch counts decide; the delete count doubles as the
+        // compaction's threaded tombstone cardinality.
+        val nIns = ins.count()
+        val nDel = del.count()
+        val merged =
+          if (nIns == 0) s"$tmp/idx_v$v"
+          else {
+            val out = if (nDel == 0) s"$tmp/idx_v${v + 1}" else s"$tmp/m_b$v"
+            DedupQueries.mergeMinhashIndex(s, ins, s"$tmp/idx_v$v", out)
+            out
           }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+        if (nDel > 0)
+          DedupQueries.compactMinhashIndex(s, del, merged,
+            s"$tmp/idx_v${v + 1}", tombCount = Some(nDel))
+        else if (nIns == 0)
+          // an empty redelivered commit: carry the generation forward so
+          // the chain stays batch-id-keyed
+          DedupQueries.mergeMinhashIndex(
+            s, ins, s"$tmp/idx_v$v", s"$tmp/idx_v${v + 1}")
+    }
     DedupQueries.serveMinhashBatch(s,
-      d.filter(col("doc_id") >= 375), s"$tmp/idx_v${version.get()}")
+      d.filter(col("doc_id") >= 375), s"$tmp/idx_v${last + 1}")
   }
 
   /** q8g: streaming ANN serve from a PERSISTED index — the online half of
@@ -2037,25 +1841,13 @@ object StreamPipelines {
       q.filter(pmod(col("vec_id"), lit(2)) === 0), "vec_id", s"$tmp/queries")
     val ic = s.read.parquet(s"$tmp/cent")
     val ia = s.read.parquet(s"$tmp/assign")
-    val ckpt = ephemeralCheckpoint("ann_serve")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val stream = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/queries", maxCommitsPerTrigger = Some(1L))
-          // the sink hoisted vec_id into the string `_id` key (P2's rule)
-          .select(col("_id").cast("long").as("qid"), col("embedding").as("qe"))
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            SimilarityQueries.ivfServeFor(batch, e, ic, ia)
-              .write.mode("overwrite").parquet(s"$tmp/served_b$batchId")
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        stream.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    drainBatches(s, "ann_serve", cdcTail(s, s"$tmp/queries")
+        // the sink hoisted vec_id into the string `_id` key (P2's rule)
+        .select(col("_id").cast("long").as("qid"), col("embedding").as("qe"))) {
+      (batch, batchId) =>
+        SimilarityQueries.ivfServeFor(batch, e, ic, ia)
+          .write.mode("overwrite").parquet(s"$tmp/served_b$batchId")
+    }
     s.read.parquet(s"$tmp/served_b*")
       .orderBy(col("qid"), col("rnk"))
   }
@@ -2087,25 +1879,13 @@ object StreamPipelines {
       q.filter(pmod(col("vec_id"), lit(2)) === 1), "vec_id", s"$tmp/queries")
     graft.connector.GraftDoc.write(
       q.filter(pmod(col("vec_id"), lit(2)) === 0), "vec_id", s"$tmp/queries")
-    val ckpt = ephemeralCheckpoint("graph_serve")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val stream = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/queries", maxCommitsPerTrigger = Some(1L))
-          // the sink hoisted vec_id into the string `_id` key (P2's rule)
-          .select(col("_id").cast("long").as("qid"), col("embedding").as("qe"))
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            NnDescent.beamServeFor(batch, e, g)
-              .write.mode("overwrite").parquet(s"$tmp/served_b$batchId")
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        stream.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    drainBatches(s, "graph_serve", cdcTail(s, s"$tmp/queries")
+        // the sink hoisted vec_id into the string `_id` key (P2's rule)
+        .select(col("_id").cast("long").as("qid"), col("embedding").as("qe"))) {
+      (batch, batchId) =>
+        NnDescent.beamServeFor(batch, e, g)
+          .write.mode("overwrite").parquet(s"$tmp/served_b$batchId")
+    }
     val served = s.read.parquet(s"$tmp/served_b*")
     val exact = graft.queries.SimilarityQueries
       .exactTopK(e, NnDescent.ReportK)
@@ -2155,71 +1935,57 @@ object StreamPipelines {
       .write.mode("overwrite").parquet(s"$tmp/cnt_v0")
     s.range(0).select(col("id").as("doc_id"), lit("").as("h"))
       .write.mode("overwrite").parquet(s"$tmp/ids_v0")
-    val ckpt = ephemeralCheckpoint("cbf_stream")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/tbl", maxCommitsPerTrigger = Some(1L),
-            withOp = true)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val v = batchId
-            val ins = batch.filter(col("_op") === "insert")
-              .select(col("_id").cast("long").as("doc_id"),
-                col("text"), col("lang"))
-              .withColumn("h", sha2(col("text"), 256))
-            val del = batch.filter(col("_op") === "delete")
-              .select(col("_id").cast("long").as("doc_id"))
-            val prevCnt = s.read.parquet(s"$tmp/cnt_v$v")
-            val prevIds = s.read.parquet(s"$tmp/ids_v$v")
-            // screen this batch's inserts against the PRE-batch state
-            val cbf = prevCnt
-              .agg(map_from_entries(
-                collect_list(struct(col("cell"), col("n")))).as("cbf"))
-              .scalar()
-            val flagged = ins.withColumn("cand",
-              BloomFunctions.counting_might_contain(cbf, col("h"), m, k))
-            flagged.filter(!col("cand"))
-              .select(col("doc_id"), col("lang"))
-              .unionByName(flagged.filter(col("cand"))
-                .join(prevIds.select(col("h")), Seq("h"), "left_anti")
-                .select(col("doc_id"), col("lang")))
-              .write.mode("overwrite").parquet(s"$tmp/novel_b$v")
-            // fold the batch into the next state generation. Delete
-            // hashes resolve against prevIds ∪ THIS batch's inserts —
-            // not prevIds alone — so an insert and its retraction
-            // landing in one micro-batch still cancel (+1/−1 per
-            // copy, multiset-exact) instead of leaving the insert's
-            // counters in place forever; the fold does NOT depend on
-            // maxCommitsPerTrigger=1 isolating deletes into their own
-            // batch. Within a batch, deletes apply AFTER inserts.
-            val delH = del
-              .join(prevIds.unionByName(ins.select(col("doc_id"), col("h"))),
-                Seq("doc_id"))
-              .select(col("doc_id"), col("h"))
-            val deltaCells = ins.select(
-                explode(BloomFunctions.counting_cells(col("h"), m, k))
-                  .as("cell"), lit(1L).as("w"))
-              .unionByName(delH.select(
-                explode(BloomFunctions.counting_cells(col("h"), m, k))
-                  .as("cell"), lit(-1L).as("w")))
-            prevCnt.select(col("cell"), col("n").as("w"))
-              .unionByName(deltaCells)
-              .groupBy(col("cell")).agg(sum(col("w")).as("n"))
-              .filter(col("n") > 0)
-              .write.mode("overwrite").parquet(s"$tmp/cnt_v${v + 1}")
-            prevIds.join(del, Seq("doc_id"), "left_anti")
-              .unionByName(ins.select(col("doc_id"), col("h"))
-                .join(del, Seq("doc_id"), "left_anti"))
-              .write.mode("overwrite").parquet(s"$tmp/ids_v${v + 1}")
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    drainBatches(s, "cbf_stream", cdcTail(s, s"$tmp/tbl", withOp = true)) {
+      (batch, v) =>
+        val ins = batch.filter(col("_op") === "insert")
+          .select(col("_id").cast("long").as("doc_id"),
+            col("text"), col("lang"))
+          .withColumn("h", sha2(col("text"), 256))
+        val del = batch.filter(col("_op") === "delete")
+          .select(col("_id").cast("long").as("doc_id"))
+        val prevCnt = s.read.parquet(s"$tmp/cnt_v$v")
+        val prevIds = s.read.parquet(s"$tmp/ids_v$v")
+        // screen this batch's inserts against the PRE-batch state
+        val cbf = prevCnt
+          .agg(map_from_entries(
+            collect_list(struct(col("cell"), col("n")))).as("cbf"))
+          .scalar()
+        val flagged = ins.withColumn("cand",
+          BloomFunctions.counting_might_contain(cbf, col("h"), m, k))
+        flagged.filter(!col("cand"))
+          .select(col("doc_id"), col("lang"))
+          .unionByName(flagged.filter(col("cand"))
+            .join(prevIds.select(col("h")), Seq("h"), "left_anti")
+            .select(col("doc_id"), col("lang")))
+          .write.mode("overwrite").parquet(s"$tmp/novel_b$v")
+        // fold the batch into the next state generation. Delete
+        // hashes resolve against prevIds ∪ THIS batch's inserts —
+        // not prevIds alone — so an insert and its retraction
+        // landing in one micro-batch still cancel (+1/−1 per
+        // copy, multiset-exact) instead of leaving the insert's
+        // counters in place forever; the fold does NOT depend on
+        // maxCommitsPerTrigger=1 isolating deletes into their own
+        // batch. Within a batch, deletes apply AFTER inserts.
+        val delH = del
+          .join(prevIds.unionByName(ins.select(col("doc_id"), col("h"))),
+            Seq("doc_id"))
+          .select(col("doc_id"), col("h"))
+        val deltaCells = ins.select(
+            explode(BloomFunctions.counting_cells(col("h"), m, k))
+              .as("cell"), lit(1L).as("w"))
+          .unionByName(delH.select(
+            explode(BloomFunctions.counting_cells(col("h"), m, k))
+              .as("cell"), lit(-1L).as("w")))
+        prevCnt.select(col("cell"), col("n").as("w"))
+          .unionByName(deltaCells)
+          .groupBy(col("cell")).agg(sum(col("w")).as("n"))
+          .filter(col("n") > 0)
+          .write.mode("overwrite").parquet(s"$tmp/cnt_v${v + 1}")
+        prevIds.join(del, Seq("doc_id"), "left_anti")
+          .unionByName(ins.select(col("doc_id"), col("h"))
+            .join(del, Seq("doc_id"), "left_anti"))
+          .write.mode("overwrite").parquet(s"$tmp/ids_v${v + 1}")
+    }
     // batch-1's bootstrap novelties (the snapshot itself) fall away here
     s.read.parquet(s"$tmp/novel_b*")
       .filter(col("doc_id") >= 250)
@@ -2283,65 +2049,48 @@ object StreamPipelines {
       .write.mode("overwrite").parquet(s"$tmp/counts_v0")
     s.range(0).select(col("id").as("doc_id"), col("id").as("gen"))
       .write.mode("overwrite").parquet(s"$tmp/tomb_v0")
-    val version = new AtomicInteger(0)
-    val ckpt = ephemeralCheckpoint("sfx_del")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val q = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/tbl", maxCommitsPerTrigger = Some(1L),
-            withOp = true)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val v = batchId
-            val ins = batch.filter(col("_op") === "insert")
-              .select(col("_id").cast("long").as("doc_id"), col("text"))
-            val del = batch.filter(col("_op") === "delete")
-              .select(col("_id").cast("long").as("doc_id"))
-            // inserts: row-local keys from this batch's text alone,
-            // GENERATION-STAMPED — a later delete debits (and the serve
-            // drops) exactly the rows of generations after the doc's
-            // last tombstone, so delete-then-reinsert resolves by
-            // LATEST OP per doc instead of relying on the drain's id
-            // spaces staying disjoint
-            SuffixRanks.suffixKeys(ins)
-              .withColumn("gen", lit(v + 1))
-              .write.mode("overwrite").parquet(s"$tmp/pos_b${v + 1}")
-            val newCounts = s.read.parquet(s"$tmp/pos_b${v + 1}")
-              .groupBy(col("key")).agg(count(lit(1)).as("n"))
-            // deletes: dead keys from the tombstoned docs' stored rows
-            // (ALL generations incl. this batch's inserts — same-batch
-            // insert+delete must cancel, the qc0 rule) — but only rows
-            // NEWER than the doc's last tombstone: generations a prior
-            // delete already debited must not debit twice
-            val priorDel = s.read.parquet(s"$tmp/tomb_v$v")
-              .groupBy(col("doc_id")).agg(max(col("gen")).as("dgen"))
-            val deadCounts = s.read.parquet(s"$tmp/pos_b*")
-              .join(del, Seq("doc_id"), "left_semi")
-              .join(priorDel, Seq("doc_id"), "left")
-              .filter(col("gen") > coalesce(col("dgen"), lit(0L)))
-              .groupBy(col("key")).agg((-count(lit(1))).as("n"))
-            // fold: order-independent (key, ±n) sums; zeroed keys vanish
-            s.read.parquet(s"$tmp/counts_v$v")
-              .unionByName(newCounts).unionByName(deadCounts)
-              .groupBy(col("key")).agg(sum(col("n")).as("n"))
-              .filter(col("n") > 0)
-              .write.mode("overwrite").parquet(s"$tmp/counts_v${v + 1}")
-            // renumber the SURVIVING dictionary: O(dict), the qb8 term
-            SuffixRanks.rankDict(s.read.parquet(s"$tmp/counts_v${v + 1}"))
-              .write.mode("overwrite").parquet(s"$tmp/dict_v${v + 1}")
-            s.read.parquet(s"$tmp/tomb_v$v")
-              .unionByName(del.withColumn("gen", lit((v + 1))))
-              .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
-            version.getAndUpdate(g => math.max(g, (v + 1).toInt))
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
-    val fv = version.get()
+    val fv = 1 + drainBatches(s, "sfx_del", cdcTail(s, s"$tmp/tbl", withOp = true)) {
+      (batch, v) =>
+        val ins = batch.filter(col("_op") === "insert")
+          .select(col("_id").cast("long").as("doc_id"), col("text"))
+        val del = batch.filter(col("_op") === "delete")
+          .select(col("_id").cast("long").as("doc_id"))
+        // inserts: row-local keys from this batch's text alone,
+        // GENERATION-STAMPED — a later delete debits (and the serve
+        // drops) exactly the rows of generations after the doc's
+        // last tombstone, so delete-then-reinsert resolves by
+        // LATEST OP per doc instead of relying on the drain's id
+        // spaces staying disjoint
+        SuffixRanks.suffixKeys(ins)
+          .withColumn("gen", lit(v + 1))
+          .write.mode("overwrite").parquet(s"$tmp/pos_b${v + 1}")
+        val newCounts = s.read.parquet(s"$tmp/pos_b${v + 1}")
+          .groupBy(col("key")).agg(count(lit(1)).as("n"))
+        // deletes: dead keys from the tombstoned docs' stored rows
+        // (ALL generations incl. this batch's inserts — same-batch
+        // insert+delete must cancel, the qc0 rule) — but only rows
+        // NEWER than the doc's last tombstone: generations a prior
+        // delete already debited must not debit twice
+        val priorDel = s.read.parquet(s"$tmp/tomb_v$v")
+          .groupBy(col("doc_id")).agg(max(col("gen")).as("dgen"))
+        val deadCounts = s.read.parquet(s"$tmp/pos_b*")
+          .join(del, Seq("doc_id"), "left_semi")
+          .join(priorDel, Seq("doc_id"), "left")
+          .filter(col("gen") > coalesce(col("dgen"), lit(0L)))
+          .groupBy(col("key")).agg((-count(lit(1))).as("n"))
+        // fold: order-independent (key, ±n) sums; zeroed keys vanish
+        s.read.parquet(s"$tmp/counts_v$v")
+          .unionByName(newCounts).unionByName(deadCounts)
+          .groupBy(col("key")).agg(sum(col("n")).as("n"))
+          .filter(col("n") > 0)
+          .write.mode("overwrite").parquet(s"$tmp/counts_v${v + 1}")
+        // renumber the SURVIVING dictionary: O(dict), the qb8 term
+        SuffixRanks.rankDict(s.read.parquet(s"$tmp/counts_v${v + 1}"))
+          .write.mode("overwrite").parquet(s"$tmp/dict_v${v + 1}")
+        s.read.parquet(s"$tmp/tomb_v$v")
+          .unionByName(del.withColumn("gen", lit(v + 1)))
+          .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
+    }
     // latest-op resolution: a doc's live rows are the generations AFTER
     // its last tombstone (none if never deleted) — a delete followed by
     // a re-insert serves the re-inserted rows, a trailing delete serves
@@ -2391,25 +2140,13 @@ object StreamPipelines {
       q.filter(pmod(col("vec_id"), lit(2)) === 1), "vec_id", s"$tmp/queries")
     graft.connector.GraftDoc.write(
       q.filter(pmod(col("vec_id"), lit(2)) === 0), "vec_id", s"$tmp/queries")
-    val ckpt = ephemeralCheckpoint("pq_serve")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val stream = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/queries", maxCommitsPerTrigger = Some(1L))
-          // the sink hoisted vec_id into the string `_id` key (P2's rule)
-          .select(col("_id").cast("long").as("qid"), col("embedding").as("qe"))
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            SimilarityQueries.pqServeFor(batch, icodes, icb)
-              .write.mode("overwrite").parquet(s"$tmp/served_b$batchId")
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        stream.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    drainBatches(s, "pq_serve", cdcTail(s, s"$tmp/queries")
+        // the sink hoisted vec_id into the string `_id` key (P2's rule)
+        .select(col("_id").cast("long").as("qid"), col("embedding").as("qe"))) {
+      (batch, batchId) =>
+        SimilarityQueries.pqServeFor(batch, icodes, icb)
+          .write.mode("overwrite").parquet(s"$tmp/served_b$batchId")
+    }
     s.read.parquet(s"$tmp/served_b*")
       .orderBy(col("qid"), col("rnk"))
   }
@@ -2448,27 +2185,15 @@ object StreamPipelines {
       clicks.filter(pmod(col("p_id"), lit(2)) === 1), "p_id", s"$tmp/clicks")
     graft.connector.GraftDoc.write(
       clicks.filter(pmod(col("p_id"), lit(2)) === 0), "p_id", s"$tmp/clicks")
-    val ckpt = ephemeralCheckpoint("range_join")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val stream = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/clicks", maxCommitsPerTrigger = Some(1L))
-          // the sink hoisted p_id into the string `_id` key (P2's rule)
-          .select(col("_id").cast("long").as("p_id"), col("p_ts"))
-        val matched = graft.operators.RangeJoin
-          .pointInInterval(iv, "lo", "hi", stream, "p_ts", binWidth = hourNs)
-          .select(col("iv_id"), col("p_id"))
-        val q = matched.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.write.mode("overwrite").parquet(s"$tmp/matched_b$batchId")
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    val stream = cdcTail(s, s"$tmp/clicks")
+      // the sink hoisted p_id into the string `_id` key (P2's rule)
+      .select(col("_id").cast("long").as("p_id"), col("p_ts"))
+    val matched = graft.operators.RangeJoin
+      .pointInInterval(iv, "lo", "hi", stream, "p_ts", binWidth = hourNs)
+      .select(col("iv_id"), col("p_id"))
+    drainBatches(s, "range_join", matched) { (batch, batchId) =>
+      batch.write.mode("overwrite").parquet(s"$tmp/matched_b$batchId")
+    }
     val counts = s.read.parquet(s"$tmp/matched_b*")
       .groupBy(col("iv_id"))
       .agg(count(lit(1)).as("n"), sum(col("p_id")).as("sids"))
@@ -2479,6 +2204,19 @@ object StreamPipelines {
       .orderBy(col("iv_id"))
   }
 
+  /** Streaming corpus ingestion end-to-end — the training-data topology
+    * composed from proven stages: a source table's CDC tail (multi-batch,
+    * one commit per trigger) → stateless quality gate → keyed UPSERT into
+    * a second graft-doc table (exactly-once per epoch) → snapshot rollup.
+    * Deduplication across re-delivered versions needs NO stream state at
+    * all: the sink's upsert-by-`_id` semantics resolve them (last commit
+    * wins), which is the scale answer — a billion-key "seen" state store
+    * would be the wrong tool when the store itself is keyed.
+    *
+    * The source history includes an UPDATE window (docs 100–199 rewritten
+    * with a longer body in a later commit), so the oracle proves
+    * last-write-wins ordering survives the stream: the final corpus holds
+    * the v2 text exactly where v2 passed the gate. */
   def docStreamIngest(s: SparkSession, sfDir: String): DataFrame = {
     val tmp = graft.TempDirs.create("graft_doc_ingest")
     val docs = s.read.parquet(s"$sfDir/documents.parquet")
@@ -2493,17 +2231,15 @@ object StreamPipelines {
       docs.filter(col("doc_id") >= 100 && col("doc_id") < 200)
         .withColumn("text", concat(lit("updated "), col("text"))),
       "doc_id", s"$tmp/src")
-    withStreamShufflePartitions(s, 8) {
-      val cdc = graft.connector.GraftDoc
-        .readStream(s, s"$tmp/src", maxCommitsPerTrigger = Some(1L),
-          withOp = true)
-        .filter(col("_op") === "insert")          // tombstones: not ingests
-        .filter(length(col("text")) >= 100)       // stateless quality gate
-        .select(col("_id"), col("text"), col("lang"))
-      val q = graft.connector.GraftDoc.writeStream(
+    val cdc = cdcTail(s, s"$tmp/src", withOp = true)
+      .filter(col("_op") === "insert")          // tombstones: not ingests
+      .filter(length(col("text")) >= 100)       // stateless quality gate
+      .select(col("_id"), col("text"), col("lang"))
+    withStreamShufflePartitions(s) {
+      graft.connector.GraftDoc.writeStream(
         cdc, keyField = "_id",
         path = s"$tmp/corpus", checkpoint = s"$tmp/ckpt")
-      q.awaitTermination()
+        .awaitTermination()
     }
     graft.connector.GraftDoc.snapshot(s, s"$tmp/corpus")
       .groupBy(col("lang"))
@@ -2559,35 +2295,20 @@ object StreamPipelines {
       ev.filter(pmod(col("event_id"), lit(2)) === 1), "event_id", s"$tmp/src")
     graft.connector.GraftDoc.write(
       ev.filter(pmod(col("event_id"), lit(2)) === 0), "event_id", s"$tmp/src")
-    val ckpt = ephemeralCheckpoint("hll_stream")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val cdc = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/src", maxCommitsPerTrigger = Some(1L))
-          .select(col("d"), col("event_type"), col("user_id"))
-        val q = cdc.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val batchSk = batch.groupBy(col("d"), col("event_type"))
-              .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
-            val folded =
-              if (batchId == 0) batchSk
-              else s.read.parquet(s"$tmp/state_v${batchId - 1}")
-                .unionByName(batchSk)
-                .groupBy(col("d"), col("event_type"))
-                .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
-            folded.write.mode("overwrite").parquet(s"$tmp/state_v$batchId")
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    val lastV = drainBatches(s, "hll_stream", cdcTail(s, s"$tmp/src")
+        .select(col("d"), col("event_type"), col("user_id"))) {
+      (batch, batchId) =>
+        val batchSk = batch.groupBy(col("d"), col("event_type"))
+          .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
+        val folded =
+          if (batchId == 0) batchSk
+          else s.read.parquet(s"$tmp/state_v${batchId - 1}")
+            .unionByName(batchSk)
+            .groupBy(col("d"), col("event_type"))
+            .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
+        folded.write.mode("overwrite").parquet(s"$tmp/state_v$batchId")
+    }
     // serve from the final stored state; exact anchors batch-derived
-    val lastV = new java.io.File(tmp).listFiles()
-      .map(_.getName).filter(_.startsWith("state_v"))
-      .map(_.stripPrefix("state_v").toLong).max
     val est = s.read.parquet(s"$tmp/state_v$lastV")
       .select(col("d"), col("event_type"),
         hll_sketch_estimate(col("sk")).as("est"))
@@ -2628,30 +2349,18 @@ object StreamPipelines {
       odd.filter(pmod(col("event_id"), lit(4)) === 1), "event_id", s"$tmp/src")
     graft.connector.GraftDoc.write(
       odd.filter(pmod(col("event_id"), lit(4)) === 3), "event_id", s"$tmp/src")
-    val ckpt = ephemeralCheckpoint("anomaly")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val stream = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/src", maxCommitsPerTrigger = Some(1L))
-          .select(col("_id").cast("long").as("event_id"),
-            col("event_type"), col("value"))
-        val flagged = stream.join(broadcast(stats), Seq("event_type"))
-          .filter(abs(col("value") - col("med"))
-            > lit(3) * lit(1.4826) * col("mad"))
-          .select(col("event_id"), col("event_type"),
-            round((col("value") - col("med"))
-              / (lit(1.4826) * col("mad")), 6).as("z"))
-        val q = flagged.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.write.mode("overwrite").parquet(s"$tmp/flags_b$batchId")
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    val flagged = cdcTail(s, s"$tmp/src")
+      .select(col("_id").cast("long").as("event_id"),
+        col("event_type"), col("value"))
+      .join(broadcast(stats), Seq("event_type"))
+      .filter(abs(col("value") - col("med"))
+        > lit(3) * lit(1.4826) * col("mad"))
+      .select(col("event_id"), col("event_type"),
+        round((col("value") - col("med"))
+          / (lit(1.4826) * col("mad")), 6).as("z"))
+    drainBatches(s, "anomaly", flagged) { (batch, batchId) =>
+      batch.write.mode("overwrite").parquet(s"$tmp/flags_b$batchId")
+    }
     s.read.parquet(s"$tmp/flags_b*")
       .select(col("event_id"), col("event_type"), col("z"))
       .orderBy(col("event_id"))
@@ -2696,32 +2405,20 @@ object StreamPipelines {
       odd.filter(pmod(col("doc_id"), lit(4)) === 1), "doc_id", s"$tmp/src")
     graft.connector.GraftDoc.write(
       odd.filter(pmod(col("doc_id"), lit(4)) === 3), "doc_id", s"$tmp/src")
-    val ckpt = ephemeralCheckpoint("img_dedup")
-    try {
-      withStreamShufflePartitions(s, 8) {
-        val stream = graft.connector.GraftDoc
-          .readStream(s, s"$tmp/src", maxCommitsPerTrigger = Some(1L))
-          .select(col("_id").cast("long").as("doc_id")).as[Long]
-          .mapPartitions(_.map(id => MediaImage(id, synthesizePng(id))))
-          .mapPartitions(dhashImages).toDF()
-        val matched = bandRows(stream)
-          .join(broadcast(hist), Seq("band", "key"))
-          .withColumn("hamming",
-            (bit_count(col("h0").bitwiseXOR(col("h0h")))
-              + bit_count(col("h1").bitwiseXOR(col("h1h")))).cast("long"))
-          .filter(col("hamming") <= 3)
-          .select(col("doc_id").as("id_new"), col("id_hist"), col("hamming"))
-        val q = matched.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.write.mode("overwrite").parquet(s"$tmp/hits_b$batchId")
-            ()
-          }
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally deleteRecursively(ckpt)
+    val stream = cdcTail(s, s"$tmp/src")
+      .select(col("_id").cast("long").as("doc_id")).as[Long]
+      .mapPartitions(_.map(id => MediaImage(id, synthesizePng(id))))
+      .mapPartitions(dhashImages).toDF()
+    val matched = bandRows(stream)
+      .join(broadcast(hist), Seq("band", "key"))
+      .withColumn("hamming",
+        (bit_count(col("h0").bitwiseXOR(col("h0h")))
+          + bit_count(col("h1").bitwiseXOR(col("h1h")))).cast("long"))
+      .filter(col("hamming") <= 3)
+      .select(col("doc_id").as("id_new"), col("id_hist"), col("hamming"))
+    drainBatches(s, "img_dedup", matched) { (batch, batchId) =>
+      batch.write.mode("overwrite").parquet(s"$tmp/hits_b$batchId")
+    }
     s.read.parquet(s"$tmp/hits_b*")
       .distinct() // collapse multi-band hits for the same pair
       .orderBy(col("id_new"), col("id_hist"))
@@ -2734,8 +2431,8 @@ object StreamPipelines {
     * run for real through the engine's own halves of both:
     * distributed wire producers → [[graft.sources.kafka.MiniKafkaBroker]]
     * → `StreamSource.read` (graft-kafka micro-batch source, F3 csv
-    * decode) → `GraftDoc.writeStream` (the DSv2 streaming upsert sink)
-    * → snapshot read. Two produce/drain waves against ONE checkpoint:
+    * decode) → `format("graft-doc")` (the DSv2 streaming upsert sink,
+    * keyed as `GraftDoc.writeStream` keys it) → snapshot read. Two produce/drain waves against ONE checkpoint:
     * wave 1 ships STALE rows (segment 'PENDING', balance 0), wave 2 the
     * real ones — the second drain must resume from the committed wire
     * offsets (no re-read) and the sink must upsert every key to its
@@ -2784,18 +2481,17 @@ object StreamPipelines {
           {"name":"custkey","type":"long"},
           {"name":"seg","type":"string"},
           {"name":"bal","type":"double"}]}"""))
-      val ckpt = ephemeralCheckpoint("wire_sink")
-      try {
-        def drain(): Unit = withStreamShufflePartitions(s, 8) {
-          graft.connector.GraftDoc.writeStream(
-            graft.sources.StreamSource.read(s, cfg)
-              .select(col("custkey"), col("seg"), col("bal")),
-            "custkey", s"$tmp/sink", ckpt.getAbsolutePath)
-            .awaitTermination()
+      withEphemeralCheckpoint("wire_sink") { ckpt =>
+        def wave(stale: Boolean): Unit = {
+          produce(stale)
+          drain(s, graft.sinks.DocumentSink.toDocuments(
+              graft.sources.StreamSource.read(s, cfg)
+                .select(col("custkey"), col("seg"), col("bal")), "custkey"),
+            ckpt)(_.format("graft-doc").option("path", s"$tmp/sink"))
         }
-        produce(stale = true); drain()   // commit 1: every key, stale
-        produce(stale = false); drain()  // commit 2: every key, fresh
-      } finally deleteRecursively(ckpt)
+        wave(stale = true)   // commit 1: every key, stale
+        wave(stale = false)  // commit 2: every key, fresh
+      }
       graft.connector.GraftDoc.snapshot(s, s"$tmp/sink")
         .groupBy(col("seg"))
         .agg(count(lit(1)).as("n"),
