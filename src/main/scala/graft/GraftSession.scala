@@ -13,11 +13,21 @@ import org.apache.spark.sql.SparkSession
   *     cluster this is set per-job (or left to AQE's coalescing with a high
   *     initial partition number).
   *   - UTC session TZ pinned so timestamp semantics match the DuckDB oracle.
+  *   - `file:` on [[ForklessLocalFileSystem]] / [[ForklessLocalFs]]: without
+  *     the native Hadoop library, the stock local FS launches a `chmod` in
+  *     every create and a `readlink` + `ls -ld` in every link-status call,
+  *     so each checkpoint WAL entry, commit-log entry, graft-doc commit and
+  *     part file paid tens of milliseconds of process launches. Checksums,
+  *     rename and create semantics are the stock ones. `FileSystem.CACHE`
+  *     keys on scheme, not class: a `file:` FS built from a Configuration
+  *     without these keys before the session exists keeps being served.
   */
 object GraftSession {
 
   /** Apply engine defaults to a builder (caller controls master/memory). */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
+    .config("spark.hadoop.fs.file.impl", classOf[ForklessLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForklessLocalFs].getName)
     .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1485,9 +1485,10 @@ object GraftDocLog {
     * OVERWRITES the target in one step (`FileContext` rename semantics;
     * plain `FileSystem.create(overwrite = true)` truncates in place, so a
     * concurrent reader can observe a torn file). Both the temp write and
-    * the rename go through `FileContext` — its local implementation is
-    * checksum-free, so no stale `.crc` sibling survives the rename to
-    * poison later checksummed reads. */
+    * the rename go through `FileContext`, whose local implementation is a
+    * `ChecksumFs`: the temp file gets a `.crc` sibling, and the rename
+    * moves that sibling with the file, over the target's, so no stale
+    * checksum survives to poison later checksummed reads. */
   private def writeFileAtomic(fs: FileSystem, p: Path, content: String): Unit = {
     val qp = fs.makeQualified(p)
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(qp.toUri, hadoopConf())

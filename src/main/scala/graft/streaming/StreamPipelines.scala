@@ -165,6 +165,20 @@ object StreamPipelines {
     last.get
   }
 
+  /** Every batch-keyed generation a fold wrote under `glob`
+    * (`<tmp>/novel_b*`), read as one parquet relation. The glob is
+    * resolved here, in the order Spark's own expansion returns, so the
+    * reader is handed real directories: handed the pattern, Spark stats it
+    * as a path while probing for a streaming sink's metadata log and logs
+    * the miss with a full stack trace. With no match the pattern itself is
+    * read, which fails as before. */
+  private def readGenerations(s: SparkSession, glob: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(glob)
+    val dirs = Option(p.getFileSystem(s.sessionState.newHadoopConf()).globStatus(p))
+      .map(_.map(_.getPath.toString).toSeq).getOrElse(Nil)
+    s.read.parquet((if (dirs.isEmpty) Seq(glob) else dirs): _*)
+  }
+
   /** Run a one-shot (AvailableNow) streaming query into a memory sink and
     * return the materialized result. */
   private def runToMemory(s: SparkSession, df: DataFrame,
@@ -825,7 +839,7 @@ object StreamPipelines {
             .write.mode("overwrite").parquet(s"$tmp/scored_b$batchId")
       }
     }
-    s.read.parquet(s"$tmp/scored_b*")
+    readGenerations(s, s"$tmp/scored_b*")
       .orderBy(col("doc_id"))
   }
 
@@ -1227,7 +1241,7 @@ object StreamPipelines {
             s.read.parquet(s"$tmp/pos_b${v + 1}").select(col("key"))))
           .write.mode("overwrite").parquet(s"$tmp/dict_v${v + 1}")
     }
-    val pos = s.read.parquet(s"$tmp/pos_b*")
+    val pos = readGenerations(s, s"$tmp/pos_b*")
     val dict = s.read.parquet(s"$tmp/dict_v${last + 1}")
     // group sizes from ONE partial-aggregated pass over the narrow key
     // column (this pipeline maintains no counts table — qb8/qc5 do);
@@ -1279,7 +1293,7 @@ object StreamPipelines {
           .write.mode("overwrite").parquet(s"$tmp/assign_b$batchId")
     }
     val ia = s.read.parquet(s"$indexPath/assign_base")
-      .unionByName(s.read.parquet(s"$tmp/assign_b*"))
+      .unionByName(readGenerations(s, s"$tmp/assign_b*"))
     SimilarityQueries.ivfServe(e, ic, ia)
   }
 
@@ -1392,7 +1406,7 @@ object StreamPipelines {
           .write.mode("overwrite").parquet(s"$tmp/codes_b$batchId")
     }
     val codes = s.read.parquet(s"$tmp/base_codes")
-      .unionByName(s.read.parquet(s"$tmp/codes_b*"))
+      .unionByName(readGenerations(s, s"$tmp/codes_b*"))
     val qf = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     SimilarityQueries.pqServeFor(qf, codes, icb)
@@ -1464,7 +1478,7 @@ object StreamPipelines {
     val nT = Some(tomb.count())
     val ia = graft.operators.Tombstones.antiJoin(
       s.read.parquet(s"$indexPath/assign_base")
-        .unionByName(s.read.parquet(s"$tmp/assign_b*")),
+        .unionByName(readGenerations(s, s"$tmp/assign_b*")),
       "vec_id", tomb, nT)
     val q = graft.operators.Tombstones.antiJoin(
         e.filter(col("vec_id") < 10), "vec_id", tomb, nT)
@@ -1525,7 +1539,7 @@ object StreamPipelines {
     val nT = Some(tomb.count())
     val codes = graft.operators.Tombstones.antiJoin(
       s.read.parquet(s"$tmp/base_codes")
-        .unionByName(s.read.parquet(s"$tmp/codes_b*")),
+        .unionByName(readGenerations(s, s"$tmp/codes_b*")),
       "vec_id", tomb, nT)
     val qf = graft.operators.Tombstones.antiJoin(
         e.filter(col("vec_id") < 10), "vec_id", tomb, nT)
@@ -1602,7 +1616,7 @@ object StreamPipelines {
     val g2 = s.read.parquet(s"$tmp/g_b$fv")
     // sampled touched SURVIVORS: a gen-1-touched node deleted by gen 2
     // gets no serve (anti join against the final tombstone set)
-    val tchAll = s.read.parquet(s"$tmp/tch_b*")
+    val tchAll = readGenerations(s, s"$tmp/tch_b*")
       .join(s.read.parquet(s"$tmp/tomb_v${fv + 1}"),
         Seq("vec_id"), "left_anti")
       .filter(pmod(col("vec_id"), lit(NnDescent.FlagSampleMod)) === 0)
@@ -1712,7 +1726,7 @@ object StreamPipelines {
     }
     val gFin = s.read.parquet(s"$tmp/g_b$fv")
     val rpt = delta.select(col("vec_id"))
-      .unionByName(s.read.parquet(s"$tmp/tch_b*"))
+      .unionByName(readGenerations(s, s"$tmp/tch_b*"))
       .filter(pmod(col("vec_id"), lit(NnDescent.FlagSampleMod)) === 0)
       .distinct()
     val w = org.apache.spark.sql.expressions.Window
@@ -1848,7 +1862,7 @@ object StreamPipelines {
         SimilarityQueries.ivfServeFor(batch, e, ic, ia)
           .write.mode("overwrite").parquet(s"$tmp/served_b$batchId")
     }
-    s.read.parquet(s"$tmp/served_b*")
+    readGenerations(s, s"$tmp/served_b*")
       .orderBy(col("qid"), col("rnk"))
   }
 
@@ -1886,7 +1900,7 @@ object StreamPipelines {
         NnDescent.beamServeFor(batch, e, g)
           .write.mode("overwrite").parquet(s"$tmp/served_b$batchId")
     }
-    val served = s.read.parquet(s"$tmp/served_b*")
+    val served = readGenerations(s, s"$tmp/served_b*")
     val exact = graft.queries.SimilarityQueries
       .exactTopK(e, NnDescent.ReportK)
       .withColumn("in_top5", lit(1))
@@ -1987,7 +2001,7 @@ object StreamPipelines {
           .write.mode("overwrite").parquet(s"$tmp/ids_v${v + 1}")
     }
     // batch-1's bootstrap novelties (the snapshot itself) fall away here
-    s.read.parquet(s"$tmp/novel_b*")
+    readGenerations(s, s"$tmp/novel_b*")
       .filter(col("doc_id") >= 250)
       .orderBy(col("doc_id"))
   }
@@ -2073,7 +2087,7 @@ object StreamPipelines {
         // delete already debited must not debit twice
         val priorDel = s.read.parquet(s"$tmp/tomb_v$v")
           .groupBy(col("doc_id")).agg(max(col("gen")).as("dgen"))
-        val deadCounts = s.read.parquet(s"$tmp/pos_b*")
+        val deadCounts = readGenerations(s, s"$tmp/pos_b*")
           .join(del, Seq("doc_id"), "left_semi")
           .join(priorDel, Seq("doc_id"), "left")
           .filter(col("gen") > coalesce(col("dgen"), lit(0L)))
@@ -2098,7 +2112,7 @@ object StreamPipelines {
     // anti join this replaces
     val lastDel = s.read.parquet(s"$tmp/tomb_v$fv")
       .groupBy(col("doc_id")).agg(max(col("gen")).as("dgen"))
-    val pos = s.read.parquet(s"$tmp/pos_b*")
+    val pos = readGenerations(s, s"$tmp/pos_b*")
       .join(lastDel, Seq("doc_id"), "left")
       .filter(col("gen") > coalesce(col("dgen"), lit(0L)))
     // group sizes from the maintained counts table — the fold's debit
@@ -2147,7 +2161,7 @@ object StreamPipelines {
         SimilarityQueries.pqServeFor(batch, icodes, icb)
           .write.mode("overwrite").parquet(s"$tmp/served_b$batchId")
     }
-    s.read.parquet(s"$tmp/served_b*")
+    readGenerations(s, s"$tmp/served_b*")
       .orderBy(col("qid"), col("rnk"))
   }
 
@@ -2194,7 +2208,7 @@ object StreamPipelines {
     drainBatches(s, "range_join", matched) { (batch, batchId) =>
       batch.write.mode("overwrite").parquet(s"$tmp/matched_b$batchId")
     }
-    val counts = s.read.parquet(s"$tmp/matched_b*")
+    val counts = readGenerations(s, s"$tmp/matched_b*")
       .groupBy(col("iv_id"))
       .agg(count(lit(1)).as("n"), sum(col("p_id")).as("sids"))
     iv.join(counts, Seq("iv_id"), "left")
@@ -2361,7 +2375,7 @@ object StreamPipelines {
     drainBatches(s, "anomaly", flagged) { (batch, batchId) =>
       batch.write.mode("overwrite").parquet(s"$tmp/flags_b$batchId")
     }
-    s.read.parquet(s"$tmp/flags_b*")
+    readGenerations(s, s"$tmp/flags_b*")
       .select(col("event_id"), col("event_type"), col("z"))
       .orderBy(col("event_id"))
   }
@@ -2419,7 +2433,7 @@ object StreamPipelines {
     drainBatches(s, "img_dedup", matched) { (batch, batchId) =>
       batch.write.mode("overwrite").parquet(s"$tmp/hits_b$batchId")
     }
-    s.read.parquet(s"$tmp/hits_b*")
+    readGenerations(s, s"$tmp/hits_b*")
       .distinct() // collapse multi-band hits for the same pair
       .orderBy(col("id_new"), col("id_hist"))
       .select(col("id_new"), col("id_hist"), col("hamming"))

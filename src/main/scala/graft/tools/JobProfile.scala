@@ -68,11 +68,14 @@ object JobProfile {
     println(s"[jobprofile] $name x$n at $sfDir cpus=$cpus")
     fn(spark, sfDir).collect() // warmup
     for (i <- 1 to n) {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       done.synchronized(done.clear())
+      stages.set(0)
+      tasks.set(0)
       val w0 = System.currentTimeMillis()
       fn(spark, sfDir).count()
       val w1 = System.currentTimeMillis()
-      Thread.sleep(400) // listener drain
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       val spans = done.synchronized(done.toVector)
         .filter(s => s.end >= w0 && s.start <= w1)
         .sortBy(_.start)
