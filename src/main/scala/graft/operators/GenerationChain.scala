@@ -3,9 +3,10 @@ package graft.operators
 import java.nio.file.{Files, Paths, FileAlreadyExistsException, NoSuchFileException}
 
 /** Single-writer-per-slot fence for index GENERATION chains — the
-  * concurrency contract the `g_b<v>` / `idx_v<v>` chains assumed but
-  * never enforced (round-15 verdict: "a compaction racing a live fold
-  * can silently orphan a generation").
+  * concurrency contract the streaming folds' chains
+  * ([[graft.streaming.StreamPipelines.Generations]]) assume but never
+  * enforce (round-15 verdict: "a compaction racing a live fold can
+  * silently orphan a generation").
   *
   * Every index family's maintenance is a linear chain of full-state
   * generations: a fold (streaming insert/delete batch) reads the head

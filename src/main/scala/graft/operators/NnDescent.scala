@@ -54,6 +54,23 @@ object NnDescent {
       .select(col("vec_id"), col("nid"), col("c"))
   }
 
+  /** The family's report: each node of `graph` — already cut to the
+    * reported ids by the caller's filter or semi join — with its served
+    * top-[[ReportK]] by (c desc, nid), each edge flagged `in_exact` when
+    * `exact` (the brute-force top-k, (qid, nid)) holds it. Output
+    * (qid, rnk, nid, cos, in_exact) ordered by (qid, rnk). */
+  def reportTopK(graph: DataFrame, exact: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("vec_id")).orderBy(col("c").desc, col("nid"))
+    val fin = graph.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= ReportK)
+    val ex = exact.withColumn("in_exact", lit(1))
+    fin.join(ex, fin("vec_id") === ex("qid") && fin("nid") === ex("nid"), "left")
+      .select(fin("vec_id").as("qid"), col("rnk"), fin("nid"),
+        round(col("c"), 4).as("cos"),
+        coalesce(col("in_exact"), lit(0)).cast("int").as("in_exact"))
+      .orderBy(col("qid"), col("rnk"))
+  }
+
   /** The family's recurring `∪ → dedup-max → per-owner top-k` tail with
     * ONE exchange instead of two (guide §2.4: operations keyed the same
     * way share an exchange): an explicit hash repartition on the OWNER
@@ -1110,9 +1127,11 @@ object NnDescent {
     * THIS compacted generation instead (linearized —
     * `GenerationFenceSpec` replays the committed order serially and
     * matches bit-for-bit). Returns the committed slot. The same contract
-    * applies verbatim to the other families' chains (IVF `assign_b<v>` +
-    * tombstone generations, PQ code generations, MinHash/suffix
-    * `idx_v<v>`/`dict_v<v>`): one full-state generation per slot, claim
+    * applies verbatim to the other families' chains (IVF memberships +
+    * tombstone generations, PQ code generations, MinHash/suffix index
+    * and dictionary generations — the streaming folds' layout is
+    * [[graft.streaming.StreamPipelines.Generations]]): one full-state
+    * generation per slot, claim
     * before derive, commit after publish — see SURVEY §2.12's fence row. */
   def compactFenced(s: org.apache.spark.sql.SparkSession, e: DataFrame,
       root: String): Int = {

@@ -98,65 +98,9 @@ object UnigramLm {
           * Scale + lit(0.5)).cast("long").as("cost"))
   }
 
-  /** Viterbi DP over every vocabulary word: returns the full backpointer
-    * table (word, wfreq, pos, dcost, bp) for pos 0..len(word). Stage i
-    * joins the ≤[[MaxPieceLen]] predecessor frames against the piece
-    * cost table (narrow, vocab-sized) and argmins per word with the
-    * (cost, j) tiebreak. Each stage frame is lineage-cut. */
-  def viterbi(w: DataFrame, costs: DataFrame): DataFrame = {
-    val frames = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    frames += IterationCheckpoint.cut(
-      w.select(col("word"), col("wfreq"), lit(0).as("pos"),
-        lit(0L).as("dcost"), lit(-1).as("bp")))
-    for (i <- 1 to MaxWordLen) {
-      val prev = frames.slice(math.max(0, i - MaxPieceLen), i)
-        .reduce(_ unionByName _)
-      val cand = prev
-        .filter(length(col("word")) >= i)
-        .select(col("word"), col("wfreq"), col("pos").as("j"), col("dcost"),
-          col("word").substr(col("pos") + 1, lit(i) - col("pos")).as("piece"))
-        .join(costs, Seq("piece"))
-        .select(col("word"), col("wfreq"), col("j"),
-          (col("dcost") + col("cost")).as("tc"))
-      val byWord = Window.partitionBy(col("word")).orderBy(col("tc"), col("j"))
-      frames += IterationCheckpoint.cut(
-        cand.withColumn("rn", row_number().over(byWord))
-          .filter(col("rn") === 1)
-          .select(col("word"), col("wfreq"), lit(i).as("pos"),
-            col("tc").as("dcost"), col("j").as("bp")))
-    }
-    frames.reduce(_ unionByName _)
-  }
-
-  /** Backtrack the DP: (word, wfreq, piece, st) with one row per piece
-    * of each word's best segmentation (st = 1-based start offset, so a
-    * consumer can reassemble the order). MaxWordLen bounded steps, each
-    * a vocab-sized join on (word, pos). */
-  def segments(w: DataFrame, dp: DataFrame): DataFrame = {
-    val bp = IterationCheckpoint.cut(
-      dp.select(col("word"), col("pos"), col("bp")))
-    var cur = w.select(col("word"), col("wfreq"), length(col("word")).as("pos"))
-    val pieces = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    for (_ <- 1 to MaxWordLen) {
-      // each step IS cut: the final union consumes every step's piece
-      // rows, so an uncut chain would re-execute step k's join once per
-      // later step (O(n²) joins total); materializing each step keeps
-      // the backtrack at exactly MaxWordLen joins
-      val step = IterationCheckpoint.cut(
-        cur.filter(col("pos") > 0)
-          .join(bp, Seq("word", "pos"))
-          .select(col("word"), col("wfreq"),
-            col("word").substr(col("bp") + 1, col("pos") - col("bp")).as("piece"),
-            col("bp").as("pos")))
-      pieces += step.select(col("word"), col("wfreq"), col("piece"),
-        (col("pos") + 1).as("st"))
-      cur = step.select(col("word"), col("wfreq"), col("pos"))
-    }
-    pieces.reduce(_ unionByName _)
-  }
-
-  /** ROW-LOCAL Viterbi + backtrack — the same DP as [[viterbi]] +
-    * [[segments]] fused into ONE corpus-free pass: the whole per-word
+  /** ROW-LOCAL Viterbi + backtrack — the same DP as the relational
+    * unroll (`viterbi` + `segments`, kept in `UnigramLmSpec` as its
+    * reference) fused into ONE corpus-free pass: the whole per-word
     * DP depends only on the word itself and the (piece → cost)
     * vocabulary, which is vocab-sized (seed = [[SeedMulti]] multi-char
     * pieces + the character alphabet; round-2 vocab ⊆ seed), so it

@@ -296,36 +296,21 @@ object SimilarityQueries {
 
   /** q5n's exact side as a helper for the annsweep probe: brute-force
     * top-`k` per query (vec_id < 10), the recall denominator. */
-  private[graft] def exactTopK(e: DataFrame, k: Int): DataFrame = {
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("c").desc, col("vec_id"))
-    e.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("c",
-        round(VectorFunctions.cosine_sim(col("qe"), col("embedding")), 9))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("vec_id").as("nid"))
-  }
+  private[graft] def exactTopK(e: DataFrame, k: Int): DataFrame =
+    exactTopKFor(e, k, e.filter(col("vec_id") < 10))
 
-  /** exactTopK with an explicit query-id frame (qb4's touched probes);
-    * candidates = all of `e` except self. */
-  private[graft] def exactTopKOf(e: DataFrame, k: Int, qids: DataFrame): DataFrame = {
-    val q = e.join(qids.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("c").desc, col("vec_id"))
-    e.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("c",
-        round(VectorFunctions.cosine_sim(col("qe"), col("embedding")), 9))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("vec_id").as("nid"))
-  }
+  /** exactTopK with an explicit query-id frame (qb4's touched probes). */
+  private[graft] def exactTopKOf(e: DataFrame, k: Int, qids: DataFrame): DataFrame =
+    exactTopKFor(e, k, e.join(qids.select(col("vec_id")), Seq("vec_id"), "left_semi"))
 
   /** exactTopK with the query set = ids >= `minId` (qb3's delta probes). */
-  private[graft] def exactTopKFrom(e: DataFrame, k: Int, minId: Long): DataFrame = {
-    val q = e.filter(col("vec_id") >= minId)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+  private[graft] def exactTopKFrom(e: DataFrame, k: Int, minId: Long): DataFrame =
+    exactTopKFor(e, k, e.filter(col("vec_id") >= minId))
+
+  /** Brute-force top-`k` (qid, nid) of each query row of `queries` (a
+    * (vec_id, embedding) frame) over the candidates `e`, self excluded. */
+  private def exactTopKFor(e: DataFrame, k: Int, queries: DataFrame): DataFrame = {
+    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val w = Window.partitionBy(col("qid")).orderBy(col("c").desc, col("vec_id"))
     e.join(broadcast(q), col("vec_id") =!= col("qid"))
       .withColumn("c",
@@ -1863,19 +1848,8 @@ object SimilarityQueries {
       (s, dir) => {
         val e = emb(s, dir)
         val knn = graft.operators.NnDescent.knnGraph(e)
-        val w = Window.partitionBy(col("vec_id")).orderBy(col("c").desc, col("nid"))
-        val fin = knn.filter(col("vec_id") < 10)
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= graft.operators.NnDescent.ReportK)
-        val exact = exactTopK(e, graft.operators.NnDescent.ReportK)
-          .withColumn("in_exact", lit(1))
-        fin.join(exact,
-            fin("vec_id") === exact("qid") && fin("nid") === exact("nid"),
-            "left")
-          .select(fin("vec_id").as("qid"), col("rnk"), fin("nid"),
-            round(col("c"), 4).as("cos"),
-            coalesce(col("in_exact"), lit(0)).cast("int").as("in_exact"))
-          .orderBy(col("qid"), col("rnk"))
+        graft.operators.NnDescent.reportTopK(knn.filter(col("vec_id") < 10),
+          exactTopK(e, graft.operators.NnDescent.ReportK))
       }),
 
     // Greedy graph-ANN SERVE — the search half of qao's build (the HNSW
@@ -1999,8 +1973,6 @@ object SimilarityQueries {
         NnDescent.knnGraph(e.filter(col("vec_id") < nBase))
           .write.mode("overwrite").parquet(p)
         val merged = NnDescent.insertDelta(e, s.read.parquet(p), nBase)
-        val w = Window.partitionBy(col("vec_id"))
-          .orderBy(col("c").desc, col("nid"))
         // evidence is SAMPLED (the qau SampleMod idiom, via
         // NnDescent.FlagSampleMod): the merge above ran for every new
         // node; only sampled nodes are reported and brute-probed, so
@@ -2008,19 +1980,9 @@ object SimilarityQueries {
         // delta
         val qS = e.filter(col("vec_id") >= nBase &&
           pmod(col("vec_id"), lit(NnDescent.FlagSampleMod)) === 0)
-        val fin = merged
-          .join(qS.select(col("vec_id")), Seq("vec_id"), "left_semi")
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= NnDescent.ReportK)
-        val exact = exactTopKOf(e, NnDescent.ReportK, qS)
-          .withColumn("in_exact", lit(1))
-        fin.join(exact,
-            fin("vec_id") === exact("qid") && fin("nid") === exact("nid"),
-            "left")
-          .select(fin("vec_id").as("qid"), col("rnk"), fin("nid"),
-            round(col("c"), 4).as("cos"),
-            coalesce(col("in_exact"), lit(0)).cast("int").as("in_exact"))
-          .orderBy(col("qid"), col("rnk"))
+        NnDescent.reportTopK(
+          merged.join(qS.select(col("vec_id")), Seq("vec_id"), "left_semi"),
+          exactTopKOf(e, NnDescent.ReportK, qS))
       }),
 
     // Graph-ANN delete with LOCAL repair — the remove path completing
@@ -2050,8 +2012,6 @@ object SimilarityQueries {
         val touched = g0.filter(!dead(col("vec_id")) && dead(col("nid")))
           .select(col("vec_id")).distinct()
         val surE = e.filter(!dead(col("vec_id")))
-        val w = Window.partitionBy(col("vec_id"))
-          .orderBy(col("c").desc, col("nid"))
         // evidence flags only (the repair itself is N-independent): with
         // DeleteMod=16 and K=10 ~half the survivors are touched, so the
         // exact probe SAMPLES the touched set (the qau SampleMod idiom,
@@ -2059,18 +2019,8 @@ object SimilarityQueries {
         // every touched node; only sampled nodes are reported/probed
         val touchedS = touched.filter(
           pmod(col("vec_id"), lit(NnDescent.FlagSampleMod)) === 0)
-        val fin = repairedG.join(touchedS, Seq("vec_id"), "left_semi")
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= NnDescent.ReportK)
-        val exact = exactTopKOf(surE, NnDescent.ReportK, touchedS)
-          .withColumn("in_exact", lit(1))
-        fin.join(exact,
-            fin("vec_id") === exact("qid") && fin("nid") === exact("nid"),
-            "left")
-          .select(fin("vec_id").as("qid"), col("rnk"), fin("nid"),
-            round(col("c"), 4).as("cos"),
-            coalesce(col("in_exact"), lit(0)).cast("int").as("in_exact"))
-          .orderBy(col("qid"), col("rnk"))
+        NnDescent.reportTopK(repairedG.join(touchedS, Seq("vec_id"), "left_semi"),
+          exactTopKOf(surE, NnDescent.ReportK, touchedS))
       }),
 
     // Graph-index COMPACTION — the verb completing the lifecycle the
@@ -2112,20 +2062,8 @@ object SimilarityQueries {
         val liveE = e.join(
           s.read.parquet(p2).select(col("vec_id")).distinct(),
           Seq("vec_id"), "left_semi")
-        val w = Window.partitionBy(col("vec_id"))
-          .orderBy(col("c").desc, col("nid"))
-        val fin = compacted.filter(col("vec_id") < 10)
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= NnDescent.ReportK)
-        val exact = exactTopK(liveE, NnDescent.ReportK)
-          .withColumn("in_exact", lit(1))
-        fin.join(exact,
-            fin("vec_id") === exact("qid") && fin("nid") === exact("nid"),
-            "left")
-          .select(fin("vec_id").as("qid"), col("rnk"), fin("nid"),
-            round(col("c"), 4).as("cos"),
-            coalesce(col("in_exact"), lit(0)).cast("int").as("in_exact"))
-          .orderBy(col("qid"), col("rnk"))
+        NnDescent.reportTopK(compacted.filter(col("vec_id") < 10),
+          exactTopK(liveE, NnDescent.ReportK))
       }),
 
     // IVF-index COMPACTION — qb5's claim carried to the SECOND index

@@ -329,8 +329,8 @@ object StreamingQueries {
 
     // Continuous sketch maintenance: the streaming twin of q0e — each
     // micro-batch's per-(day, event_type) HLL sketches fold into a
-    // VERSIONED persisted sketch table (state_v<B> from state_v<B-1> +
-    // batch B: replay-idempotent by layout, the labels_v<N> rule) and the
+    // VERSIONED persisted sketch table (generation B+1 from generation B
+    // + batch B: replay-idempotent by layout, StreamPipelines.Generations) and the
     // distinct-user estimates serve from the STORED sketches. Exact
     // anchors + deterministic ±5% flags — the q0e/q07 oracle rule
     // (register-max merge is order-independent, so the estimate can't

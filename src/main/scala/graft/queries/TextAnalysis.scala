@@ -2029,67 +2029,10 @@ object TextAnalysis {
                   AS DOUBLE) / COUNT(*), 6) + 0 AS avg_neg_logp
               FROM pr$sfx GROUP BY doc_id)"""
 
-  /** q8v: the trained KN model folded to ONE broadcastable row — a
-    * seen-bigram probability map, the w1 backoff-weight map, the
-    * continuation map, and the two perplexity-tercile cutoffs frozen
-    * from the TRAINING slice's own scores (the CCNet serve shape:
-    * model and cutoffs retrain on a slow cadence, the stream
-    * classifies row-locally against the frozen row). Map values are
-    * the EXACT doubles the batch path computes — seen-bigram P stores
-    * the full interpolated expression, lmap stores 0.75·N1+(w1·)/c1,
-    * cmap stores N1+(·w2)/types — so map-composed serve arithmetic
-    * reproduces qb1's per-occurrence doubles bit-for-bit. */
-  private[graft] def knModelFrame(dTrain: DataFrame): DataFrame = {
-    val toks = dTrain
-      .select(col("doc_id"), split(col("text"), " ").as("t"))
-      .filter(size(col("t")) >= 2)
-    val trb = toks.select(explode(expr(
-      "transform(sequence(1, size(t) - 1), i -> concat(t[i-1], ' ', t[i]))"))
-      .as("g"))
-    val bc = trb.groupBy(col("g")).agg(count(lit(1)).as("c12"))
-    val w1s = bc.groupBy(substring_index(col("g"), " ", 1).as("w1"))
-      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1fw"))
-    val w2s = bc.groupBy(substring_index(col("g"), " ", -1).as("w2"))
-      .agg(count(lit(1)).as("nctx"))
-    val nt = bc.agg(count(lit(1)).as("ntypes"))
-    val pmap = bc
-      .join(w1s, substring_index(col("g"), " ", 1) === col("w1"))
-      .join(w2s, substring_index(col("g"), " ", -1) === col("w2"))
-      .crossJoin(broadcast(nt))
-      .withColumn("p", greatest(
-        greatest(coalesce(col("c12"), lit(0L)) - lit(0.75), lit(0.0))
-          / col("c1")
-          + (lit(0.75) * col("n1fw") / col("c1"))
-            * (coalesce(col("nctx"), lit(0L)) * lit(1.0) / col("ntypes")),
-        lit(9.5367431640625e-7)))
-      .agg(map_from_entries(collect_list(struct(col("g"), col("p"))))
-        .as("pmap"))
-    val lmap = w1s
-      .withColumn("lw", lit(0.75) * col("n1fw") / col("c1"))
-      .agg(map_from_entries(collect_list(struct(col("w1"), col("lw"))))
-        .as("lmap"))
-    val cmap = w2s.crossJoin(broadcast(nt))
-      .withColumn("cw", col("nctx") * lit(1.0) / col("ntypes"))
-      .agg(map_from_entries(collect_list(struct(col("w2"), col("cw"))))
-        .as("cmap"))
-    // tercile cutoffs from the training slice's own scores: the score
-    // at global rank (n+2) div 3 and (2n+2) div 3 (StableIds rank —
-    // the same boundary ranks qb1's (rn-1)*3 div n bucketing yields)
-    val trScored = knScoreDocs(toks)
-    val nF = trScored.agg(count(lit(1)).as("n"))
-    val ranked = graft.operators.StableIds.assign(trScored,
-      Seq(col("avg_neg_logp"), col("doc_id")), 8, "rn")
-      .crossJoin(broadcast(nF))
-    val b1 = ranked.filter(col("rn") === expr("(n + 2) div 3"))
-      .select(col("avg_neg_logp").as("b1"))
-    val b2 = ranked.filter(col("rn") === expr("(2 * n + 2) div 3"))
-      .select(col("avg_neg_logp").as("b2"))
-    pmap.crossJoin(lmap).crossJoin(cmap)
-      .crossJoin(broadcast(b1)).crossJoin(broadcast(b2))
-  }
-
-  /** The [[knModelFrame]] model as narrow LOOKUP TABLES instead of three
-    * map columns — (pT (g, p), lT (w1, lw), cT (w2, cw), cuts (b1, b2)).
+  /** q8v's trained KN model as narrow LOOKUP TABLES instead of the
+    * three map columns of the one-row model frame it replaced
+    * (`KnServeSpec.knModelFrame`, kept as the spec's reference) —
+    * (pT (g, p), lT (w1, lw), cT (w2, cw), cuts (b1, b2)).
     * Values are built by the EXACT expressions the map variant stores, so
     * a broadcast-hash-join lookup returns bit-for-bit what
     * `element_at(map, key)` returns. The point is the lookup cost:
@@ -2101,7 +2044,7 @@ object TextAnalysis {
     * cutoffs chain executes eagerly inside StableIds' checkpoint and
     * would otherwise re-run the tokenize+count subtree per action (guide
     * §1.2 step 1). `KnServeSpec` pins the join scorer frame-identical to
-    * the [[knScoreCols]] map scorer. */
+    * the map scorer (`KnServeSpec.knScoreCols`). */
   private[graft] def knModelTables(
       dTrain: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val toks = dTrain
@@ -2148,7 +2091,8 @@ object TextAnalysis {
     (pT, lT, cT, cuts)
   }
 
-  /** The join-formulated twin of [[knScoreCols]]: score + classify a
+  /** The join-formulated twin of the map scorer (`KnServeSpec.knScoreCols`,
+    * kept as the spec's reference): score + classify a
     * (doc_id, text) BATCH against the [[knModelTables]] lookup tables —
     * explode the bigrams, probe the three tables via broadcast hash
     * joins (O(1) per probe vs element_at's linear map scan), fold per
@@ -2189,26 +2133,12 @@ object TextAnalysis {
           .otherwise("tail").as("bucket"))
 
   /** Per-doc KN scores (doc_id, n_bigrams, avg_neg_logp) for a
-    * (doc_id, t) token frame under in-scope stat frames — the exact
-    * batch scoring qb1 runs, reused for the model row's cutoffs. */
-  private def knScoreDocs(toks: DataFrame): DataFrame = {
-    val trb = toks.select(explode(expr(
-      "transform(sequence(1, size(t) - 1), i -> concat(t[i-1], ' ', t[i]))"))
-      .as("g"))
-    val bc = trb.groupBy(col("g")).agg(count(lit(1)).as("c12"))
-    val w1s = bc.groupBy(substring_index(col("g"), " ", 1).as("w1"))
-      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1fw"))
-    val w2s = bc.groupBy(substring_index(col("g"), " ", -1).as("w2"))
-      .agg(count(lit(1)).as("nctx"))
-    val nt = bc.agg(count(lit(1)).as("ntypes"))
-    knScoreDocs(toks, bc, w1s, w2s, nt)
-  }
-
-  /** [[knScoreDocs]] with CALLER-SUPPLIED stat frames — lets
+    * (doc_id, t) token frame under CALLER-SUPPLIED stat frames — the
+    * exact batch scoring qb1 runs, reused for the model's cutoffs: lets
     * [[knModelTables]] hand in the already-materialized `bc` so the
     * cutoffs chain reads checkpoint blocks instead of re-running the
     * tokenize+count subtree. */
-  private def knScoreDocs(toks: DataFrame, bc: DataFrame, w1s: DataFrame,
+  private[graft] def knScoreDocs(toks: DataFrame, bc: DataFrame, w1s: DataFrame,
       w2s: DataFrame, nt: DataFrame): DataFrame = {
     toks.select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(t) - 1), i -> concat(t[i-1], ' ', t[i]))"))
@@ -2231,37 +2161,6 @@ object TextAnalysis {
         round(sum(round(-log(col("p")), 9).cast("decimal(30,12)"))
           .cast("double") / count(lit(1)), 6).as("avg_neg_logp"))
   }
-
-  /** Row-local KN scoring + cutoff classification of a frame carrying
-    * (doc_id, text) AND the [[knModelFrame]] columns — one aggregate
-    * HOF over the doc's bigrams, zero shuffle, which is what lets the
-    * same columns serve inside a stateless streaming micro-batch plan
-    * (q8v). */
-  private[graft] def knScoreCols(withModel: DataFrame): DataFrame =
-    withModel
-      .withColumn("t", split(col("text"), " "))
-      .filter(size(col("t")) >= 2)
-      .withColumn("gs", expr(
-        "transform(sequence(1, size(t) - 1), i -> concat(t[i-1], ' ', t[i]))"))
-      .withColumn("wsum", expr(
-        """aggregate(gs, CAST(0 AS DECIMAL(30,12)), (acc, g) ->
-             CAST(acc + CAST(round(-ln(greatest(
-               coalesce(element_at(pmap, g),
-                 IF(element_at(lmap, substring_index(g, ' ', 1)) IS NOT NULL,
-                    element_at(lmap, substring_index(g, ' ', 1))
-                      * coalesce(element_at(cmap, substring_index(g, ' ', -1)),
-                          CAST(0.0 AS DOUBLE)),
-                    coalesce(element_at(cmap, substring_index(g, ' ', -1)),
-                      CAST(0.0 AS DOUBLE)))),
-               9.5367431640625e-7D)), 9) AS DECIMAL(30,12))
-             AS DECIMAL(30,12)))"""))
-      .withColumn("avg_neg_logp",
-        round(col("wsum").cast("double") / size(col("gs")), 6))
-      .select(col("doc_id"), size(col("gs")).cast("long").as("n_bigrams"),
-        col("avg_neg_logp"),
-        when(col("avg_neg_logp") <= col("b1"), "head")
-          .when(col("avg_neg_logp") <= col("b2"), "middle")
-          .otherwise("tail").as("bucket"))
 
   /** qa1's hashed-bigram feature stream over a (doc_id, source, text)
     * frame: one row per bigram OCCURRENCE with its 512-bucket id. The

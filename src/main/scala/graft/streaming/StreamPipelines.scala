@@ -67,11 +67,8 @@ object StreamPipelines {
     * join then reads the one cached row. At 100 TB this is also the
     * right production shape: the model retrains on a slow cadence and
     * the serving stream only ever sees the materialized frame. */
-  private def withFrozenModel[T](m: DataFrame)(body: DataFrame => T): T = {
-    val p = m.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    p.count()
-    try body(p) finally { p.unpersist(false); () }
-  }
+  private def withFrozenModel[T](m: DataFrame)(body: DataFrame => T): T =
+    withFrozenModels(Seq(m))(ps => body(ps.head))
 
   /** [[withFrozenModel]] for SEVERAL static frames at once (q8v's four
     * lookup tables): persist all, materialize all, unpersist all. */
@@ -141,18 +138,24 @@ object StreamPipelines {
     graft.connector.GraftDoc.readStream(s, path, maxCommitsPerTrigger = Some(1L),
       withOp = withOp)
 
+  /** A `withOp` [[cdcTail]] frame split by change type: its inserts, with
+    * `_id` cast to the long column `key` ahead of `cols`, and its
+    * deletes, as `key` alone. */
+  private def splitOps(cdc: DataFrame, key: String,
+      cols: String*): (DataFrame, DataFrame) = {
+    val id = col("_id").cast("long").as(key)
+    (cdc.filter(col("_op") === "insert").select(id +: cols.map(col): _*),
+      cdc.filter(col("_op") === "delete").select(id))
+  }
+
   /** Drain `stream` through `fold`, one call per micro-batch, and return
     * the highest batch id folded (−1 when no batch ran).
     *
     * The fold is a multi-step batch computation keyed by batch id, which
     * is what foreachBatch exists for. foreachBatch is at-least-once: a
-    * retried micro-batch re-arrives with the SAME batch id. Every fold
-    * therefore keys its generations off the batch id — generation v is
-    * read, generation v+1 (or a batch-keyed file) is written with
-    * overwrite — so a replay re-reads the untouched input generation and
-    * rewrites the same output, folding the batch exactly once; a local
-    * counter would fold it twice. The returned id names the final
-    * generation. */
+    * retried micro-batch re-arrives with the SAME batch id, so every
+    * fold keeps its state in [[Generations]], whose layout is keyed by
+    * that id; a local counter would fold a replay twice. */
   private[graft] def drainBatches(s: SparkSession, name: String,
       stream: DataFrame)(fold: (DataFrame, Long) => Unit): Long = {
     val last = new java.util.concurrent.atomic.AtomicLong(-1L)
@@ -165,18 +168,60 @@ object StreamPipelines {
     last.get
   }
 
-  /** Every batch-keyed generation a fold wrote under `glob`
-    * (`<tmp>/novel_b*`), read as one parquet relation. The glob is
-    * resolved here, in the order Spark's own expansion returns, so the
-    * reader is handed real directories: handed the pattern, Spark stats it
-    * as a path while probing for a streaming sink's metadata log and logs
-    * the miss with a full stack trace. With no match the pattern itself is
-    * read, which fails as before. */
-  private def readGenerations(s: SparkSession, glob: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(glob)
-    val dirs = Option(p.getFileSystem(s.sessionState.newHadoopConf()).globStatus(p))
-      .map(_.map(_.getPath.toString).toSeq).getOrElse(Nil)
-    s.read.parquet((if (dirs.isEmpty) Seq(glob) else dirs): _*)
+  /** The generation layout of one named piece of a CDC fold's state
+    * (`tomb`, `idx`, `g`, ...) under the fold's temp dir `tmp`: the one
+    * place that knows how [[drainBatches]]' replay rule maps to paths.
+    *
+    * Batch v reads generation v and writes generation v+1, with
+    * overwrite, so a replayed batch re-reads its untouched input and
+    * rewrites the same output: it folds exactly once. Generation 0 is the
+    * state before the first batch — written by the fold's build at
+    * `in(0)`, an empty [[seed]], or the external `base` path, read in
+    * place — and after a drain that returned `last`, `out(last)` /
+    * `after(last)` is the final generation (generation 0 when no batch
+    * ran). A piece that keeps only each batch's delta is read back as
+    * the union of its generations, [[parts]]. */
+  private[graft] final case class Generations(s: SparkSession, tmp: String,
+      name: String, base: Option[String] = None) {
+    /** Generation v: batch v's input. */
+    def in(v: Long): String =
+      base.filter(_ => v == 0).getOrElse(s"$tmp/${name}_v$v")
+
+    /** Generation v+1: batch v's output. */
+    def out(v: Long): String = in(v + 1)
+
+    def read(v: Long): DataFrame = s.read.parquet(in(v))
+
+    def after(v: Long): DataFrame = s.read.parquet(out(v))
+
+    def write(v: Long, df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(out(v))
+
+    /** Batch v's step: generation v+1 = `f`(generation v). */
+    def step(v: Long)(f: DataFrame => DataFrame): Unit = write(v, f(read(v)))
+
+    /** Batch v's tombstone step: generation v+1 = generation v ∪ `del`. */
+    def tombstone(v: Long, del: DataFrame): Unit = step(v)(_.unionByName(del))
+
+    /** Writes an empty generation 0 with the columns of the DDL `schema`. */
+    def seed(schema: String): Unit =
+      s.range(0).select(org.apache.spark.sql.types.StructType.fromDDL(schema)
+          .map(f => col("id").cast(f.dataType).as(f.name)): _*)
+        .write.mode("overwrite").parquet(in(0))
+
+    /** Every generation written, read as one parquet relation. The glob
+      * is resolved here, in the order Spark's own expansion returns, so
+      * the reader is handed real directories: handed the pattern, Spark
+      * stats it as a path while probing for a streaming sink's metadata
+      * log and logs the miss with a full stack trace. With no match the
+      * pattern itself is read, which fails. */
+    def parts: DataFrame = {
+      val glob = s"$tmp/${name}_v*"
+      val p = new org.apache.hadoop.fs.Path(glob)
+      val dirs = Option(p.getFileSystem(s.sessionState.newHadoopConf()).globStatus(p))
+        .map(_.map(_.getPath.toString).toSeq).getOrElse(Nil)
+      s.read.parquet((if (dirs.isEmpty) Seq(glob) else dirs): _*)
+    }
   }
 
   /** Run a one-shot (AvailableNow) streaming query into a memory sink and
@@ -809,7 +854,7 @@ object StreamPipelines {
     * scores and classifies per micro-batch via three broadcast-hash
     * probes over its bigrams plus a batch-local per-doc fold — zero
     * state rows; each batch's classified docs land in a batch-keyed
-    * file (overwrite → replay-idempotent, the labels_v<N> rule). The
+    * file (overwrite → replay-idempotent, the [[Generations]] replay rule). The
     * table values are the exact doubles the batch path computes and the
     * per-doc sum is over exact DECIMAL(30,12) addends, so serve
     * arithmetic reproduces qb1's scoring bit-for-bit (the earlier
@@ -829,17 +874,17 @@ object StreamPipelines {
       incoming.filter(pmod(col("doc_id"), lit(2)) === 1), "doc_id", s"$tmp/in")
     val (pT0, lT0, cT0, cuts0) = graft.queries.TextAnalysis
       .knModelTables(docs.filter(col("doc_id") < 250))
+    val scored = Generations(s, tmp, "scored")
     withFrozenModels(Seq(pT0, lT0, cT0, cuts0)) { ms =>
       val Seq(pT, lT, cT, cuts) = ms
       drainBatches(s, "kn_serve", cdcTail(s, s"$tmp/in")
           .select(col("_id").cast("long").as("doc_id"), col("text"))) {
-        (batch, batchId) =>
-          graft.queries.TextAnalysis
-            .knScoreBatch(batch, pT, lT, cT, cuts)
-            .write.mode("overwrite").parquet(s"$tmp/scored_b$batchId")
+        (batch, v) =>
+          scored.write(v, graft.queries.TextAnalysis
+            .knScoreBatch(batch, pT, lT, cT, cuts))
       }
     }
-    readGenerations(s, s"$tmp/scored_b*")
+    scored.parts
       .orderBy(col("doc_id"))
   }
 
@@ -1139,8 +1184,9 @@ object StreamPipelines {
     val standing = pairs.filter(!isNew(col("id_a")) && !isNew(col("id_b")))
     val delta = pairs.filter(isNew(col("id_a")) || isNew(col("id_b")))
     // standing labels: batch CC, persisted as version 0
+    val labels = Generations(s, tmp, "labels")
     ConnectedComponents.run(standing)
-      .write.mode("overwrite").parquet(s"$tmp/labels_v0")
+      .write.mode("overwrite").parquet(labels.in(0))
     // the CDC edge table: delta edges land in TWO commits (ids are < 1e6
     // at every test SF, so the packed edge key is collision-free)
     val keyed = delta.select(
@@ -1154,12 +1200,9 @@ object StreamPipelines {
       "edge_key", s"$tmp/edges")
     val last = drainBatches(s, "cc_incr",
         cdcTail(s, s"$tmp/edges").select(col("id_a"), col("id_b"))) {
-      (batch, batchId) =>
-        val cur = s.read.parquet(s"$tmp/labels_v$batchId")
-        ConnectedComponents.incremental(cur, batch)
-          .write.mode("overwrite").parquet(s"$tmp/labels_v${batchId + 1}")
+      (batch, v) => labels.step(v)(ConnectedComponents.incremental(_, batch))
     }
-    s.read.parquet(s"$tmp/labels_v${last + 1}")
+    labels.after(last)
       .select(col("node").as("doc_id"), col("component"))
       .orderBy(col("doc_id"))
   }
@@ -1183,8 +1226,9 @@ object StreamPipelines {
     val tmp = graft.TempDirs.create("graft_mh_maint")
     val docs = s.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
+    val idx = Generations(s, tmp, "idx")
     DedupQueries.buildMinhashIndex(
-      s, docs.filter(col("doc_id") < 250), s"$tmp/idx_v0")
+      s, docs.filter(col("doc_id") < 250), idx.in(0))
     // ingested batches: docs 250-374 land in two commits
     val incoming = docs.filter(col("doc_id") >= 250 && col("doc_id") < 375)
     graft.connector.GraftDoc.write(
@@ -1192,15 +1236,13 @@ object StreamPipelines {
     graft.connector.GraftDoc.write(
       incoming.filter(pmod(col("doc_id"), lit(2)) === 1), "doc_id", s"$tmp/in")
     // a double fold would corrupt the DF drop-list cut, so the index
-    // generations are keyed by batch id (see drainBatches)
+    // generations are keyed by batch id (see Generations)
     val last = drainBatches(s, "mh_maint", cdcTail(s, s"$tmp/in")
         .select(col("_id").cast("long").as("doc_id"), col("text"))) {
-      (batch, batchId) =>
-        DedupQueries.mergeMinhashIndex(
-          s, batch, s"$tmp/idx_v$batchId", s"$tmp/idx_v${batchId + 1}")
+      (batch, v) => DedupQueries.mergeMinhashIndex(s, batch, idx.in(v), idx.out(v))
     }
     DedupQueries.serveMinhashBatch(s,
-      docs.filter(col("doc_id") >= 375), s"$tmp/idx_v${last + 1}")
+      docs.filter(col("doc_id") >= 375), idx.out(last))
   }
 
   /** q8x: streaming suffix-structure maintenance — qau's rank table as
@@ -1213,7 +1255,7 @@ object StreamPipelines {
     * the per-batch merge renumbers only the KEY DICTIONARY (distinct
     * 16-grams, ≪ corpus positions), never re-running a doubling round
     * over old positions. Generations are batch-id-keyed files (the
-    * labels_v<N> replay rule). After the drain, positions serve through
+    * [[Generations]] replay rule). After the drain, positions serve through
     * the FINAL dictionary; the oracle replays qau's doubling rounds
     * over the FULL corpus — hash equality proves the streaming
     * key-merge converged bit-exactly to the prefix-doubling structure. */
@@ -1222,10 +1264,11 @@ object StreamPipelines {
     val tmp = graft.TempDirs.create("graft_sfx_stream")
     val docs = s.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
+    val (posG, dictG) = (Generations(s, tmp, "pos"), Generations(s, tmp, "dict"))
     SuffixRanks.suffixKeys(docs.filter(col("doc_id") < 250))
-      .write.mode("overwrite").parquet(s"$tmp/pos_b0")
-    SuffixRanks.rankDict(s.read.parquet(s"$tmp/pos_b0"))
-      .write.mode("overwrite").parquet(s"$tmp/dict_v0")
+      .write.mode("overwrite").parquet(posG.in(0))
+    SuffixRanks.rankDict(posG.read(0))
+      .write.mode("overwrite").parquet(dictG.in(0))
     val incoming = docs.filter(col("doc_id") >= 250)
     graft.connector.GraftDoc.write(
       incoming.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", s"$tmp/in")
@@ -1234,15 +1277,12 @@ object StreamPipelines {
     val last = drainBatches(s, "sfx_merge", cdcTail(s, s"$tmp/in")
         .select(col("_id").cast("long").as("doc_id"), col("text"))) {
       (batch, v) =>
-        SuffixRanks.suffixKeys(batch)
-          .write.mode("overwrite").parquet(s"$tmp/pos_b${v + 1}")
-        val old = s.read.parquet(s"$tmp/dict_v$v").select(col("key"))
-        SuffixRanks.rankDict(old.unionByName(
-            s.read.parquet(s"$tmp/pos_b${v + 1}").select(col("key"))))
-          .write.mode("overwrite").parquet(s"$tmp/dict_v${v + 1}")
+        posG.write(v, SuffixRanks.suffixKeys(batch))
+        dictG.step(v)(old => SuffixRanks.rankDict(old.select(col("key"))
+          .unionByName(posG.after(v).select(col("key")))))
     }
-    val pos = readGenerations(s, s"$tmp/pos_b*")
-    val dict = s.read.parquet(s"$tmp/dict_v${last + 1}")
+    val pos = posG.parts
+    val dict = dictG.after(last)
     // group sizes from ONE partial-aggregated pass over the narrow key
     // column (this pipeline maintains no counts table — qb8/qc5 do);
     // the corpus frame is then only touched by the sample filter
@@ -1260,7 +1300,7 @@ object StreamPipelines {
     * centroids — one broadcast join per batch, O(|batch|·k), the
     * standing memberships never touched — appending a batch-id-keyed
     * membership generation (overwrite → replay-idempotent, the
-    * labels_v<N> rule). After the drain the q66 probe serves over base
+    * [[Generations]] replay rule). After the drain the q66 probe serves over base
     * ∪ appended generations. Shares q5m's oracle verbatim (path-
     * parameterized): the oracle re-derives the delta assignment from
     * the raw table, so the drained per-batch update must land exactly
@@ -1285,15 +1325,14 @@ object StreamPipelines {
       delta.filter(pmod(col("vec_id"), lit(20)) === 0), "vec_id", s"$tmp/in")
     graft.connector.GraftDoc.write(
       delta.filter(pmod(col("vec_id"), lit(20)) === 10), "vec_id", s"$tmp/in")
+    val assign = Generations(s, tmp, "assign")
     drainBatches(s, "ivf_update", cdcTail(s, s"$tmp/in")
         .select(col("_id").cast("long").as("vec_id"), col("embedding"))) {
-      (batch, batchId) =>
-        // one broadcast join per batch against the persisted centroids
-        SimilarityQueries.assignTo(batch, ic)
-          .write.mode("overwrite").parquet(s"$tmp/assign_b$batchId")
+      // one broadcast join per batch against the persisted centroids
+      (batch, v) => assign.write(v, SimilarityQueries.assignTo(batch, ic))
     }
     val ia = s.read.parquet(s"$indexPath/assign_base")
-      .unionByName(readGenerations(s, s"$tmp/assign_b*"))
+      .unionByName(assign.parts)
     SimilarityQueries.ivfServe(e, ic, ia)
   }
 
@@ -1304,10 +1343,12 @@ object StreamPipelines {
     * generation's graph — seed beams + back-edge re-top-K + one local
     * refinement round, all N-independent per inserted node — writing a
     * batch-id-keyed full-graph generation (a replayed batch re-reads
-    * the untouched generation v−1 and overwrites generation v:
-    * idempotent, the q8r rule). Unlike qc6/qc7, sequential insert folds
-    * are NOT union-equivalent (gen 2's beams WALK the lists gen 1
-    * re-top-K'd), so the oracle unrolls BOTH generations in SQL against
+    * the untouched generation v and overwrites generation v+1:
+    * idempotent, the [[Generations]] replay rule; generation 0 is the
+    * base graph at `graphPath`, read in place). Unlike qc6/qc7,
+    * sequential insert folds are NOT union-equivalent (gen 2's beams
+    * WALK the lists gen 1 re-top-K'd), so the oracle unrolls BOTH
+    * generations in SQL against
     * the persisted base graph — gen 2 replays against gen 1's
     * SQL-derived output, never the pipeline's persisted intermediate,
     * so a wrong batch-1 fold cannot hide behind persistence
@@ -1332,33 +1373,18 @@ object StreamPipelines {
       delta.filter(pmod(col("vec_id"), lit(2)) === 0), "vec_id", s"$tmp/in")
     graft.connector.GraftDoc.write(
       delta.filter(pmod(col("vec_id"), lit(2)) === 1), "vec_id", s"$tmp/in")
+    val g = Generations(s, tmp, "g", base = Some(graphPath))
     val last = drainBatches(s, "graph_insert", cdcTail(s, s"$tmp/in")
         .select(col("_id").cast("long").as("vec_id"), col("embedding"))) {
-      (batch, v) =>
-        val prev = if (v == 0) s.read.parquet(graphPath)
-          else s.read.parquet(s"$tmp/g_b${v - 1}")
-        NnDescent.insertDeltaOf(e, prev, nBase,
-            batch.select(col("vec_id"), col("embedding")))
-          .write.mode("overwrite").parquet(s"$tmp/g_b$v")
+      (batch, v) => g.step(v)(NnDescent.insertDeltaOf(e, _, nBase,
+        batch.select(col("vec_id"), col("embedding"))))
     }
     // qb3's sampled reporting shape, from the FINAL generation
-    val g2 = s.read.parquet(s"$tmp/g_b$last")
     val qS = e.filter(col("vec_id") >= nBase &&
       pmod(col("vec_id"), lit(NnDescent.FlagSampleMod)) === 0)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("c").desc, col("nid"))
-    val fin = g2.join(qS.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= NnDescent.ReportK)
-    val exact = SimilarityQueries.exactTopKOf(e, NnDescent.ReportK, qS)
-      .withColumn("in_exact", lit(1))
-    fin.join(exact,
-        fin("vec_id") === exact("qid") && fin("nid") === exact("nid"),
-        "left")
-      .select(fin("vec_id").as("qid"), col("rnk"), fin("nid"),
-        round(col("c"), 4).as("cos"),
-        coalesce(col("in_exact"), lit(0)).cast("int").as("in_exact"))
-      .orderBy(col("qid"), col("rnk"))
+    NnDescent.reportTopK(
+      g.after(last).join(qS.select(col("vec_id")), Seq("vec_id"), "left_semi"),
+      SimilarityQueries.exactTopKOf(e, NnDescent.ReportK, qS))
   }
 
   /** qc7: streaming PQ index MAINTENANCE — the qc6 verb carried to the
@@ -1398,15 +1424,15 @@ object StreamPipelines {
       delta.filter(pmod(col("vec_id"), lit(20)) === 0), "vec_id", s"$tmp/in")
     graft.connector.GraftDoc.write(
       delta.filter(pmod(col("vec_id"), lit(20)) === 10), "vec_id", s"$tmp/in")
+    val codesG = Generations(s, tmp, "codes")
     drainBatches(s, "pq_update", cdcTail(s, s"$tmp/in")
         .select(col("_id").cast("long").as("vec_id"), col("embedding"))) {
-      (batch, batchId) =>
-        // per-batch argmin encode against the persisted codebook
-        SimilarityQueries.pqCodes(SimilarityQueries.pqSub(batch), icb)
-          .write.mode("overwrite").parquet(s"$tmp/codes_b$batchId")
+      // per-batch argmin encode against the persisted codebook
+      (batch, v) => codesG.write(v,
+        SimilarityQueries.pqCodes(SimilarityQueries.pqSub(batch), icb))
     }
     val codes = s.read.parquet(s"$tmp/base_codes")
-      .unionByName(readGenerations(s, s"$tmp/codes_b*"))
+      .unionByName(codesG.parts)
     val qf = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     SimilarityQueries.pqServeFor(qf, codes, icb)
@@ -1459,26 +1485,21 @@ object StreamPipelines {
     graft.connector.GraftDoc.write(
       delta.filter(pmod(col("vec_id"), lit(20)) === 10), "vec_id", s"$tmp/in")
     // v0 tombstone state: empty
-    s.range(0).select(col("id").as("vec_id"))
-      .write.mode("overwrite").parquet(s"$tmp/tomb_v0")
+    val (assign, tombG) = (Generations(s, tmp, "assign"), Generations(s, tmp, "tomb"))
+    tombG.seed("vec_id long")
     val last = drainBatches(s, "ivf_del", cdcTail(s, s"$tmp/in", withOp = true)) {
       (batch, v) =>
-        val ins = batch.filter(col("_op") === "insert")
-          .select(col("_id").cast("long").as("vec_id"), col("embedding"))
-        val del = batch.filter(col("_op") === "delete")
-          .select(col("_id").cast("long").as("vec_id"))
+        val (ins, del) = splitOps(batch, "vec_id", "embedding")
         // inserts: one broadcast join against the persisted centroids
-        SimilarityQueries.assignTo(ins, ic)
-          .write.mode("overwrite").parquet(s"$tmp/assign_b$v")
+        assign.write(v, SimilarityQueries.assignTo(ins, ic))
         // deletes: versioned tombstone fold, O(|batch|) rows
-        s.read.parquet(s"$tmp/tomb_v$v").unionByName(del)
-          .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
+        tombG.tombstone(v, del)
     }
-    val tomb = s.read.parquet(s"$tmp/tomb_v${last + 1}")
+    val tomb = tombG.after(last)
     val nT = Some(tomb.count())
     val ia = graft.operators.Tombstones.antiJoin(
       s.read.parquet(s"$indexPath/assign_base")
-        .unionByName(readGenerations(s, s"$tmp/assign_b*")),
+        .unionByName(assign.parts),
       "vec_id", tomb, nT)
     val q = graft.operators.Tombstones.antiJoin(
         e.filter(col("vec_id") < 10), "vec_id", tomb, nT)
@@ -1522,24 +1543,20 @@ object StreamPipelines {
         .select(col("vec_id")))
     graft.connector.GraftDoc.write(
       delta.filter(pmod(col("vec_id"), lit(20)) === 10), "vec_id", s"$tmp/in")
-    s.range(0).select(col("id").as("vec_id"))
-      .write.mode("overwrite").parquet(s"$tmp/tomb_v0")
+    val (codesG, tombG) = (Generations(s, tmp, "codes"), Generations(s, tmp, "tomb"))
+    tombG.seed("vec_id long")
     val last = drainBatches(s, "pq_del", cdcTail(s, s"$tmp/in", withOp = true)) {
       (batch, v) =>
-        val ins = batch.filter(col("_op") === "insert")
-          .select(col("_id").cast("long").as("vec_id"), col("embedding"))
-        val del = batch.filter(col("_op") === "delete")
-          .select(col("_id").cast("long").as("vec_id"))
-        SimilarityQueries.pqCodes(SimilarityQueries.pqSub(ins), icb)
-          .write.mode("overwrite").parquet(s"$tmp/codes_b$v")
-        s.read.parquet(s"$tmp/tomb_v$v").unionByName(del)
-          .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
+        val (ins, del) = splitOps(batch, "vec_id", "embedding")
+        codesG.write(v,
+          SimilarityQueries.pqCodes(SimilarityQueries.pqSub(ins), icb))
+        tombG.tombstone(v, del)
     }
-    val tomb = s.read.parquet(s"$tmp/tomb_v${last + 1}")
+    val tomb = tombG.after(last)
     val nT = Some(tomb.count())
     val codes = graft.operators.Tombstones.antiJoin(
       s.read.parquet(s"$tmp/base_codes")
-        .unionByName(readGenerations(s, s"$tmp/codes_b*")),
+        .unionByName(codesG.parts),
       "vec_id", tomb, nT)
     val qf = graft.operators.Tombstones.antiJoin(
         e.filter(col("vec_id") < 10), "vec_id", tomb, nT)
@@ -1559,8 +1576,8 @@ object StreamPipelines {
     * candidates from the dead nodes' former out-lists in the PREVIOUS
     * generation's graph (FreshDiskANN's rule, ≤K² per affected node,
     * N-independent) — writing batch-keyed full-graph generations (a
-    * replayed batch re-reads the untouched generation v−1 and
-    * overwrites generation v: idempotent, the qc8 rule). Sequential
+    * replayed batch re-reads the untouched generation v and
+    * overwrites generation v+1: idempotent, the qc8 rule). Sequential
     * repairs are NOT one-shot-equivalent (gen 1 may patch a hole with a
     * node gen 2 then deletes), so the oracle unrolls BOTH generations
     * against the persisted base graph, gen 2 replaying over gen 1's
@@ -1592,51 +1609,34 @@ object StreamPipelines {
       e.filter(pmod(col("vec_id"), lit(NnDescent.DeleteMod * 2))
           === NnDescent.StreamDeleteRes2)
         .select(col("vec_id")))
-    s.range(0).select(col("id").as("vec_id"))
-      .write.mode("overwrite").parquet(s"$tmp/tomb_v0")
-    val fv = drainBatches(s, "graph_del", cdcTail(s, s"$tmp/tbl", withOp = true)) {
+    val g = Generations(s, tmp, "g", base = Some(graphPath))
+    val (tch, tomb) = (Generations(s, tmp, "tch"), Generations(s, tmp, "tomb"))
+    tomb.seed("vec_id long")
+    val last = drainBatches(s, "graph_del", cdcTail(s, s"$tmp/tbl", withOp = true)) {
       (batch, v) =>
-        val del = batch.filter(col("_op") === "delete")
-          .select(col("_id").cast("long").as("vec_id"))
-        val prev = if (v == 0) s.read.parquet(graphPath)
-          else s.read.parquet(s"$tmp/g_b${v - 1}")
+        val (_, del) = splitOps(batch, "vec_id")
+        val prev = g.read(v)
         // the batch's affected survivors, recorded BEFORE the repair (the
         // reporting set — repair work touches exactly these lists); the
         // snapshot batch's set is empty
-        prev.join(broadcast(del), Seq("vec_id"), "left_anti")
+        tch.write(v, prev.join(broadcast(del), Seq("vec_id"), "left_anti")
           .join(broadcast(del.select(col("vec_id").as("nid"))),
             Seq("nid"), "left_semi")
-          .select(col("vec_id")).distinct()
-          .write.mode("overwrite").parquet(s"$tmp/tch_b$v")
-        NnDescent.deleteRepairOf(e, prev, del)
-          .write.mode("overwrite").parquet(s"$tmp/g_b$v")
-        s.read.parquet(s"$tmp/tomb_v$v").unionByName(del)
-          .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
+          .select(col("vec_id")).distinct())
+        g.write(v, NnDescent.deleteRepairOf(e, prev, del))
+        tomb.tombstone(v, del)
     }
-    val g2 = s.read.parquet(s"$tmp/g_b$fv")
+    val g2 = g.after(last)
     // sampled touched SURVIVORS: a gen-1-touched node deleted by gen 2
     // gets no serve (anti join against the final tombstone set)
-    val tchAll = readGenerations(s, s"$tmp/tch_b*")
-      .join(s.read.parquet(s"$tmp/tomb_v${fv + 1}"),
-        Seq("vec_id"), "left_anti")
+    val tchAll = tch.parts
+      .join(tomb.after(last), Seq("vec_id"), "left_anti")
       .filter(pmod(col("vec_id"), lit(NnDescent.FlagSampleMod)) === 0)
       .distinct()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("c").desc, col("nid"))
-    val fin = g2.join(tchAll, Seq("vec_id"), "left_semi")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= NnDescent.ReportK)
     val surE = e.filter(pmod(col("vec_id"), lit(NnDescent.DeleteMod))
       =!= NnDescent.DeleteRes)
-    val exact = SimilarityQueries.exactTopKOf(surE, NnDescent.ReportK, tchAll)
-      .withColumn("in_exact", lit(1))
-    fin.join(exact,
-        fin("vec_id") === exact("qid") && fin("nid") === exact("nid"),
-        "left")
-      .select(fin("vec_id").as("qid"), col("rnk"), fin("nid"),
-        round(col("c"), 4).as("cos"),
-        coalesce(col("in_exact"), lit(0)).cast("int").as("in_exact"))
-      .orderBy(col("qid"), col("rnk"))
+    NnDescent.reportTopK(g2.join(tchAll, Seq("vec_id"), "left_semi"),
+      SimilarityQueries.exactTopKOf(surE, NnDescent.ReportK, tchAll))
   }
 
   /** qd4: the FULL CDC lifecycle for the graph index on ONE stream —
@@ -1682,22 +1682,19 @@ object StreamPipelines {
       e.filter(dead).select(col("vec_id")))
     graft.connector.GraftDoc.write(
       delta.filter(pmod(col("vec_id"), lit(2)) === 1), "vec_id", s"$tmp/in")
-    s.range(0).select(col("id").as("vec_id"))
-      .write.mode("overwrite").parquet(s"$tmp/tomb_v0")
+    val g = Generations(s, tmp, "g", base = Some(graphPath))
+    val (tch, tomb) = (Generations(s, tmp, "tch"), Generations(s, tmp, "tomb"))
+    tomb.seed("vec_id long")
     // running tombstone cardinality, threaded into the folds so the
     // Tombstones joins never pay a fallback count() action (v0 is the
     // known-empty frame; each batch adds its own delete count — one
     // cheap action on the in-batch frame replacing two frame counts)
     val tombTotal = new java.util.concurrent.atomic.AtomicLong(0L)
-    val fv = drainBatches(s, "graph_cdc", cdcTail(s, s"$tmp/in", withOp = true)) {
+    val last = drainBatches(s, "graph_cdc", cdcTail(s, s"$tmp/in", withOp = true)) {
       (batch, v) =>
-        val ins = batch.filter(col("_op") === "insert")
-          .select(col("_id").cast("long").as("vec_id"), col("embedding"))
-        val del = batch.filter(col("_op") === "delete")
-          .select(col("_id").cast("long").as("vec_id"))
-        val prev = if (v == 0) s.read.parquet(graphPath)
-          else s.read.parquet(s"$tmp/g_b${v - 1}")
-        val prevTomb = s.read.parquet(s"$tmp/tomb_v$v")
+        val (ins, del) = splitOps(batch, "vec_id", "embedding")
+        val prev = g.read(v)
+        val prevTomb = tomb.read(v)
         // one verb per commit here, but the fold composes both for
         // generality (inserts before deletes — the qc0 order): each half
         // is the identity on an empty frame
@@ -1713,37 +1710,22 @@ object StreamPipelines {
             Some(prevTomb), Some(tombTotal.get())))
         // touched survivors recorded BEFORE the repair (qd1's reporting
         // set; empty on insert-only batches)
-        inserted.join(broadcast(del), Seq("vec_id"), "left_anti")
+        tch.write(v, inserted.join(broadcast(del), Seq("vec_id"), "left_anti")
           .join(broadcast(del.select(col("vec_id").as("nid"))),
             Seq("nid"), "left_semi")
-          .select(col("vec_id")).distinct()
-          .write.mode("overwrite").parquet(s"$tmp/tch_b$v")
-        NnDescent.deleteRepairOf(e, inserted, del, Some(nDel))
-          .write.mode("overwrite").parquet(s"$tmp/g_b$v")
-        prevTomb.unionByName(del)
-          .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
+          .select(col("vec_id")).distinct())
+        g.write(v, NnDescent.deleteRepairOf(e, inserted, del, Some(nDel)))
+        // the tombstone step over the generation already read above
+        tomb.write(v, prevTomb.unionByName(del))
         tombTotal.addAndGet(nDel)
     }
-    val gFin = s.read.parquet(s"$tmp/g_b$fv")
+    val gFin = g.after(last)
     val rpt = delta.select(col("vec_id"))
-      .unionByName(readGenerations(s, s"$tmp/tch_b*"))
+      .unionByName(tch.parts)
       .filter(pmod(col("vec_id"), lit(NnDescent.FlagSampleMod)) === 0)
       .distinct()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("c").desc, col("nid"))
-    val fin = gFin.join(rpt, Seq("vec_id"), "left_semi")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= NnDescent.ReportK)
-    val liveE = e.filter(!dead)
-    val exact = SimilarityQueries.exactTopKOf(liveE, NnDescent.ReportK, rpt)
-      .withColumn("in_exact", lit(1))
-    fin.join(exact,
-        fin("vec_id") === exact("qid") && fin("nid") === exact("nid"),
-        "left")
-      .select(fin("vec_id").as("qid"), col("rnk"), fin("nid"),
-        round(col("c"), 4).as("cos"),
-        coalesce(col("in_exact"), lit(0)).cast("int").as("in_exact"))
-      .orderBy(col("qid"), col("rnk"))
+    NnDescent.reportTopK(gFin.join(rpt, Seq("vec_id"), "left_semi"),
+      SimilarityQueries.exactTopKOf(e.filter(!dead), NnDescent.ReportK, rpt))
   }
 
   /** qd5: streaming MinHash index maintenance under DELETES — the LAST
@@ -1778,8 +1760,9 @@ object StreamPipelines {
     val tmp = graft.TempDirs.create("graft_mh_del_stream")
     val d = s.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
+    val (idx, merged) = (Generations(s, tmp, "idx"), Generations(s, tmp, "m"))
     DedupQueries.buildMinhashIndex(
-      s, d.filter(col("doc_id") < 250), s"$tmp/idx_v0")
+      s, d.filter(col("doc_id") < 250), idx.in(0))
     val incoming = d.filter(col("doc_id") >= 250 && col("doc_id") < 375)
     // the CDC tail: insert / delete sweep / insert / delete sweep —
     // each sweep hits only ids already persisted or streamed, so the
@@ -1798,10 +1781,7 @@ object StreamPipelines {
         .select(col("doc_id")))
     val last = drainBatches(s, "mh_del", cdcTail(s, s"$tmp/in", withOp = true)) {
       (batch, v) =>
-        val ins = batch.filter(col("_op") === "insert")
-          .select(col("_id").cast("long").as("doc_id"), col("text"))
-        val del = batch.filter(col("_op") === "delete")
-          .select(col("_id").cast("long").as("doc_id"))
+        val (ins, del) = splitOps(batch, "doc_id", "text")
         // one verb per commit here, but the fold composes both for
         // generality (inserts merge first — the qc0 order — then deletes
         // compact the merged result). The identity half is SKIPPED rather
@@ -1811,24 +1791,23 @@ object StreamPipelines {
         // compaction's threaded tombstone cardinality.
         val nIns = ins.count()
         val nDel = del.count()
-        val merged =
-          if (nIns == 0) s"$tmp/idx_v$v"
+        val mergedPath =
+          if (nIns == 0) idx.in(v)
           else {
-            val out = if (nDel == 0) s"$tmp/idx_v${v + 1}" else s"$tmp/m_b$v"
-            DedupQueries.mergeMinhashIndex(s, ins, s"$tmp/idx_v$v", out)
+            val out = if (nDel == 0) idx.out(v) else merged.out(v)
+            DedupQueries.mergeMinhashIndex(s, ins, idx.in(v), out)
             out
           }
         if (nDel > 0)
-          DedupQueries.compactMinhashIndex(s, del, merged,
-            s"$tmp/idx_v${v + 1}", tombCount = Some(nDel))
+          DedupQueries.compactMinhashIndex(s, del, mergedPath,
+            idx.out(v), tombCount = Some(nDel))
         else if (nIns == 0)
           // an empty redelivered commit: carry the generation forward so
           // the chain stays batch-id-keyed
-          DedupQueries.mergeMinhashIndex(
-            s, ins, s"$tmp/idx_v$v", s"$tmp/idx_v${v + 1}")
+          DedupQueries.mergeMinhashIndex(s, ins, idx.in(v), idx.out(v))
     }
     DedupQueries.serveMinhashBatch(s,
-      d.filter(col("doc_id") >= 375), s"$tmp/idx_v${last + 1}")
+      d.filter(col("doc_id") >= 375), idx.out(last))
   }
 
   /** q8g: streaming ANN serve from a PERSISTED index — the online half of
@@ -1840,7 +1819,7 @@ object StreamPipelines {
     * corpus is touched only through the probed cells' id joins, and the
     * build pipeline never re-runs. Per-batch results land in
     * batch-id-keyed files (overwrite), so a replayed batch rewrites the
-    * same file — idempotent by layout, the labels_v<N> rule. */
+    * same file — idempotent by layout, the [[Generations]] replay rule. */
   def docStreamAnnServe(s: SparkSession, sfDir: String): DataFrame = {
     import graft.queries.SimilarityQueries
     val tmp = graft.TempDirs.create("graft_ann_serve_stream")
@@ -1855,14 +1834,13 @@ object StreamPipelines {
       q.filter(pmod(col("vec_id"), lit(2)) === 0), "vec_id", s"$tmp/queries")
     val ic = s.read.parquet(s"$tmp/cent")
     val ia = s.read.parquet(s"$tmp/assign")
+    val served = Generations(s, tmp, "served")
     drainBatches(s, "ann_serve", cdcTail(s, s"$tmp/queries")
         // the sink hoisted vec_id into the string `_id` key (P2's rule)
         .select(col("_id").cast("long").as("qid"), col("embedding").as("qe"))) {
-      (batch, batchId) =>
-        SimilarityQueries.ivfServeFor(batch, e, ic, ia)
-          .write.mode("overwrite").parquet(s"$tmp/served_b$batchId")
+      (batch, v) => served.write(v, SimilarityQueries.ivfServeFor(batch, e, ic, ia))
     }
-    readGenerations(s, s"$tmp/served_b*")
+    served.parts
       .orderBy(col("qid"), col("rnk"))
   }
 
@@ -1878,7 +1856,7 @@ object StreamPipelines {
     * state rows; the graph is a parquet read, so no per-trigger
     * retrain — the q8p lesson pre-applied). Per-batch results land in
     * batch-id-keyed files (overwrite → replay idempotent, the
-    * labels_v<N> rule); the drained union must be indistinguishable
+    * [[Generations]] replay rule); the drained union must be indistinguishable
     * from the batch walk's final beam — the oracle is qat's replay
     * CTEs, final hop only. */
   def docStreamGraphServe(s: SparkSession, sfDir: String,
@@ -1893,14 +1871,13 @@ object StreamPipelines {
       q.filter(pmod(col("vec_id"), lit(2)) === 1), "vec_id", s"$tmp/queries")
     graft.connector.GraftDoc.write(
       q.filter(pmod(col("vec_id"), lit(2)) === 0), "vec_id", s"$tmp/queries")
+    val servedG = Generations(s, tmp, "served")
     drainBatches(s, "graph_serve", cdcTail(s, s"$tmp/queries")
         // the sink hoisted vec_id into the string `_id` key (P2's rule)
         .select(col("_id").cast("long").as("qid"), col("embedding").as("qe"))) {
-      (batch, batchId) =>
-        NnDescent.beamServeFor(batch, e, g)
-          .write.mode("overwrite").parquet(s"$tmp/served_b$batchId")
+      (batch, v) => servedG.write(v, NnDescent.beamServeFor(batch, e, g))
     }
-    val served = readGenerations(s, s"$tmp/served_b*")
+    val served = servedG.parts
     val exact = graft.queries.SimilarityQueries
       .exactTopK(e, NnDescent.ReportK)
       .withColumn("in_top5", lit(1))
@@ -1918,10 +1895,10 @@ object StreamPipelines {
     * run: the doc store takes three commits (snapshot insert →
     * compliance DELETE sweep → incoming insert), the CDC tail replays
     * them one micro-batch each with `_op` change types, and every batch
-    * folds into VERSIONED counter state (`cnt_v<B>` = cnt_v<B-1> +
+    * folds into VERSIONED counter state (`cnt` generation B+1 = B +
     * this batch's (cell, ±1) rows — order-independent sums, so the fold
-    * is one narrow aggregate; generation = batchId, replay-idempotent
-    * by layout, the labels_v<N> rule) plus the narrow (doc_id, h) live
+    * is one narrow aggregate; keyed by batch id, replay-idempotent
+    * by layout, the [[Generations]] replay rule) plus the narrow (doc_id, h) live
     * map the decrement needs (a delete CDC row carries no text — the
     * id→hash side table is what any production counting-filter service
     * keeps so it knows WHAT to decrement). Each batch's inserts are
@@ -1945,20 +1922,16 @@ object StreamPipelines {
     graft.connector.GraftDoc.write(
       d.filter(col("doc_id") >= 250), "doc_id", s"$tmp/tbl")
     // v0 state: empty counters, empty live-id map
-    s.range(0).select(col("id").as("cell"), col("id").as("n"))
-      .write.mode("overwrite").parquet(s"$tmp/cnt_v0")
-    s.range(0).select(col("id").as("doc_id"), lit("").as("h"))
-      .write.mode("overwrite").parquet(s"$tmp/ids_v0")
+    val (cnt, ids) = (Generations(s, tmp, "cnt"), Generations(s, tmp, "ids"))
+    val novel = Generations(s, tmp, "novel")
+    cnt.seed("cell long, n long")
+    ids.seed("doc_id long, h string")
     drainBatches(s, "cbf_stream", cdcTail(s, s"$tmp/tbl", withOp = true)) {
       (batch, v) =>
-        val ins = batch.filter(col("_op") === "insert")
-          .select(col("_id").cast("long").as("doc_id"),
-            col("text"), col("lang"))
-          .withColumn("h", sha2(col("text"), 256))
-        val del = batch.filter(col("_op") === "delete")
-          .select(col("_id").cast("long").as("doc_id"))
-        val prevCnt = s.read.parquet(s"$tmp/cnt_v$v")
-        val prevIds = s.read.parquet(s"$tmp/ids_v$v")
+        val (ins0, del) = splitOps(batch, "doc_id", "text", "lang")
+        val ins = ins0.withColumn("h", sha2(col("text"), 256))
+        val prevCnt = cnt.read(v)
+        val prevIds = ids.read(v)
         // screen this batch's inserts against the PRE-batch state
         val cbf = prevCnt
           .agg(map_from_entries(
@@ -1966,12 +1939,11 @@ object StreamPipelines {
           .scalar()
         val flagged = ins.withColumn("cand",
           BloomFunctions.counting_might_contain(cbf, col("h"), m, k))
-        flagged.filter(!col("cand"))
+        novel.write(v, flagged.filter(!col("cand"))
           .select(col("doc_id"), col("lang"))
           .unionByName(flagged.filter(col("cand"))
             .join(prevIds.select(col("h")), Seq("h"), "left_anti")
-            .select(col("doc_id"), col("lang")))
-          .write.mode("overwrite").parquet(s"$tmp/novel_b$v")
+            .select(col("doc_id"), col("lang"))))
         // fold the batch into the next state generation. Delete
         // hashes resolve against prevIds ∪ THIS batch's inserts —
         // not prevIds alone — so an insert and its retraction
@@ -1990,18 +1962,16 @@ object StreamPipelines {
           .unionByName(delH.select(
             explode(BloomFunctions.counting_cells(col("h"), m, k))
               .as("cell"), lit(-1L).as("w")))
-        prevCnt.select(col("cell"), col("n").as("w"))
+        cnt.write(v, prevCnt.select(col("cell"), col("n").as("w"))
           .unionByName(deltaCells)
           .groupBy(col("cell")).agg(sum(col("w")).as("n"))
-          .filter(col("n") > 0)
-          .write.mode("overwrite").parquet(s"$tmp/cnt_v${v + 1}")
-        prevIds.join(del, Seq("doc_id"), "left_anti")
+          .filter(col("n") > 0))
+        ids.write(v, prevIds.join(del, Seq("doc_id"), "left_anti")
           .unionByName(ins.select(col("doc_id"), col("h"))
-            .join(del, Seq("doc_id"), "left_anti"))
-          .write.mode("overwrite").parquet(s"$tmp/ids_v${v + 1}")
+            .join(del, Seq("doc_id"), "left_anti")))
     }
     // batch-1's bootstrap novelties (the snapshot itself) fall away here
-    readGenerations(s, s"$tmp/novel_b*")
+    novel.parts
       .filter(col("doc_id") >= 250)
       .orderBy(col("doc_id"))
   }
@@ -2014,10 +1984,10 @@ object StreamPipelines {
     * (snapshot insert → compliance DELETE sweep → incoming insert),
     * the CDC tail replays them one micro-batch each with `_op` change
     * types, and every batch folds into VERSIONED structure state
-    * (generation = batchId, replay-idempotent by layout — the
-    * labels_v<N> rule):
+    * (keyed by batch id, replay-idempotent by layout — the
+    * [[Generations]] replay rule):
     *   - inserts contribute row-local (doc_id, pos, key) rows from
-    *     their own text alone (pos_b<B>, the q8x asymmetry — no old
+    *     their own text alone (pos generation B+1, the q8x asymmetry — no old
     *     position recomputed);
     *   - deletes ride qb8's count-debit: dead keys come from the
     *     tombstoned docs' OWN stored position rows (a delete CDC row
@@ -2059,68 +2029,57 @@ object StreamPipelines {
     graft.connector.GraftDoc.write(
       d.filter(col("doc_id") >= 250 || revived), "doc_id", s"$tmp/tbl")
     // v0 state: empty counts, empty dictionary, empty tombstone set
-    s.range(0).select(lit("").as("key"), col("id").as("n"))
-      .write.mode("overwrite").parquet(s"$tmp/counts_v0")
-    s.range(0).select(col("id").as("doc_id"), col("id").as("gen"))
-      .write.mode("overwrite").parquet(s"$tmp/tomb_v0")
-    val fv = 1 + drainBatches(s, "sfx_del", cdcTail(s, s"$tmp/tbl", withOp = true)) {
+    val (posG, counts) = (Generations(s, tmp, "pos"), Generations(s, tmp, "counts"))
+    val (dict, tomb) = (Generations(s, tmp, "dict"), Generations(s, tmp, "tomb"))
+    counts.seed("key string, n long")
+    tomb.seed("doc_id long, gen long")
+    val last = drainBatches(s, "sfx_del", cdcTail(s, s"$tmp/tbl", withOp = true)) {
       (batch, v) =>
-        val ins = batch.filter(col("_op") === "insert")
-          .select(col("_id").cast("long").as("doc_id"), col("text"))
-        val del = batch.filter(col("_op") === "delete")
-          .select(col("_id").cast("long").as("doc_id"))
+        val (ins, del) = splitOps(batch, "doc_id", "text")
         // inserts: row-local keys from this batch's text alone,
         // GENERATION-STAMPED — a later delete debits (and the serve
         // drops) exactly the rows of generations after the doc's
         // last tombstone, so delete-then-reinsert resolves by
         // LATEST OP per doc instead of relying on the drain's id
         // spaces staying disjoint
-        SuffixRanks.suffixKeys(ins)
-          .withColumn("gen", lit(v + 1))
-          .write.mode("overwrite").parquet(s"$tmp/pos_b${v + 1}")
-        val newCounts = s.read.parquet(s"$tmp/pos_b${v + 1}")
+        posG.write(v, SuffixRanks.suffixKeys(ins).withColumn("gen", lit(v + 1)))
+        val newCounts = posG.after(v)
           .groupBy(col("key")).agg(count(lit(1)).as("n"))
         // deletes: dead keys from the tombstoned docs' stored rows
         // (ALL generations incl. this batch's inserts — same-batch
         // insert+delete must cancel, the qc0 rule) — but only rows
         // NEWER than the doc's last tombstone: generations a prior
         // delete already debited must not debit twice
-        val priorDel = s.read.parquet(s"$tmp/tomb_v$v")
+        val priorDel = tomb.read(v)
           .groupBy(col("doc_id")).agg(max(col("gen")).as("dgen"))
-        val deadCounts = readGenerations(s, s"$tmp/pos_b*")
+        val deadCounts = posG.parts
           .join(del, Seq("doc_id"), "left_semi")
           .join(priorDel, Seq("doc_id"), "left")
           .filter(col("gen") > coalesce(col("dgen"), lit(0L)))
           .groupBy(col("key")).agg((-count(lit(1))).as("n"))
         // fold: order-independent (key, ±n) sums; zeroed keys vanish
-        s.read.parquet(s"$tmp/counts_v$v")
-          .unionByName(newCounts).unionByName(deadCounts)
+        counts.step(v)(_.unionByName(newCounts).unionByName(deadCounts)
           .groupBy(col("key")).agg(sum(col("n")).as("n"))
-          .filter(col("n") > 0)
-          .write.mode("overwrite").parquet(s"$tmp/counts_v${v + 1}")
+          .filter(col("n") > 0))
         // renumber the SURVIVING dictionary: O(dict), the qb8 term
-        SuffixRanks.rankDict(s.read.parquet(s"$tmp/counts_v${v + 1}"))
-          .write.mode("overwrite").parquet(s"$tmp/dict_v${v + 1}")
-        s.read.parquet(s"$tmp/tomb_v$v")
-          .unionByName(del.withColumn("gen", lit(v + 1)))
-          .write.mode("overwrite").parquet(s"$tmp/tomb_v${v + 1}")
+        dict.write(v, SuffixRanks.rankDict(counts.after(v)))
+        tomb.tombstone(v, del.withColumn("gen", lit(v + 1)))
     }
     // latest-op resolution: a doc's live rows are the generations AFTER
     // its last tombstone (none if never deleted) — a delete followed by
     // a re-insert serves the re-inserted rows, a trailing delete serves
     // nothing, and the no-reinsert drain below reduces to the plain
     // anti join this replaces
-    val lastDel = s.read.parquet(s"$tmp/tomb_v$fv")
+    val lastDel = tomb.after(last)
       .groupBy(col("doc_id")).agg(max(col("gen")).as("dgen"))
-    val pos = readGenerations(s, s"$tmp/pos_b*")
+    val pos = posG.parts
       .join(lastDel, Seq("doc_id"), "left")
       .filter(col("gen") > coalesce(col("dgen"), lit(0L)))
     // group sizes from the maintained counts table — the fold's debit
-    // invariant says counts_v<fv>(key) IS |live positions of key|, so
-    // the corpus frame is only touched by the sample filter
+    // invariant says the final counts(key) IS |live positions of key|,
+    // so the corpus frame is only touched by the sample filter
     // (SuffixRanks.auditServe — the counts-invariant serve tail)
-    SuffixRanks.auditServe(pos, s.read.parquet(s"$tmp/dict_v$fv"),
-      s.read.parquet(s"$tmp/counts_v$fv"))
+    SuffixRanks.auditServe(pos, dict.after(last), counts.after(last))
   }
 
   /** q8z: streaming PQ-ADC serve from a PERSISTED product-quantization
@@ -2135,7 +2094,7 @@ object StreamPipelines {
     * contract (8 bytes read per candidate). Completely stateless (zero
     * state rows; codebook + codes are parquet reads, no per-trigger
     * retrain — the q8p lesson). Per-batch results land in batch-id-keyed
-    * files (overwrite → replay idempotent, the labels_v<N> rule); the
+    * files (overwrite → replay idempotent, the [[Generations]] replay rule); the
     * drained union must be indistinguishable from q5s's one-shot batch
     * ADC — q8z shares q5s's oracle verbatim, which IS that claim. */
   def docStreamPqServe(s: SparkSession, sfDir: String): DataFrame = {
@@ -2154,14 +2113,13 @@ object StreamPipelines {
       q.filter(pmod(col("vec_id"), lit(2)) === 1), "vec_id", s"$tmp/queries")
     graft.connector.GraftDoc.write(
       q.filter(pmod(col("vec_id"), lit(2)) === 0), "vec_id", s"$tmp/queries")
+    val served = Generations(s, tmp, "served")
     drainBatches(s, "pq_serve", cdcTail(s, s"$tmp/queries")
         // the sink hoisted vec_id into the string `_id` key (P2's rule)
         .select(col("_id").cast("long").as("qid"), col("embedding").as("qe"))) {
-      (batch, batchId) =>
-        SimilarityQueries.pqServeFor(batch, icodes, icb)
-          .write.mode("overwrite").parquet(s"$tmp/served_b$batchId")
+      (batch, v) => served.write(v, SimilarityQueries.pqServeFor(batch, icodes, icb))
     }
-    readGenerations(s, s"$tmp/served_b*")
+    served.parts
       .orderBy(col("qid"), col("rnk"))
   }
 
@@ -2176,7 +2134,7 @@ object StreamPipelines {
     * predicate would be a per-batch nested loop at scale, and a
     * stream-stream interval join would hold state the static side never
     * needed. Per-batch matches land in batch-id-keyed files (overwrite →
-    * replay idempotent, the labels_v<N> rule); the drained result folded
+    * replay idempotent, the [[Generations]] replay rule); the drained result folded
     * over all batches must equal q1f's one-shot batch range join — the
     * oracle replays exactly that. */
   def docStreamRangeJoin(s: SparkSession, sfDir: String): DataFrame = {
@@ -2205,10 +2163,9 @@ object StreamPipelines {
     val matched = graft.operators.RangeJoin
       .pointInInterval(iv, "lo", "hi", stream, "p_ts", binWidth = hourNs)
       .select(col("iv_id"), col("p_id"))
-    drainBatches(s, "range_join", matched) { (batch, batchId) =>
-      batch.write.mode("overwrite").parquet(s"$tmp/matched_b$batchId")
-    }
-    val counts = readGenerations(s, s"$tmp/matched_b*")
+    val matchedG = Generations(s, tmp, "matched")
+    drainBatches(s, "range_join", matched)((batch, v) => matchedG.write(v, batch))
+    val counts = matchedG.parts
       .groupBy(col("iv_id"))
       .agg(count(lit(1)).as("n"), sum(col("p_id")).as("sids"))
     iv.join(counts, Seq("iv_id"), "left")
@@ -2245,13 +2202,13 @@ object StreamPipelines {
       docs.filter(col("doc_id") >= 100 && col("doc_id") < 200)
         .withColumn("text", concat(lit("updated "), col("text"))),
       "doc_id", s"$tmp/src")
-    val cdc = cdcTail(s, s"$tmp/src", withOp = true)
-      .filter(col("_op") === "insert")          // tombstones: not ingests
-      .filter(length(col("text")) >= 100)       // stateless quality gate
-      .select(col("_id"), col("text"), col("lang"))
+    // tombstones are not ingests: only the insert half is kept
+    val (ins, _) = splitOps(cdcTail(s, s"$tmp/src", withOp = true),
+      "doc_id", "text", "lang")
+    val cdc = ins.filter(length(col("text")) >= 100) // stateless quality gate
     withStreamShufflePartitions(s) {
       graft.connector.GraftDoc.writeStream(
-        cdc, keyField = "_id",
+        cdc, keyField = "doc_id",
         path = s"$tmp/corpus", checkpoint = s"$tmp/ckpt")
         .awaitTermination()
     }
@@ -2288,8 +2245,9 @@ object StreamPipelines {
     * "mergeable sketches as data". Events ARRIVE as a CDC stream (two
     * commits) and every micro-batch folds its per-(day, event_type) HLL
     * sketches into a persisted sketch table via `hll_union_agg`:
-    * state_v<B> = fold(state_v<B-1>, sketches(batch B)). The state is
-    * VERSIONED immutable files keyed by batch id (the labels_v<N> rule),
+    * state generation B+1 = fold(generation B, sketches(batch B)), and
+    * batch 0's sketches alone are generation 1. The state is VERSIONED
+    * immutable files keyed by batch id (the [[Generations]] replay rule),
     * so a replayed batch rewrites the same version deterministically —
     * replay idempotent with zero transactional machinery. At 100 TB this
     * is the production distinct-counting shape: each trigger touches only
@@ -2309,21 +2267,22 @@ object StreamPipelines {
       ev.filter(pmod(col("event_id"), lit(2)) === 1), "event_id", s"$tmp/src")
     graft.connector.GraftDoc.write(
       ev.filter(pmod(col("event_id"), lit(2)) === 0), "event_id", s"$tmp/src")
-    val lastV = drainBatches(s, "hll_stream", cdcTail(s, s"$tmp/src")
+    val state = Generations(s, tmp, "state")
+    val last = drainBatches(s, "hll_stream", cdcTail(s, s"$tmp/src")
         .select(col("d"), col("event_type"), col("user_id"))) {
-      (batch, batchId) =>
+      (batch, v) =>
         val batchSk = batch.groupBy(col("d"), col("event_type"))
           .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
-        val folded =
-          if (batchId == 0) batchSk
-          else s.read.parquet(s"$tmp/state_v${batchId - 1}")
+        // no generation 0: the first batch's sketches are the state
+        state.write(v,
+          if (v == 0) batchSk
+          else state.read(v)
             .unionByName(batchSk)
             .groupBy(col("d"), col("event_type"))
-            .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
-        folded.write.mode("overwrite").parquet(s"$tmp/state_v$batchId")
+            .agg(hll_union_agg(col("sk"), lit(false)).as("sk")))
     }
     // serve from the final stored state; exact anchors batch-derived
-    val est = s.read.parquet(s"$tmp/state_v$lastV")
+    val est = state.after(last)
       .select(col("d"), col("event_type"),
         hll_sketch_estimate(col("sk")).as("est"))
     val exact = ev.groupBy(col("d"), col("event_type"))
@@ -2372,10 +2331,9 @@ object StreamPipelines {
       .select(col("event_id"), col("event_type"),
         round((col("value") - col("med"))
           / (lit(1.4826) * col("mad")), 6).as("z"))
-    drainBatches(s, "anomaly", flagged) { (batch, batchId) =>
-      batch.write.mode("overwrite").parquet(s"$tmp/flags_b$batchId")
-    }
-    readGenerations(s, s"$tmp/flags_b*")
+    val flags = Generations(s, tmp, "flags")
+    drainBatches(s, "anomaly", flagged)((batch, v) => flags.write(v, batch))
+    flags.parts
       .select(col("event_id"), col("event_type"), col("z"))
       .orderBy(col("event_id"))
   }
@@ -2430,10 +2388,9 @@ object StreamPipelines {
           + bit_count(col("h1").bitwiseXOR(col("h1h")))).cast("long"))
       .filter(col("hamming") <= 3)
       .select(col("doc_id").as("id_new"), col("id_hist"), col("hamming"))
-    drainBatches(s, "img_dedup", matched) { (batch, batchId) =>
-      batch.write.mode("overwrite").parquet(s"$tmp/hits_b$batchId")
-    }
-    readGenerations(s, s"$tmp/hits_b*")
+    val hits = Generations(s, tmp, "hits")
+    drainBatches(s, "img_dedup", matched)((batch, v) => hits.write(v, batch))
+    hits.parts
       .distinct() // collapse multi-band hits for the same pair
       .orderBy(col("id_new"), col("id_hist"))
       .select(col("id_new"), col("id_hist"), col("hamming"))
