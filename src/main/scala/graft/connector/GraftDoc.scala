@@ -108,21 +108,36 @@ object GraftDoc {
       .mode("append").save(path)
   }
 
+  /** `df` with `__rn`, each row's rank among its `_id`'s versions, newest
+    * first. Every commit is hash-bucketed on `_id` (B buckets, see
+    * [[GraftDocDataSource]]), so the window partitions by the scan's hidden
+    * `_bucket` column as well: when every file read carries the same B the
+    * scan is key-grouped on `_bucket` and each of its B tasks resolves its
+    * keys' versions locally, with no exchange. Otherwise — an untagged or
+    * mixed-B table, or `spark.sql.sources.v2.bucketing.enabled` off —
+    * `_bucket` reads one constant and the window pays one hash shuffle on
+    * `(_bucket, _id)`, grouping exactly as `_id` alone. */
+  private def newestFirst(df: DataFrame): DataFrame =
+    df.withColumn("__rn", row_number().over(
+      Window.partitionBy(col(GraftDocLog.BucketCol), col("_id"))
+        .orderBy(col(GraftDocLog.CommitCol).desc)))
+
   /** Upsert-resolved view: the latest version of each `_id`, minus keys
-    * whose latest version is a tombstone. A full read costs one hash
-    * shuffle on `_id` after a pruned parallel file scan. A read filtered
-    * to one key (`snapshot(...).filter(col("_id") === k)`) runs as one
-    * task with no exchange: the scan drops other keys' lines before the
-    * JSON parse and reports itself clustered on `_id` — which Spark uses
-    * while `spark.sql.sources.v2.bucketing.enabled` is on (the default;
-    * off, the read falls back to the shuffle). The tombstone-seq set is a
-    * tiny driver-side manifest read baked into the plan as a literal
-    * filter. Intra-commit duplicate `_id`s are a writer contract
-    * violation (the reference store would apply them in arbitrary put
-    * order); dedupe upstream if the batch can carry them. */
+    * whose latest version is a tombstone. A full read of a bucketed table
+    * runs B tasks with no exchange; an untagged or mixed-B table costs one
+    * hash shuffle on `_id` after a pruned parallel file scan (see
+    * [[newestFirst]]). A read filtered to one key
+    * (`snapshot(...).filter(col("_id") === k)`) reads only the files of
+    * the key's bucket and runs as one task with no exchange: the scan
+    * drops other keys' lines before the JSON parse and reports itself
+    * clustered on `_id` — which Spark uses while
+    * `spark.sql.sources.v2.bucketing.enabled` is on (the default; off, the
+    * read falls back to the shuffle). The tombstone-seq set is a tiny
+    * driver-side manifest read baked into the plan as a literal filter.
+    * Intra-commit duplicate `_id`s are a writer contract violation (the
+    * reference store would apply them in arbitrary put order); dedupe
+    * upstream if the batch can carry them. */
   def snapshot(spark: SparkSession, path: String): DataFrame = {
-    val w = Window.partitionBy(col("_id"))
-      .orderBy(col(GraftDocLog.CommitCol).desc)
     // one consistent listing: the scan is pinned to commits ≤ the seq the
     // tombstone set was read at, so a write or delete landing between
     // plan construction and execution is wholly invisible (point-in-time
@@ -130,9 +145,8 @@ object GraftDoc {
     // The `_commit <=` bound is pushed down and prunes later commits'
     // files at planning time.
     val (asOfSeq, tomb) = GraftDocLog.tableState(path)
-    val latest = log(spark, path)
-      .filter(col(GraftDocLog.CommitCol) <= asOfSeq)
-      .withColumn("__rn", row_number().over(w))
+    val latest = newestFirst(log(spark, path)
+      .filter(col(GraftDocLog.CommitCol) <= asOfSeq))
       .filter(col("__rn") === 1)
     val live =
       if (tomb.isEmpty) latest
@@ -154,20 +168,22 @@ object GraftDoc {
     * (spec: "stream-static join: … mid-stream"). Trade-off vs snapshot:
     * no cross-query repeatable-read pin; each micro-batch reads the
     * then-latest state (each batch is internally consistent — one
-    * planning pass per batch). */
-  def liveView(spark: SparkSession, path: String): DataFrame = {
-    val w = Window.partitionBy(col("_id"))
-      .orderBy(col(GraftDocLog.CommitCol).desc)
-    spark.read.format("graft-doc")
-      .option(GraftDocLog.WithOpOpt, "true").load(path)
-      .withColumn("__rn", row_number().over(w))
+    * planning pass per batch). It resolves versions as [[snapshot]] does:
+    * with no exchange on a bucketed table. */
+  def liveView(spark: SparkSession, path: String): DataFrame =
+    newestFirst(spark.read.format("graft-doc")
+      .option(GraftDocLog.WithOpOpt, "true").load(path))
       .filter(col("__rn") === 1 && col(GraftDocLog.OpCol) =!= "delete")
       .drop("__rn", GraftDocLog.CommitCol, GraftDocLog.OpCol)
-  }
 
   /** Fold the whole log into one base commit and drop older commits:
     * bounds the scan cost and the merge-on-read window after many
-    * streaming epochs. Crash-safe ordering — the compacted base is
+    * streaming epochs. On a bucketed table this is one Spark job: the
+    * snapshot's B key-grouped tasks each write their own bucket's file.
+    * A table written before the bucket layout is migrated here: it takes
+    * the session's `spark.sql.shuffle.partitions` as its B before the base
+    * is written, so the base and every later commit are bucketed (this
+    * fold still shuffles once). Crash-safe ordering — the compacted base is
     * committed before old commits are dropped, and `snapshot` stays
     * correct at every intermediate state (the base outranks everything
     * it absorbed).
@@ -186,6 +202,8 @@ object GraftDoc {
     * lives in `_epochs/`, outside the folded commit dirs. */
   def compact(spark: SparkSession, path: String): Unit = {
     val before = GraftDocLog.latestCommitSeq(path)
+    if (GraftDocLog.recordedBuckets(path).isEmpty)
+      GraftDocLog.stampBuckets(path, spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val tag = java.util.UUID.randomUUID().toString
     snapshot(spark, path).write.format("graft-doc").mode("append")
       .option(GraftDocLog.CommitTagOpt, tag).save(path)

@@ -303,10 +303,6 @@ object SimilarityQueries {
   private[graft] def exactTopKOf(e: DataFrame, k: Int, qids: DataFrame): DataFrame =
     exactTopKFor(e, k, e.join(qids.select(col("vec_id")), Seq("vec_id"), "left_semi"))
 
-  /** exactTopK with the query set = ids >= `minId` (qb3's delta probes). */
-  private[graft] def exactTopKFrom(e: DataFrame, k: Int, minId: Long): DataFrame =
-    exactTopKFor(e, k, e.filter(col("vec_id") >= minId))
-
   /** Brute-force top-`k` (qid, nid) of each query row of `queries` (a
     * (vec_id, embedding) frame) over the candidates `e`, self excluded. */
   private def exactTopKFor(e: DataFrame, k: Int, queries: DataFrame): DataFrame = {

@@ -23,6 +23,16 @@ class GraftDocConnectorSpec extends SparkSpec {
   private def tmp(): String =
     Files.createTempDirectory("graft_doc_tbl").toString
 
+  /** Runs `f` with `spark.sql.shuffle.partitions` at `n`: a table `f`
+    * creates is bucketed B = n, and appends keep that B. */
+  private def withShufflePartitions[T](n: Int)(f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try f
+    finally spark.conf.set(key, prev)
+  }
+
   test("batch write + read roundtrip through format(graft-doc)") {
     val dir = tmp()
     val df = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("k", "name", "v")
@@ -178,9 +188,12 @@ class GraftDocConnectorSpec extends SparkSpec {
   test("point _id read prunes to the files whose manifest range can match") {
     val dir = tmp()
     // three single-file commits with disjoint _id ranges (manifest min/max)
-    GraftDoc.write(Seq((100L, "a"), (199L, "b")).toDF("k", "name").coalesce(1), "k", dir)
-    GraftDoc.write(Seq((200L, "c"), (299L, "d")).toDF("k", "name").coalesce(1), "k", dir)
-    GraftDoc.write(Seq((300L, "e"), (399L, "f")).toDF("k", "name").coalesce(1), "k", dir)
+    // in a one-bucket table
+    withShufflePartitions(1) {
+      GraftDoc.write(Seq((100L, "a"), (199L, "b")).toDF("k", "name").coalesce(1), "k", dir)
+      GraftDoc.write(Seq((200L, "c"), (299L, "d")).toDF("k", "name").coalesce(1), "k", dir)
+      GraftDoc.write(Seq((300L, "e"), (399L, "f")).toDF("k", "name").coalesce(1), "k", dir)
+    }
     val all = spark.read.format("graft-doc").load(dir)
     assert(batchScan(all).inputPartitions.length == 3)
 
@@ -198,9 +211,11 @@ class GraftDocConnectorSpec extends SparkSpec {
 
   test("_id prefix scan prunes by manifest range (key-prefix read)") {
     val dir = tmp()
-    GraftDoc.write(Seq((100L, "a"), (199L, "b")).toDF("k", "name").coalesce(1), "k", dir)
-    GraftDoc.write(Seq((200L, "c"), (299L, "d")).toDF("k", "name").coalesce(1), "k", dir)
-    GraftDoc.write(Seq((300L, "e"), (399L, "f")).toDF("k", "name").coalesce(1), "k", dir)
+    withShufflePartitions(1) { // one bucket: one file per commit
+      GraftDoc.write(Seq((100L, "a"), (199L, "b")).toDF("k", "name").coalesce(1), "k", dir)
+      GraftDoc.write(Seq((200L, "c"), (299L, "d")).toDF("k", "name").coalesce(1), "k", dir)
+      GraftDoc.write(Seq((300L, "e"), (399L, "f")).toDF("k", "name").coalesce(1), "k", dir)
+    }
     val pre = spark.read.format("graft-doc").load(dir)
       .filter(col("_id").startsWith("2"))
     assert(batchScan(pre).inputPartitions.length == 1,
@@ -212,13 +227,16 @@ class GraftDocConnectorSpec extends SparkSpec {
     val dir = tmp()
     // three single-file commits with disjoint lang AND n_chars ranges;
     // the writer declares both columns, so each manifest entry carries
-    // their per-file min/max (string order for lang, long for n_chars)
+    // their per-file min/max (string order for lang, long for n_chars);
+    // one bucket, so one file per commit
     def put(rows: Seq[(Long, String, Long)]): Unit =
       GraftDoc.write(rows.toDF("k", "lang", "n_chars").coalesce(1), "k", dir,
         statsColumns = Seq("lang", "n_chars"))
-    put(Seq((1L, "de", 10L), (2L, "en", 20L)))
-    put(Seq((3L, "es", 30L), (4L, "fr", 40L)))
-    put(Seq((5L, "ja", 50L), (6L, "zh", 60L)))
+    withShufflePartitions(1) {
+      put(Seq((1L, "de", 10L), (2L, "en", 20L)))
+      put(Seq((3L, "es", 30L), (4L, "fr", 40L)))
+      put(Seq((5L, "ja", 50L), (6L, "zh", 60L)))
+    }
     val all = spark.read.format("graft-doc").load(dir)
     assert(batchScan(all).inputPartitions.length == 3)
 
@@ -252,9 +270,11 @@ class GraftDocConnectorSpec extends SparkSpec {
     val dir = tmp()
     // no statsColumns declared: manifests carry only _id ranges, so a
     // payload predicate must pass every file — pruning is advisory, the
-    // residual filter does the semantic work
-    GraftDoc.write(Seq((1L, "de"), (2L, "en")).toDF("k", "lang").coalesce(1), "k", dir)
-    GraftDoc.write(Seq((3L, "es"), (4L, "fr")).toDF("k", "lang").coalesce(1), "k", dir)
+    // residual filter does the semantic work (one bucket: one file a commit)
+    withShufflePartitions(1) {
+      GraftDoc.write(Seq((1L, "de"), (2L, "en")).toDF("k", "lang").coalesce(1), "k", dir)
+      GraftDoc.write(Seq((3L, "es"), (4L, "fr")).toDF("k", "lang").coalesce(1), "k", dir)
+    }
     val q = spark.read.format("graft-doc").load(dir).filter(col("lang") === "es")
     assert(batchScan(q).inputPartitions.length == 2,
       "without recorded stats every file must survive planning")
@@ -276,7 +296,8 @@ class GraftDocConnectorSpec extends SparkSpec {
     val dir = tmp()
     val df = spark.range(1000).select(col("id").as("k"),
       concat(lit("name_"), col("id")).as("name"))
-    GraftDoc.write(df, "k", dir) // one task → one large-ish file
+    // one task, one bucket → one large-ish file
+    withShufflePartitions(1)(GraftDoc.write(df, "k", dir))
     val whole = spark.read.format("graft-doc").load(dir)
     val split = spark.read.format("graft-doc")
       .option(GraftDocLog.MaxSplitBytesOpt, "2048").load(dir)
@@ -979,10 +1000,12 @@ class GraftDocConnectorSpec extends SparkSpec {
 
   test("CDC ReadLimit: maxRowsPerTrigger / maxFilesPerTrigger bound each batch") {
     val src = tmp()
-    // four single-file commits of 2 rows each
-    (0 until 4).foreach { i =>
-      GraftDoc.write(Seq((i * 2L, s"a$i"), (i * 2 + 1L, s"b$i"))
-        .toDF("k", "name").coalesce(1), "k", src)
+    // four single-file commits of 2 rows each, in a one-bucket table
+    withShufflePartitions(1) {
+      (0 until 4).foreach { i =>
+        GraftDoc.write(Seq((i * 2L, s"a$i"), (i * 2 + 1L, s"b$i"))
+          .toDF("k", "name").coalesce(1), "k", src)
+      }
     }
     def drainBatches(opts: Map[String, String]): Seq[Long] = {
       val ckpt = tmp()
@@ -1181,8 +1204,8 @@ class GraftDocConnectorSpec extends SparkSpec {
     withBucketing(on = false) {
       assert(shuffles(GraftDoc.snapshot(spark, dir).filter(col("_id") === "3")) == 1)
     }
-    // an un-pinned snapshot keeps its exchange too
-    assert(shuffles(GraftDoc.snapshot(spark, dir)) == 1)
+    // an un-pinned snapshot of an untagged table keeps its exchange too
+    assert(shuffles(GraftDoc.snapshot(spark, untag(historyTable()))) == 1)
 
     var rows = Seq.empty[(String, String)]
     val (jobs, tasks, records) = counted { rows = lookup(dir, "3") }
@@ -1271,8 +1294,9 @@ class GraftDocConnectorSpec extends SparkSpec {
 
   test("line skip: lines led by another key, and empty lines, still parse") {
     val dir = tmp()
-    GraftDoc.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "name")
-      .coalesce(1), "k", dir)
+    // one bucket: every key's lines share the one part file edited below
+    withShufflePartitions(1)(GraftDoc.write(Seq((1L, "a"), (2L, "b"), (3L, "c"))
+      .toDF("k", "name").coalesce(1), "k", dir))
     val part = GraftDocLog.listCommitFiles(dir).map(_._2).head.stripPrefix("file:")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(part),
       "\n{\"name\":\"b2\",\"_id\":\"2\"}\n\n",
@@ -1312,5 +1336,170 @@ class GraftDocConnectorSpec extends SparkSpec {
     val got = spark.table("graft_doc_key3").select("name").as[String]
       .collect().sorted.toSeq
     assert(got == Seq("v1_3", "v2_3", "v3_3"))
+  }
+
+  // ------------------------------------------------ hash-bucketed commits
+
+  /** Rewrites `dir` into the layout of a table written before bucketing:
+    * part files lose their bucket tag and `_buckets` is gone. */
+  private def untag(dir: String): String = {
+    val root = java.nio.file.Paths.get(dir)
+    Seq(GraftDocLog.BucketsFile, s".${GraftDocLog.BucketsFile}.crc")
+      .foreach(n => Files.deleteIfExists(root.resolve(n)))
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.toList
+      .filter(_.getFileName.toString.matches("\\.?part-.*-b[0-9]+of[0-9]+-.*"))
+      .foreach(p => Files.move(p, p.resolveSibling(
+        p.getFileName.toString.replaceFirst("-b([0-9]+)of[0-9]+-", "-u$1-"))))
+    finally walk.close()
+    dir
+  }
+
+  /** Exchanges below the windows of `df`'s executed plan. */
+  private def windowShuffles(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    df.collect()
+    Plans.collect(df.queryExecution.executedPlan) {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }.map(w => Plans.collect(w) { case s: ShuffleExchangeExec => s }.length).sum
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+    df.select("_id", "name").as[(String, String)].collect().sortBy(_._1).toSeq
+
+  /** The `of<B>` tags of the table's part files ("" for untagged ones). */
+  private def bucketCounts(dir: String): Set[String] =
+    GraftDocLog.listCommitFiles(dir).map(f =>
+      "-b[0-9]+(of[0-9]+)-".r.findFirstMatchIn(f._2).map(_.group(1)).getOrElse("")).toSet
+
+  test("bucketed layout: snapshot, liveView, compact and lookups match the bucketing-off plan") {
+    val dir = historyTable()
+    assert(bucketCounts(dir) == Set("of4"))
+    // live (1, 8), rewritten (3), deleted (5), deleted then re-inserted
+    // (7) and absent (99, 0) keys
+    val keys = Seq("1", "3", "5", "7", "8", "99", "0")
+    def reads() = (rows(GraftDoc.snapshot(spark, dir)),
+      rows(GraftDoc.liveView(spark, dir)), keys.map(lookup(dir, _)))
+    val on = reads()
+    assert(on == withBucketing(on = false)(reads()))
+    val live = on._1.toMap
+    assert(live.size == 39 && live("3") == "v3_3" && live("8") == "v2_8" &&
+      live("7") == "v4_7" && !live.contains("5"))
+    assert(on._2 == on._1)
+    // compaction with and without key grouping, on twin tables
+    val twin = historyTable()
+    GraftDoc.compact(spark, dir)
+    withBucketing(on = false)(GraftDoc.compact(spark, twin))
+    Seq(dir, twin).foreach { d =>
+      assert(rows(GraftDoc.snapshot(spark, d)) == on._1)
+      assert(rows(GraftDoc.log(spark, d)) == on._1) // the base holds live docs only
+      assert(keys.map(lookup(d, _)) == on._3)
+      withBucketing(on = false)(assert(keys.map(lookup(d, _)) == on._3))
+      assert(bucketCounts(d) == Set("of4"))
+    }
+  }
+
+  test("bucketed full reads resolve versions with no exchange; untagged ones shuffle once") {
+    val dir = historyTable()
+    val snap = GraftDoc.snapshot(spark, dir)
+    assert(windowShuffles(snap) == 0, snap.queryExecution.executedPlan.treeString)
+    assert(windowShuffles(GraftDoc.liveView(spark, dir)) == 0)
+    assert(windowShuffles(GraftDoc.snapshot(spark, dir).agg(count(lit(1)))) == 0)
+    assert(!GraftDoc.snapshot(spark, dir).columns.contains(GraftDocLog.BucketCol))
+    // one job of B = 4 tasks; a compaction is one job too
+    val (jobs, tasks, _) = counted(GraftDoc.snapshot(spark, dir).collect())
+    assert((jobs, tasks) == (1, 4), s"jobs=$jobs tasks=$tasks")
+    val (compactJobs, _, _) = counted(GraftDoc.compact(spark, dir))
+    assert(compactJobs == 1, s"compaction ran $compactJobs jobs")
+    assert(windowShuffles(GraftDoc.snapshot(spark, dir)) == 0)
+    // without key grouping, or on an untagged table: one exchange
+    withBucketing(on = false)(assert(windowShuffles(GraftDoc.snapshot(spark, dir)) == 1))
+    val old = untag(historyTable())
+    assert(bucketCounts(old) == Set(""))
+    assert(windowShuffles(GraftDoc.snapshot(spark, old)) == 1)
+    assert(windowShuffles(GraftDoc.liveView(spark, old)) == 1)
+  }
+
+  test("mixed layouts never split a key's versions: untagged then tagged, and two B values") {
+    // untagged history, then a recorded B (a migration whose fold has not
+    // landed) and tagged commits over the same keys
+    val mixed = untag(historyTable())
+    GraftDocLog.stampBuckets(mixed, 4)
+    // B = 4 history, then a racing creator's B = 3
+    val twoB = historyTable()
+    GraftDocLog.stampBuckets(twoB, 3)
+    Seq(mixed -> Set("", "of4"), twoB -> Set("of4", "of3")).foreach { case (d, tags) =>
+      GraftDoc.write(Seq((3L, "v5_3"), (5L, "v5_5"), (9L, "v5_9"), (7L, "v5_7"))
+        .toDF("k", "name"), "k", d)
+      GraftDoc.delete(spark, d, Seq(8L, 7L).toDF("k"))
+      assert(bucketCounts(d) == tags)
+      val got = rows(GraftDoc.snapshot(spark, d))
+      assert(got.map(_._1).distinct.size == got.size, s"duplicate _id: $got")
+      assert(got == withBucketing(on = false)(rows(GraftDoc.snapshot(spark, d))))
+      val live = got.toMap
+      assert(live.size == 38 && live("3") == "v5_3" && live("5") == "v5_5" &&
+        live("9") == "v5_9" && !live.contains("7") && !live.contains("8"))
+      assert(rows(GraftDoc.liveView(spark, d)) == got)
+      assert(windowShuffles(GraftDoc.snapshot(spark, d)) == 1)
+      Seq("3", "5", "7", "8", "9").foreach(k =>
+        assert(lookup(d, k) == live.get(k).map(k -> _).toSeq, s"key $k"))
+    }
+  }
+
+  test("compaction migrates an untagged table to the bucket layout") {
+    val dir = untag(historyTable())
+    val want = rows(GraftDoc.snapshot(spark, dir))
+    assert(GraftDocLog.recordedBuckets(dir).isEmpty)
+    // appends keep writing untagged files until the migration
+    GraftDoc.write(Seq((41L, "v1_41")).toDF("k", "name"), "k", dir)
+    assert(bucketCounts(dir) == Set(""))
+    GraftDoc.compact(spark, dir)
+    assert(GraftDocLog.recordedBuckets(dir).contains(4))
+    assert(bucketCounts(dir) == Set("of4"))
+    val got = GraftDoc.snapshot(spark, dir)
+    assert(rows(got) == (want :+ ("41" -> "v1_41")).sortBy(_._1))
+    assert(windowShuffles(got) == 0)
+  }
+
+  test("a pinned lookup reads only the files of its key's bucket") {
+    import graft.connector.GraftDocKeyedPartition
+    val dir = historyTable()
+    val all = GraftDocLog.listCommitFiles(dir).map(_._2)
+    Seq("3", "7", "12", "40").foreach { k =>
+      val tag = s"-b${GraftDocLog.bucketOf(UTF8String.fromString(k), 4)}of4-"
+      val q = GraftDoc.snapshot(spark, dir).filter(col("_id") === k)
+      val files = batchScan(q).inputPartitions.map {
+        case p: GraftDocKeyedPartition => p.split.file
+      }.distinct
+      assert(files.nonEmpty && files.forall(_.contains(tag)), s"key $k read $files")
+      assert(files.size < all.size)
+      assert(lookup(dir, k) == withBucketing(on = false)(lookup(dir, k)))
+    }
+  }
+
+  test("CDC micro-batches read each writer task's bucket files of a commit as one partition") {
+    import graft.connector.{GraftDocOffset, GraftDocPackedPartition, GraftDocScanBuilder}
+    val dir = tmp()
+    def docs(from: Long) = spark.range(from, from + 200).select(col("id").as("k"),
+      concat(lit("n"), col("id")).as("name"))
+    GraftDoc.write(docs(0).coalesce(1), "k", dir) // one task: four bucket files
+    GraftDoc.write(docs(1000).repartition(2), "k", dir) // two tasks: eight
+    assert(GraftDocLog.listCommitFiles(dir).groupBy(_._1).values.map(_.size).toSet == Set(4, 8))
+    val stream = new GraftDocScanBuilder(GraftDoc.log(spark, dir).schema, dir).build()
+      .toMicroBatchStream(tmp())
+    val parts = stream.planInputPartitions(GraftDocOffset(0L), GraftDocOffset(2L))
+    assert(parts.length == 3 && parts.forall(_.isInstanceOf[GraftDocPackedPartition]),
+      parts.toSeq.toString)
+    // every version exactly once, packed or split by byte range
+    Seq(Map.empty[String, String], Map(GraftDocLog.MaxSplitBytesOpt -> "256")).foreach { o =>
+      val name = s"cdc_packed_${o.size}"
+      val q = spark.readStream.format("graft-doc").options(o).load(dir)
+        .select("_id", "_commit").writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", tmp())
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val got = spark.table(name).as[(String, Long)].collect()
+      assert(got.length == 400 && got.distinct.length == 400, s"options $o")
+    }
   }
 }

@@ -38,6 +38,11 @@ class GraphInsertPropSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
+  /** Brute-force top-k of the delta probes, the ids >= `minId`: the
+    * recall denominator. */
+  private def exactTopKFrom(e: DataFrame, k: Int, minId: Long): DataFrame =
+    SimilarityQueries.exactTopKOf(e, k, e.filter(col("vec_id") >= minId).select("vec_id"))
+
   test("insert tracks rebuild recall; base lists change only by gaining new-node edges") {
     val session = spark
     import session.implicits._
@@ -51,8 +56,7 @@ class GraphInsertPropSpec extends SparkSpec {
       val rebuilt = NnDescent.knnGraph(e)
 
       // recall@5 on the delta probes vs brute-force truth
-      val exact = SimilarityQueries
-        .exactTopKFrom(e, NnDescent.ReportK, nBase)
+      val exact = exactTopKFrom(e, NnDescent.ReportK, nBase)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val rIns = topServed(merged, nBase).count(exact) * 1.0 / exact.size
       val rReb = topServed(rebuilt, nBase).count(exact) * 1.0 / exact.size
