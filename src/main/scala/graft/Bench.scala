@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Contended iff any probe is BOTH >1.75x the median and further above
@@ -81,12 +80,7 @@ object Bench {
     // the stamp below records whatever was actually used so BenchGate
     // can refuse cross-environment comparison instead of guessing.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     // JVM/codegen warmup so the first measured query doesn't absorb
     // one-time JIT + Catalyst initialization cost
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's scale-oriented defaults.
@@ -21,13 +22,19 @@ import org.apache.spark.sql.SparkSession
   *     rename and create semantics are the stock ones. `FileSystem.CACHE`
   *     keys on scheme, not class: a `file:` FS built from a Configuration
   *     without these keys before the session exists keeps being served.
+  *     A session that already existed keeps its own Hadoop conf whatever
+  *     the builder says; [[local]] then logs a WARN naming the two keys.
   */
 object GraftSession {
 
+  /** The keys that serve `file:` from the fork-free classes. */
+  private val ForklessConf = Seq(
+    "spark.hadoop.fs.file.impl" -> classOf[ForklessLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForklessLocalFs].getName)
+
   /** Apply engine defaults to a builder (caller controls master/memory). */
-  def configure(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.hadoop.fs.file.impl", classOf[ForklessLocalFileSystem].getName)
-    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForklessLocalFs].getName)
+  def configure(b: SparkSession.Builder): SparkSession.Builder =
+    ForklessConf.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
     .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -53,6 +60,22 @@ object GraftSession {
         .config("spark.sql.shuffle.partitions", cores.toString)
     ).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    forklessWarning(s.sparkContext.hadoopConfiguration)
+      .foreach(org.slf4j.LoggerFactory.getLogger("graft.GraftSession").warn(_))
     s
+  }
+
+  /** The warning to log when `conf` does not serve `file:` with
+    * [[ForklessLocalFileSystem]]: the session existed before
+    * [[configure]] ran (`spark-shell`, or an earlier `getOrCreate`), so
+    * its Hadoop conf dropped the `spark.hadoop.*` keys. */
+  def forklessWarning(conf: Configuration): Option[String] = {
+    val fs = classOf[ForklessLocalFileSystem].getName
+    val impl = conf.get("fs.file.impl")
+    if (impl == fs) None
+    else Some(s"graft: file: is served by ${Option(impl).getOrElse("Hadoop's default")}, " +
+      s"not $fs: this session existed before GraftSession configured it, so local " +
+      "creates launch chmod processes again. Start it with " +
+      ForklessConf.map { case (k, v) => s"--conf $k=$v" }.mkString(" "))
   }
 }

@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
@@ -85,6 +86,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * falls back to scanning only the manifests ABOVE the recorded watermark
   * seq — normally zero files. `_epochs/` lives outside the commit dirs,
   * so replay protection survives [[GraftDoc.compact]] folding manifests.
+  *
+  * `GraftDocLog` reads the log in two places. `GraftDocLog.listRoot` is the
+  * one listing of the table root: commit dirs with their seq and
+  * tombstone flag, claims with their mtime, schema-delta slots, and which
+  * of `_format`, `_buckets` and `_schema.json` exist, a missing root
+  * reading as an empty table. Each operation derives its view from one
+  * such listing: a snapshot's `tableState` makes one, a plain append two
+  * (one before its claim, one after winning it, which also feeds the claim
+  * GC), and no marker is stat'ed on its own. `GraftDocLog.LogCodec` is the
+  * one JSON codec (Jackson's tree model) and the one reader and writer of
+  * manifests and `_epochs/` watermarks. `DocLogLintSpec` keeps both so.
   *
   * All FileSystem access uses the Spark session's Hadoop configuration
   * (driver: `sessionState.newHadoopConf()`; tasks: the same conf shipped
@@ -1161,13 +1173,14 @@ object GraftDocLog {
     * writer-fence check — simulates a GC pause / slow object store on the
     * claim-to-rename path. */
   private[graft] val postClaimStallMsForTest = new AtomicLong(0L)
-  private val EpochsDir = "_epochs"
   // widths beyond 9 digits still parse (zero-padding only keeps the
   // common range lexicographically ordered); the optional `t` marks a
   // TOMBSTONE commit — riding the dir name means delete discovery costs
   // snapshot planning zero manifest reads (same O(1) treatment the epoch
   // watermark gives replay checks)
   private val CommitRe = "commit_([0-9]+)(t?)_.*".r
+  private val ClaimRe = "_claim_([0-9]+)".r
+  private val SchemaDeltaRe = (SchemaDeltaPrefix + "([0-9]{9})\\.json").r
   private val BucketTagRe = ".*-b([0-9]+)of([0-9]+)-[0-9]+\\.jsonl".r
 
   /** The writer task a part file came from: its `part-<pid>-<task>` name
@@ -1190,6 +1203,10 @@ object GraftDocLog {
     * admission, replay fallback) — the counting-FS instrument behind the
     * O(1)-manifest-reads specs for snapshot planning. */
   private[graft] val manifestReads = new AtomicLong(0L)
+
+  /** Every listing of a table root, all through [[listRoot]]: a plain
+    * batch append makes two, a snapshot's [[tableState]] one. */
+  private[graft] val rootListings = new AtomicLong(0L)
 
   /** The active session's Hadoop configuration (carries `spark.hadoop.*`
     * overrides — object-store credentials, custom FS impls); plain
@@ -1230,26 +1247,46 @@ object GraftDocLog {
 
   def readSchema(tablePath: String): Option[StructType] = {
     val (fs, root) = fsFor(tablePath)
-    foldedSchema(fs, root)
+    foldedSchema(fs, root, listRoot(fs, root)).map(_._2)
   }
 
-  private val SchemaDeltaRe = (SchemaDeltaPrefix + "([0-9]{9})\\.json").r
+  // ---------------------------------------------------------------- listing
 
-  /** All schema-delta files under the table root, sorted by version —
-    * including torn/unparseable ones (callers picking the next free slot
-    * must never reuse a crashed writer's number). */
-  private def schemaDeltaFiles(fs: FileSystem, root: Path): Seq[(Long, Path)] =
-    fs.listStatus(root).toSeq.collect {
-      case s if s.isFile =>
-        s.getPath.getName match {
-          case SchemaDeltaRe(v) => Some(v.toLong -> s.getPath)
-          case _ => None
-        }
-    }.flatten.sortBy(_._1)
+  private case class CommitDir(seq: Long, tombstone: Boolean, path: Path)
+  private case class Claim(seq: Long, mtime: Long, path: Path)
 
-  /** The recorded table schema: base [[SchemaFile]] folded with every
-    * PARSEABLE delta in version order, first occurrence of a field name
-    * winning among same-type duplicates. Unparseable deltas are in-flight
+  /** One listing of a table root, decoded from the names alone: commit
+    * dirs (ascending seq), claims, schema-delta slots (ascending version,
+    * torn ones included — a writer picking the next free slot must never
+    * reuse a crashed writer's number) and which root markers exist. */
+  private case class RootListing(commits: Seq[CommitDir], claims: Seq[Claim],
+      schemaDeltas: Seq[(Long, Path)], hasFormat: Boolean, hasBuckets: Boolean,
+      hasSchema: Boolean) {
+    def latestSeq: Long = commits.lastOption.fold(0L)(_.seq)
+  }
+
+  /** The one place the table root is listed: a single `listStatus`, a
+    * missing root reading as an empty table. Every driver-side decision
+    * that depends on the root's contents derives from one of these. */
+  private def listRoot(fs: FileSystem, root: Path): RootListing = {
+    rootListings.incrementAndGet()
+    val named = (try fs.listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil })
+      .map(s => s.getPath.getName -> s)
+    val files = named.collect { case (n, s) if s.isFile => n }.toSet
+    RootListing(
+      named.collect { case (CommitRe(q, t), s) if s.isDirectory =>
+        CommitDir(q.toLong, t.nonEmpty, s.getPath) }.sortBy(_.seq),
+      named.collect { case (ClaimRe(q), s) if s.isFile =>
+        Claim(q.toLong, s.getModificationTime, s.getPath) },
+      named.collect { case (SchemaDeltaRe(v), s) if s.isFile =>
+        v.toLong -> s.getPath }.sortBy(_._1),
+      files(FormatFile), files(BucketsFile), files(SchemaFile))
+  }
+
+  /** The recorded table schema as (base, fold): base [[SchemaFile]]
+    * folded with every PARSEABLE delta in version order, first occurrence
+    * of a field name winning among same-type duplicates. Unparseable deltas are in-flight
     * or crashed writers — their fields become visible when (iff) the file
     * completes; their writers do not rename a data commit until then (see
     * [[publishSchemaDelta]]), so skipping them here can never hide a
@@ -1262,12 +1299,13 @@ object GraftDocLog {
     * fold time is the one place every completed delta is finally visible;
     * silently letting slot order win would retroactively retype a later
     * writer's already-committed column. Readers fail crisply instead. */
-  def foldedSchema(fs: FileSystem, root: Path): Option[StructType] = {
-    val basePath = new Path(root, SchemaFile)
-    if (!fs.exists(basePath)) None
+  private def foldedSchema(fs: FileSystem, root: Path,
+      listed: RootListing): Option[(StructType, StructType)] =
+    if (!listed.hasSchema) None
     else {
-      var fields = schemaFromJson(readFile(fs, basePath)).fields.toSeq
-      schemaDeltaFiles(fs, root).foreach { case (v, p) =>
+      val base = schemaFromJson(readFile(fs, new Path(root, SchemaFile)))
+      var fields = base.fields.toSeq
+      listed.schemaDeltas.foreach { case (v, p) =>
         (try Some(schemaFromJson(readFile(fs, p)))
         catch { case scala.util.control.NonFatal(_) => None }).foreach { d =>
           val byName = fields.map(f => f.name -> f.dataType).toMap
@@ -1284,9 +1322,8 @@ object GraftDocLog {
           fields = fields ++ d.fields.filterNot(f => byName.contains(f.name))
         }
       }
-      Some(StructType(fields))
+      Some(base -> StructType(fields))
     }
-  }
 
   /** Test/tooling entry: evolve a table's recorded schema without a data
     * commit (also what a metadata-only ALTER would call). */
@@ -1308,7 +1345,8 @@ object GraftDocLog {
     var attempts = 0
     var done = false
     while (!done) {
-      val folded = foldedSchema(fs, root).getOrElse(throw new IllegalStateException(
+      val listed = listRoot(fs, root)
+      val (_, folded) = foldedSchema(fs, root, listed).getOrElse(throw new IllegalStateException(
         s"graft-doc: schema base vanished under $root during evolution"))
       val byName = folded.fields.map(f => f.name -> f.dataType).toMap
       newFields.foreach { f =>
@@ -1322,7 +1360,7 @@ object GraftDocLog {
       val missing = newFields.filterNot(f => byName.contains(f.name))
       if (missing.isEmpty) done = true
       else {
-        val next = schemaDeltaFiles(fs, root).lastOption.map(_._1).getOrElse(0L) + 1
+        val next = listed.schemaDeltas.lastOption.fold(0L)(_._1) + 1
         val p = new Path(root, f"$SchemaDeltaPrefix$next%09d.json")
         try writeFile(fs, p, StructType(missing).json, overwrite = false)
         catch { case _: java.io.IOException => () } // slot taken — re-fold, retry
@@ -1336,80 +1374,102 @@ object GraftDocLog {
   def statsOf(messages: Array[WriterCommitMessage]): Seq[GraftDocFileStat] =
     messages.toSeq.collect { case m: GraftDocCommitMessage => m.files }.flatten
 
-  // ----------------------------------------------------------- tiny JSON
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  // ------------------------------------------------------------ JSON codec
 
-  private def junstr(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => b += '"'; i += 2
-          case '\\' => b += '\\'; i += 2
-          case 'n' => b += '\n'; i += 2
-          case 'r' => b += '\r'; i += 2
-          case 't' => b += '\t'; i += 2
-          case 'u' => b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case o => b += o; i += 2
+  /** A commit manifest: the writer's (queryId, epochId) for replay checks,
+    * an optional tag (compaction finds its base by it), the legacy
+    * tombstone flag, and each part file's stats. */
+  private[graft] case class Manifest(queryId: String, epochId: Long,
+      tag: Option[String], tombstone: Boolean, files: Seq[GraftDocFileStat])
+
+  /** The log's one JSON codec, and the one place its manifests and
+    * `_epochs/<queryId>` watermarks are read and written: Jackson's tree
+    * model (the repo's idiom, as in `AvroSchemaBridge`), compact output in
+    * field order — `{"queryId":…,"epochId":…,"tag":…,"tombstone":true,
+    * "files":[{"name":…,"rows":…,"minId":…,"maxId":…,"cols":[{"c":…,
+    * "t":…,"min":…,"max":…}]}]}` with absent optionals omitted, and
+    * `{"epochId":…,"seq":…}` for a watermark. */
+  private[graft] object LogCodec {
+    private val mapper = new ObjectMapper()
+    private val EpochsDir = "_epochs"
+
+    def manifestJson(m: Manifest): String = {
+      val n = mapper.createObjectNode().put("queryId", m.queryId).put("epochId", m.epochId)
+      m.tag.foreach(n.put("tag", _))
+      if (m.tombstone) n.put("tombstone", true)
+      val files = n.putArray("files")
+      m.files.foreach { f =>
+        val o = files.addObject().put("name", f.name).put("rows", f.rows)
+        for (lo <- f.minId; hi <- f.maxId) o.put("minId", lo).put("maxId", hi)
+        if (f.cols.nonEmpty) {
+          val cols = o.putArray("cols")
+          f.cols.foreach(c => cols.addObject()
+            .put("c", c.col).put("t", c.t).put("min", c.min).put("max", c.max))
         }
-      } else { b += c; i += 1 }
-    }
-    b.toString
-  }
-
-  private val QStr = "(?:[^\"\\\\]|\\\\.)*"
-  private val QueryIdRe = ("\"queryId\":\"(" + QStr + ")\"").r
-  private val EpochIdRe = "\"epochId\":(-?[0-9]+)".r
-  private val TagRe = ("\"tag\":\"(" + QStr + ")\"").r
-  // one payload-column stat entry inside a file entry's "cols" array
-  private val ColEntryPat =
-    "\\{\"c\":\"" + QStr + "\",\"t\":\"[sl]\",\"min\":\"" + QStr +
-      "\",\"max\":\"" + QStr + "\"\\}"
-  private val ColEntryCapRe =
-    ("\\{\"c\":\"(" + QStr + ")\",\"t\":\"([sl])\",\"min\":\"(" + QStr +
-      ")\",\"max\":\"(" + QStr + ")\"\\}").r
-  private val FileEntryRe =
-    ("\\{\"name\":\"(" + QStr + ")\",\"rows\":([0-9]+)" +
-      "(?:,\"minId\":\"(" + QStr + ")\",\"maxId\":\"(" + QStr + ")\")?" +
-      "(?:,\"cols\":\\[(" + ColEntryPat + "(?:," + ColEntryPat + ")*)\\])?\\}").r
-
-  private[connector] def parseColStats(blob: String): Seq[GraftDocColStat] =
-    ColEntryCapRe.findAllMatchIn(blob).map { m =>
-      GraftDocColStat(junstr(m.group(1)), m.group(2),
-        junstr(m.group(3)), junstr(m.group(4)))
-    }.toSeq
-
-  private def manifestJson(queryId: String, epochId: Long, tag: Option[String],
-      stats: Seq[GraftDocFileStat], tombstone: Boolean): String = {
-    val files = stats.map { f =>
-      val ids = (f.minId, f.maxId) match {
-        case (Some(lo), Some(hi)) => s""","minId":${jstr(lo)},"maxId":${jstr(hi)}"""
-        case _ => ""
       }
-      val cols =
-        if (f.cols.isEmpty) ""
-        else f.cols.map(c =>
-          s"""{"c":${jstr(c.col)},"t":${jstr(c.t)},""" +
-            s""""min":${jstr(c.min)},"max":${jstr(c.max)}}""")
-          .mkString(""","cols":[""", ",", "]")
-      s"""{"name":${jstr(f.name)},"rows":${f.rows}$ids$cols}"""
-    }.mkString("[", ",", "]")
-    val tagPart = tag.map(t => s""","tag":${jstr(t)}""").getOrElse("")
-    val tombPart = if (tombstone) ""","tombstone":true""" else ""
-    s"""{"queryId":${jstr(queryId)},"epochId":$epochId$tagPart$tombPart,"files":$files}"""
+      mapper.writeValueAsString(n)
+    }
+
+    def parseManifest(json: String): Manifest = {
+      val n = mapper.readTree(json)
+      def opt(o: JsonNode, k: String) = Option(o.get(k)).map(_.asText)
+      Manifest(n.path("queryId").asText, n.path("epochId").asLong,
+        opt(n, "tag"), n.path("tombstone").asBoolean,
+        n.path("files").asScala.toSeq.map { f =>
+          GraftDocFileStat(f.path("name").asText, f.path("rows").asLong,
+            opt(f, "minId"), opt(f, "maxId"),
+            f.path("cols").asScala.toSeq.map(c => GraftDocColStat(c.path("c").asText,
+              c.path("t").asText, c.path("min").asText, c.path("max").asText)))
+        })
+    }
+
+    /** The manifest of commit dir `dir`; None when it has none. */
+    def readManifest(fs: FileSystem, dir: Path): Option[Manifest] =
+      try {
+        val m = parseManifest(readFile(fs, new Path(dir, ManifestFile)))
+        manifestReads.incrementAndGet()
+        Some(m)
+      } catch { case _: java.io.FileNotFoundException => None }
+
+    def writeManifest(fs: FileSystem, dir: Path, m: Manifest): Unit =
+      writeFile(fs, new Path(dir, ManifestFile), manifestJson(m), overwrite = true)
+
+    def watermarkJson(epochId: Long, seq: Long): String =
+      mapper.writeValueAsString(
+        mapper.createObjectNode().put("epochId", epochId).put("seq", seq))
+
+    /** (epochId, seq), or None for a torn or foreign file. */
+    def parseWatermark(json: String): Option[(Long, Long)] = {
+      val n = mapper.readTree(json)
+      for (e <- Option(n.get("epochId")) if e.isIntegralNumber;
+           s <- Option(n.get("seq")) if s.isIntegralNumber) yield (e.asLong, s.asLong)
+    }
+
+    private def watermarkPath(root: Path, queryId: String): Path =
+      new Path(new Path(root, EpochsDir), queryId.replaceAll("[^A-Za-z0-9._-]", "_"))
+
+    /** (highest committed epochId, the commit seq it landed at); None when
+      * missing or torn — the caller then falls back to the manifests. */
+    def readWatermark(fs: FileSystem, root: Path, queryId: String): Option[(Long, Long)] =
+      try parseWatermark(readFile(fs, watermarkPath(root, queryId)))
+      catch { case _: Exception => None }
+
+    def writeWatermark(fs: FileSystem, root: Path, queryId: String,
+        epochId: Long, seq: Long): Unit = {
+      fs.mkdirs(new Path(root, EpochsDir))
+      // single writer per queryId (the query's own driver); the atomic
+      // temp+rename means a concurrent replay check can never observe a
+      // torn file (and the manifest fallback still covers a crash between
+      // commit rename and this update)
+      writeFileAtomic(fs, watermarkPath(root, queryId), watermarkJson(epochId, seq))
+    }
+
+    /** Truncation forgets every query's watermark with the commits. */
+    def dropWatermarks(fs: FileSystem, root: Path): Unit =
+      fs.delete(new Path(root, EpochsDir), true)
   }
 
-  // ---------------------------------------------------------------- listing
+  // ----------------------------------------------------------- file listing
 
   /** (commitSeq, file) for every part file in the log, commit order. */
   def listCommitFiles(tablePath: String): Seq[(Long, String)] =
@@ -1452,29 +1512,23 @@ object GraftDocLog {
       toIncl: Long, withStats: Boolean = true,
       seqOk: Long => Boolean = _ => true): Iterator[(Long, Seq[CommitFileInfo])] = {
     val (fs, root) = fsFor(tablePath)
-    if (!fs.exists(root)) return Iterator.empty
-    commitDirsFlagged(fs, root).iterator
-      .filter { case (seq, _, _) => seq > fromExcl && seq <= toIncl && seqOk(seq) }
-      .map { case (seq, tomb, dir) =>
-        val m = new Path(dir, ManifestFile)
-        val stat: Map[String, (Long, Option[String], Option[String], Seq[GraftDocColStat])] =
-          if (!withStats || !fs.exists(m)) Map.empty
-          else FileEntryRe.findAllMatchIn(readFile(fs, m)).map { mm =>
-            junstr(mm.group(1)) -> ((mm.group(2).toLong,
-              Option(mm.group(3)).map(junstr), Option(mm.group(4)).map(junstr),
-              Option(mm.group(5)).map(parseColStats).getOrElse(Nil)))
-          }.toMap
-        seq -> fs.listStatus(dir).toSeq
+    listRoot(fs, root).commits.iterator
+      .filter(c => c.seq > fromExcl && c.seq <= toIncl && seqOk(c.seq))
+      .map { c =>
+        val stat = (if (withStats) LogCodec.readManifest(fs, c.path) else None)
+          .fold(Map.empty[String, GraftDocFileStat])(_.files.map(f => f.name -> f).toMap)
+        c.seq -> fs.listStatus(c.path).toSeq
           .filter(s => s.isFile && s.getPath.getName.endsWith(".jsonl"))
           .map { s =>
             val name = s.getPath.getName
-            val (rows, lo, hi, cs) = stat.getOrElse(name, (0L, None, None, Nil))
+            val st = stat.get(name)
             val (b, nb) = name match {
               case BucketTagRe(b, nb) => (b.toInt, nb.toInt)
               case _ => (0, 0)
             }
-            CommitFileInfo(seq, s.getPath.toString, s.getLen, rows, lo, hi,
-              tomb, cs, b, nb)
+            CommitFileInfo(c.seq, s.getPath.toString, s.getLen, st.fold(0L)(_.rows),
+              st.flatMap(_.minId), st.flatMap(_.maxId), c.tombstone,
+              st.fold(Seq.empty[GraftDocColStat])(_.cols), b, nb)
           }
       }
   }
@@ -1488,22 +1542,13 @@ object GraftDocLog {
     * stall the stream forever. */
   def safeLatestSeq(tablePath: String, graceMs: Long): Long = {
     val (fs, root) = fsFor(tablePath)
-    if (!fs.exists(root)) return 0L
-    val statuses = fs.listStatus(root).toSeq
-    val dirSeqs = statuses.collect {
-      case s if s.isDirectory => s.getPath.getName match {
-        case CommitRe(q, _) => Some(q.toLong)
-        case _ => None
-      }
-    }.flatten.toSet
-    val latest = if (dirSeqs.isEmpty) 0L else dirSeqs.max
+    val listed = listRoot(fs, root)
+    val latest = listed.latestSeq
+    val committed = listed.commits.map(_.seq).toSet
     val now = System.currentTimeMillis()
-    val inFlight = statuses.collect {
-      case s if s.isFile && s.getPath.getName.startsWith("_claim_") &&
-          now - s.getModificationTime < graceMs =>
-        s.getPath.getName.stripPrefix("_claim_").toLong
-    }.filterNot(dirSeqs.contains)
-    inFlight.filter(_ <= latest).minOption.map(_ - 1).getOrElse(latest)
+    listed.claims
+      .filter(c => now - c.mtime < graceMs && c.seq <= latest && !committed(c.seq))
+      .map(_.seq).minOption.fold(latest)(_ - 1)
   }
 
   /** The table's recorded bucket count, if any (see [[BucketsFile]]). */
@@ -1537,8 +1582,7 @@ object GraftDocLog {
     * have provably been folded away (see [[GraftDoc.compact]]). */
   def stampFormatMarker(tablePath: String): Unit = {
     val (fs, root) = fsFor(tablePath)
-    if (fs.exists(root))
-      writeFile(fs, new Path(root, FormatFile), FormatVersion, overwrite = true)
+    writeFile(fs, new Path(root, FormatFile), FormatVersion, overwrite = true)
   }
 
   /** One-pass consistent view for snapshot construction: (latest commit
@@ -1547,20 +1591,18 @@ object GraftDocLog {
     * point-in-time read — a delete or write landing between plan
     * construction and execution is invisible instead of half-visible
     * (the tombstone set and the file list can never disagree). Cost is
-    * ONE root listing and ZERO manifest reads: the tombstone flag rides
-    * the commit dir name (`commit_<seq>t_<uuid>`), so delete discovery
-    * on a long-unmaintained table (thousands of CDC epochs, no
-    * compaction) stays flat instead of paying O(#commits) driver FS
-    * round-trips — `GraftDocConnectorSpec` pins this with a
-    * manifest-read counter over 50 epochs. */
+    * ONE root listing, which also shows the `_format` marker, and ZERO
+    * manifest reads: the tombstone flag rides the commit dir name
+    * (`commit_<seq>t_<uuid>`), so delete discovery on a long-unmaintained
+    * table (thousands of CDC epochs, no compaction) stays flat instead of
+    * paying O(#commits) driver FS round-trips — `GraftDocConnectorSpec`
+    * pins this with a manifest-read counter over 50 epochs. */
   def tableState(tablePath: String): (Long, Set[Long]) = {
     val (fs, root) = fsFor(tablePath)
-    if (!fs.exists(root)) return (0L, Set.empty)
-    val dirs = commitDirsFlagged(fs, root)
-    val latest = dirs.lastOption.map(_._1).getOrElse(0L)
-    val flagged = dirs.collect { case (seq, true, _) => seq }.toSet
-    if (dirs.isEmpty || fs.exists(new Path(root, FormatFile)))
-      (latest, flagged)
+    val listed = listRoot(fs, root)
+    val (flagged, unflagged) = listed.commits.partition(_.tombstone)
+    if (listed.commits.isEmpty || listed.hasFormat)
+      (listed.latestSeq, flagged.map(_.seq).toSet)
     else {
       // legacy (pre-marker) table: tombstone commits carry the flag only
       // in their manifest — scan the unflagged ones so old deletes never
@@ -1570,15 +1612,12 @@ object GraftDocLog {
       // resurface deleted documents — the exact corruption this fallback
       // exists to prevent. The caller can retry; the store cannot
       // un-delete.
-      val legacy = dirs.collect {
-        case (seq, false, dir) =>
-          val m = new Path(dir, ManifestFile)
-          if (!fs.exists(m)) throw new java.io.IOException(
-            s"graft-doc: legacy commit $dir has no $ManifestFile; cannot " +
-              "determine its tombstone state (snapshot would be unsafe)")
-          if (readFile(fs, m).contains("\"tombstone\":true")) Some(seq) else None
-      }.flatten.toSet
-      (latest, flagged ++ legacy)
+      val legacy = unflagged.filter(c => LogCodec.readManifest(fs, c.path)
+        .getOrElse(throw new java.io.IOException(
+          s"graft-doc: legacy commit ${c.path} has no manifest; cannot " +
+            "determine its tombstone state (snapshot would be unsafe)"))
+        .tombstone)
+      (listed.latestSeq, (flagged ++ legacy).map(_.seq).toSet)
     }
   }
 
@@ -1586,22 +1625,8 @@ object GraftDocLog {
     * auto-compaction trigger's cost model. */
   def liveCommitCount(tablePath: String): Int = {
     val (fs, root) = fsFor(tablePath)
-    if (!fs.exists(root)) 0 else commitDirsFlagged(fs, root).size
+    listRoot(fs, root).commits.size
   }
-
-  /** (seq, isTombstone, dir) for every commit dir, ascending seq — both
-    * flags decoded from the dir name alone (no file reads). */
-  private def commitDirsFlagged(fs: FileSystem, root: Path): Seq[(Long, Boolean, Path)] =
-    fs.listStatus(root).toSeq.collect {
-      case s if s.isDirectory =>
-        s.getPath.getName match {
-          case CommitRe(seq, t) => Some((seq.toLong, t.nonEmpty, s.getPath))
-          case _ => None
-        }
-    }.flatten.sortBy(_._1)
-
-  private def commitDirs(fs: FileSystem, root: Path): Seq[(Long, Path)] =
-    commitDirsFlagged(fs, root).map { case (seq, _, dir) => seq -> dir }
 
   private def writeFile(fs: FileSystem, p: Path, content: String,
       overwrite: Boolean): Unit = {
@@ -1645,7 +1670,6 @@ object GraftDocLog {
     }
 
   private def readFile(fs: FileSystem, p: Path): String = {
-    if (p.getName == ManifestFile) manifestReads.incrementAndGet()
     val in = fs.open(p)
     try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
     finally in.close()
@@ -1673,57 +1697,23 @@ object GraftDocLog {
 
   // -------------------------------------------------- epoch high-watermark
 
-  private def epochHwPath(root: Path, queryId: String): Path =
-    new Path(new Path(root, EpochsDir),
-      queryId.replaceAll("[^A-Za-z0-9._-]", "_"))
-
-  /** (highest committed epochId, the commit seq it landed at). */
-  private def readEpochHw(fs: FileSystem, root: Path,
-      queryId: String): Option[(Long, Long)] = {
-    val p = epochHwPath(root, queryId)
-    try {
-      if (!fs.exists(p)) None
-      else {
-        val txt = readFile(fs, p)
-        for {
-          e <- EpochIdRe.findFirstMatchIn(txt).map(_.group(1).toLong)
-          s <- "\"seq\":([0-9]+)".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-        } yield (e, s)
-      }
-    } catch { case _: Exception => None } // torn write → fall back to scan
-  }
-
-  private def writeEpochHw(fs: FileSystem, root: Path, queryId: String,
-      epochId: Long, seq: Long): Unit = {
-    fs.mkdirs(new Path(root, EpochsDir))
-    // single writer per queryId (the query's own driver); the atomic
-    // temp+rename means a concurrent replay check can never observe a
-    // torn file (and the manifest fallback still covers a crash between
-    // commit rename and this update)
-    writeFileAtomic(fs, epochHwPath(root, queryId),
-      s"""{"epochId":$epochId,"seq":$seq}""")
-  }
-
   /** O(1) epoch-replay check: the high-watermark file answers most
     * replays in one read; only commits ABOVE the recorded watermark seq
     * (normally none) have their manifests scanned — covering the crash
     * window between commit rename and watermark update. */
   private def epochAlreadyCommitted(fs: FileSystem, root: Path,
-      queryId: String, epochId: Long): Boolean = {
-    val hw = readEpochHw(fs, root, queryId)
+      listed: RootListing, queryId: String, epochId: Long): Boolean = {
+    val hw = LogCodec.readWatermark(fs, root, queryId)
     if (hw.exists(epochId <= _._1)) return true
-    val fromSeq = hw.map(_._2).getOrElse(0L)
-    val found = commitDirs(fs, root).filter(_._1 > fromSeq).find { case (_, dir) =>
-      val m = new Path(dir, ManifestFile)
-      fs.exists(m) && {
+    val fromSeq = hw.fold(0L)(_._2)
+    val found = listed.commits.filter(_.seq > fromSeq).find { c =>
+      LogCodec.readManifest(fs, c.path).exists { m =>
         fallbackManifestReads.incrementAndGet()
-        val txt = readFile(fs, m)
-        QueryIdRe.findFirstMatchIn(txt).exists(mm => junstr(mm.group(1)) == queryId) &&
-          EpochIdRe.findFirstMatchIn(txt).exists(_.group(1).toLong == epochId)
+        m.queryId == queryId && m.epochId == epochId
       }
     }
     // repair the watermark so the next replay check is O(1) again
-    found.foreach { case (seq, _) => writeEpochHw(fs, root, queryId, epochId, seq) }
+    found.foreach(c => LogCodec.writeWatermark(fs, root, queryId, epochId, c.seq))
     found.isDefined
   }
 
@@ -1762,28 +1752,31 @@ object GraftDocLog {
     val staging = new Path(stagingDir)
     fs.mkdirs(staging) // zero-row writes still commit (empty batch is a commit)
 
-    if (epochId >= 0 && epochAlreadyCommitted(fs, root, queryId, epochId)) {
+    // one listing decides the replay check, truncation, the root markers,
+    // schema admission and the first seq to claim; the claim loop and the
+    // schema-delta loop re-list where the protocol needs a fresh view
+    val listed = listRoot(fs, root)
+    if (epochId >= 0 && epochAlreadyCommitted(fs, root, listed, queryId, epochId)) {
       fs.delete(staging, true) // replayed micro-batch: already in the log
       return
     }
     if (truncateFirst) {
-      commitDirs(fs, root).foreach { case (_, d) => fs.delete(d, true) }
-      claimFiles(fs, root).foreach(fs.delete(_, false))
-      fs.delete(new Path(root, EpochsDir), true)
+      listed.commits.foreach(c => fs.delete(c.path, true))
+      listed.claims.foreach(c => fs.delete(c.path, false))
+      LogCodec.dropWatermarks(fs, root)
     }
     // stamp the format version on table CREATION only (no commits yet —
     // fresh table or just truncated): a legacy table must never gain the
     // marker while legacy commits remain, or their manifest-flagged
     // tombstones would go undiscovered (see [[FormatFile]])
-    val formatMarker = new Path(root, FormatFile)
-    lazy val creating = commitDirs(fs, root).isEmpty
-    if (!fs.exists(formatMarker) && creating)
-      writeFile(fs, formatMarker, FormatVersion, overwrite = true)
+    val creating = truncateFirst || listed.commits.isEmpty
+    if (creating && !listed.hasFormat)
+      writeFile(fs, new Path(root, FormatFile), FormatVersion, overwrite = true)
     // the creating (or truncating) write's B becomes the table's; a racing
     // creator that lost keeps its own B in its file names, which readers
     // see as a mixed table
-    if (buckets > 0 && (truncateFirst || !fs.exists(new Path(root, BucketsFile))) &&
-        creating) stampBuckets(tablePath, buckets)
+    if (buckets > 0 && creating && (truncateFirst || !listed.hasBuckets))
+      writeFileAtomic(fs, new Path(root, BucketsFile), buckets.toString)
 
     // schema stability across commits: an append whose fields conflict
     // with the table's recorded schema would silently corrupt every later
@@ -1795,8 +1788,9 @@ object GraftDocLog {
     // and old documents read null for them (the JSON parser yields null
     // for absent keys), exactly merge-on-read evolution semantics.
     // Tombstone commits carry only `_id` and skip the check entirely.
-    val schemaPathCheck = new Path(root, SchemaFile)
-    if (!tombstone && !truncateFirst && fs.exists(schemaPathCheck)) {
+    val schemaPath = new Path(root, SchemaFile)
+    val hasSchema = listed.hasSchema && !truncateFirst
+    if (!tombstone && hasSchema) {
       // Append admission, three rules (merge-on-read evolution):
       //  1. every BASE field (the table-creation schema) must be carried
       //     with its recorded type — dropping/retyping the core schema is
@@ -1809,8 +1803,7 @@ object GraftDocLog {
       //     read null for NEW fields. This is what admits two writers
       //     racing distinct evolutions from the same base: each omits
       //     only the other's delta field, never a base field.
-      val base = schemaFromJson(readFile(fs, schemaPathCheck))
-      val recorded = foldedSchema(fs, root).get
+      val (base, recorded) = foldedSchema(fs, root, listed).get
       val gotByName = schema.fields.map(f => f.name -> f).toMap
       val carriesAllBase = base.fields.forall(bf =>
         gotByName.get(bf.name).exists(_.dataType == bf.dataType))
@@ -1834,15 +1827,13 @@ object GraftDocLog {
         .filterNot(f => recorded.fieldNames.contains(f.name))
         .map(_.copy(nullable = true)).toSeq // pre-evolution docs read null
       if (newFields.nonEmpty) publishSchemaDelta(fs, root, newFields)
-    } else if (truncateFirst && fs.exists(schemaPathCheck)) {
-      fs.delete(schemaPathCheck, false) // truncate redefines the table schema
-      schemaDeltaFiles(fs, root).foreach { case (_, p) => fs.delete(p, false) }
+    } else if (truncateFirst && listed.hasSchema) {
+      fs.delete(schemaPath, false) // truncate redefines the table schema
+      listed.schemaDeltas.foreach { case (_, p) => fs.delete(p, false) }
     }
 
-    writeFile(fs, new Path(staging, ManifestFile),
-      manifestJson(queryId, epochId, tag, stats, tombstone), overwrite = true)
-    val schemaPath = new Path(root, SchemaFile)
-    if (!fs.exists(schemaPath)) {
+    LogCodec.writeManifest(fs, staging, Manifest(queryId, epochId, tag, tombstone, stats))
+    if (!hasSchema) {
       if (!tombstone) writeFile(fs, schemaPath, schema.json, overwrite = false)
       else { fs.delete(staging, true)
         throw new IllegalArgumentException(
@@ -1850,14 +1841,16 @@ object GraftDocLog {
     }
 
     // claim-CAS loop: win a seq via atomic create-exclusive, then rename
-    var seq = commitDirs(fs, root).lastOption.map(_._1).getOrElse(0L) + 1
+    var seq = (if (truncateFirst) 0L else listed.latestSeq) + 1
     var committed = false
     var attempts = 0
+    var seen = listed // the latest listing: after a won claim, a fresh one
     while (!committed) {
       val claim = new Path(root, f"_claim_$seq%09d")
       val claimedAtNs = System.nanoTime()
       val won = createExclusive(fs, claim) // atomic, incl. the file scheme
-      if (won && commitDirs(fs, root).exists(_._1 == seq)) {
+      if (won) seen = listRoot(fs, root)
+      if (won && seen.commits.exists(_.seq == seq)) {
         // stale win: the original claimant already renamed its commit and
         // released the claim while we were working from an older listing —
         // the seq is occupied by a DIR now; release and move past it.
@@ -1905,7 +1898,7 @@ object GraftDocLog {
         seq += 1
       }
     }
-    if (epochId >= 0) writeEpochHw(fs, root, queryId, epochId, seq)
+    if (epochId >= 0) LogCodec.writeWatermark(fs, root, queryId, epochId, seq)
     // GC leaked claims (crashed or fenced-out writers): any claim whose
     // seq is below OUR committed dir can never be legitimately claimed
     // again (seq claiming always starts above the latest commit dir), so
@@ -1917,16 +1910,12 @@ object GraftDocLog {
     // the store's mtime clock by more than 5.5 grace windows (>27 min at
     // defaults) — far beyond any NTP-managed skew, vs the single window
     // the old cutoff tolerated. Racing deletes with another committer's
-    // GC is harmless — delete is idempotent here.
+    // GC is harmless — delete is idempotent here. The claims are those of
+    // the listing taken right after this commit's claim was won.
     try {
       val cutoff = System.currentTimeMillis() - 6 * DefaultClaimGraceMs
-      fs.listStatus(root).foreach { s =>
-        val n = s.getPath.getName
-        if (s.isFile && n.startsWith("_claim_") &&
-            n.stripPrefix("_claim_").toLong < seq &&
-            s.getModificationTime < cutoff)
-          fs.delete(s.getPath, false)
-      }
+      seen.claims.filter(c => c.seq < seq && c.mtime < cutoff)
+        .foreach(c => fs.delete(c.path, false))
     } catch { case _: Exception => () } // GC is best-effort housekeeping
     // prune an empty _staging/<writeId> parent left by streaming epochs
     val parent = staging.getParent
@@ -1934,35 +1923,23 @@ object GraftDocLog {
         fs.listStatus(parent).isEmpty) fs.delete(parent, false)
   }
 
-  private def claimFiles(fs: FileSystem, root: Path): Seq[Path] =
-    fs.listStatus(root).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("_claim_"))
-      .map(_.getPath)
-
   /** Seq of the commit whose manifest carries `tag` (compaction uses this
     * to locate its own base commit instead of guessing from a re-list). */
   def findCommitSeqByTag(tablePath: String, tag: String): Option[Long] = {
     val (fs, root) = fsFor(tablePath)
-    if (!fs.exists(root)) return None
-    commitDirs(fs, root).reverseIterator.collectFirst {
-      case (seq, dir) if {
-        val m = new Path(dir, ManifestFile)
-        fs.exists(m) &&
-          TagRe.findFirstMatchIn(readFile(fs, m)).exists(mm => junstr(mm.group(1)) == tag)
-      } => seq
-    }
+    listRoot(fs, root).commits.reverseIterator
+      .find(c => LogCodec.readManifest(fs, c.path).exists(_.tag.contains(tag)))
+      .map(_.seq)
   }
 
   /** Drop every commit strictly below `keepFrom` (compaction cleanup). */
   def dropCommitsBelow(tablePath: String, keepFrom: Long): Unit = {
     val (fs, root) = fsFor(tablePath)
-    commitDirs(fs, root).filter(_._1 < keepFrom)
-      .foreach { case (_, d) => fs.delete(d, true) }
+    listRoot(fs, root).commits.filter(_.seq < keepFrom).foreach(c => fs.delete(c.path, true))
   }
 
   def latestCommitSeq(tablePath: String): Long = {
     val (fs, root) = fsFor(tablePath)
-    if (!fs.exists(root)) 0L
-    else commitDirs(fs, root).lastOption.map(_._1).getOrElse(0L)
+    listRoot(fs, root).latestSeq
   }
 }

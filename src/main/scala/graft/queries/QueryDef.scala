@@ -22,11 +22,6 @@ final case class QueryDef(
     run: (SparkSession, String) => DataFrame)
 
 object QueryDef {
-  /** DuckDB/Spark-shared SQL idiom: order-independent sum of a double
-    * expression at decimal scale 8, rounded to 2 decimals as double. */
-  def dsumSql(expr: String, alias: String): String =
-    s"ROUND(CAST(SUM(CAST($expr AS DECIMAL(30,8))) AS DOUBLE), 2) AS $alias"
-
   /** Materialization root for queries that write run artifacts (two-stage
     * oracles, sink tables), keyed by sfDir so concurrent runs against
     * different directories never collide. One sanitizer for every site:

@@ -56,8 +56,8 @@ object BimodalProbe {
       val w0 = System.nanoTime()
       val rows = fn(spark, sfDir).collect().length
       val wall = (System.nanoTime() - w0) / 1e9
-      // listener events drain asynchronously; give them a beat
-      Thread.sleep(300)
+      // listener events arrive asynchronously: wait until all have landed
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       val driverGc = gcMs - g0
       val tt = (taskTime.get - t0) / 1e3
       val tg = (taskGc.get - tg0) / 1e3

@@ -18,10 +18,7 @@ object Q5mProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val passes = if (args.length > 1) args(1).toInt else 3
-    val spark: SparkSession = GraftSession.configure(
-      SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = GraftSession.local(32)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =

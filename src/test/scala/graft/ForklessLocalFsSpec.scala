@@ -108,6 +108,25 @@ class ForklessLocalFsSpec extends SparkSpec {
       .isInstanceOf[ForklessRawLocalFileSystem])
     assert(FileContext.getFileContext(fileUri, conf).getDefaultFileSystem
       .isInstanceOf[ForklessLocalFs])
+    assert(GraftSession.forklessWarning(spark.sparkContext.hadoopConfiguration).isEmpty)
+  }
+
+  test("a session whose Hadoop conf lacks the forkless FS gets a warning naming both --conf keys") {
+    val plain = new Configuration(false)
+    val stockImpl = new Configuration(false)
+    stockImpl.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
+    for (conf <- Seq(plain, stockImpl)) {
+      val w = GraftSession.forklessWarning(conf)
+      assert(w.isDefined)
+      assert(w.get.contains(
+        s"--conf spark.hadoop.fs.file.impl=${classOf[ForklessLocalFileSystem].getName}"))
+      assert(w.get.contains(
+        s"--conf spark.hadoop.fs.AbstractFileSystem.file.impl=${classOf[ForklessLocalFs].getName}"))
+    }
+    assert(GraftSession.forklessWarning(stockImpl).get.contains("LocalFileSystem"))
+    val forkless = new Configuration(false)
+    forkless.set("fs.file.impl", classOf[ForklessLocalFileSystem].getName)
+    assert(GraftSession.forklessWarning(forkless).isEmpty)
   }
 
   /** Commands Hadoop launched while `f` ran. Launches from elsewhere in the

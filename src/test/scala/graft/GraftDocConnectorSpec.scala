@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.connector.{GraftDoc, GraftDocLog, GraftDocScan, GraftDocWriteBuilder}
+import graft.connector.{GraftDoc, GraftDocColStat, GraftDocFileStat, GraftDocLog, GraftDocScan, GraftDocWriteBuilder}
 
 /** DSv2 keyed-document connector (`format("graft-doc")`): upsert-by-`_id`,
   * commit log, streaming epoch idempotence, column pruning, compaction.
@@ -1502,4 +1502,199 @@ class GraftDocConnectorSpec extends SparkSpec {
       assert(got.length == 400 && got.distinct.length == 400, s"options $o")
     }
   }
+
+  // ------------------------------------------------- log listing and codec
+
+  private val odd = "q\"uo\\te \u0001\u001f\t\n\r é 😀 end"
+
+  private def oddManifest(tag: Option[String], tombstone: Boolean) =
+    GraftDocLog.Manifest(s"query $odd", -1L, tag, tombstone, Seq(
+      GraftDocFileStat("part-00000-0-b1of4-0.jsonl", 12L, Some(s"a$odd"), Some(s"z$odd"),
+        Seq(GraftDocColStat(s"name$odd", "s", s"min$odd", s"max$odd"),
+          GraftDocColStat("n", "l", "-3", "40"))),
+      GraftDocFileStat("part-00001-1-0.jsonl", 0L, None, None)))
+
+  /** The manifest writer tables were written with before the Jackson codec
+    * (a hand-written escaper), kept so that those manifests provably read. */
+  private def handWrittenManifest(m: GraftDocLog.Manifest): String = {
+    def jstr(s: String): String = "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    val files = m.files.map { f =>
+      val ids = (f.minId, f.maxId) match {
+        case (Some(lo), Some(hi)) => s""","minId":${jstr(lo)},"maxId":${jstr(hi)}"""
+        case _ => ""
+      }
+      val cols =
+        if (f.cols.isEmpty) ""
+        else f.cols.map(c =>
+          s"""{"c":${jstr(c.col)},"t":${jstr(c.t)},""" +
+            s""""min":${jstr(c.min)},"max":${jstr(c.max)}}""")
+          .mkString(""","cols":[""", ",", "]")
+      s"""{"name":${jstr(f.name)},"rows":${f.rows}$ids$cols}"""
+    }.mkString("[", ",", "]")
+    val tagPart = m.tag.map(t => s""","tag":${jstr(t)}""").getOrElse("")
+    val tombPart = if (m.tombstone) ""","tombstone":true""" else ""
+    s"""{"queryId":${jstr(m.queryId)},"epochId":${m.epochId}$tagPart$tombPart,"files":$files}"""
+  }
+
+  test("log codec: manifests and watermarks round-trip quotes, backslashes, control chars and non-BMP text") {
+    val codec = GraftDocLog.LogCodec
+    for (m <- Seq(oddManifest(Some(s"tag$odd"), tombstone = true),
+        oddManifest(None, tombstone = false).copy(epochId = 42L, files = Nil)))
+      assert(codec.parseManifest(codec.manifestJson(m)) == m)
+    assert(codec.parseWatermark(codec.watermarkJson(7L, 123456789012L)) == Some((7L, 123456789012L)))
+    assert(codec.parseWatermark("""{"epochId":7}""").isEmpty)
+    assert(codec.parseWatermark("""{"epochId":"7","seq":3}""").isEmpty)
+  }
+
+  test("log codec: a manifest in the hand-written format of earlier writers parses to the same stats") {
+    val codec = GraftDocLog.LogCodec
+    val m = oddManifest(Some(s"tag$odd"), tombstone = true)
+    assert(codec.parseManifest(handWrittenManifest(m)) == m)
+    // the grammar is unchanged: plain text serializes byte for byte alike
+    val plain = GraftDocLog.Manifest("q-1", 3L, Some("base"), tombstone = false,
+      Seq(GraftDocFileStat("part-0.jsonl", 5L, Some("1"), Some("9"),
+        Seq(GraftDocColStat("n", "l", "1", "9")))))
+    assert(codec.manifestJson(plain) == handWrittenManifest(plain))
+    assert(handWrittenManifest(plain) ==
+      """{"queryId":"q-1","epochId":3,"tag":"base","files":[{"name":"part-0.jsonl",""" +
+        """"rows":5,"minId":"1","maxId":"9","cols":[{"c":"n","t":"l","min":"1","max":"9"}]}]}""")
+    // a table whose manifests the earlier writer wrote plans from them as before
+    val dir = tmp()
+    withShufflePartitions(1) {
+      GraftDoc.write(Seq((1L, "a"), (5L, "e")).toDF("k", "name"), "k", dir)
+    }
+    val commit = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+      .find(_.getFileName.toString.startsWith("commit_")).get
+    val manifest = commit.resolve(GraftDocLog.ManifestFile)
+    val written = GraftDocLog.LogCodec.parseManifest(Files.readString(manifest))
+    Files.writeString(manifest, handWrittenManifest(written.copy(tag = Some(odd))))
+    Files.deleteIfExists(manifest.resolveSibling(s".${GraftDocLog.ManifestFile}.crc"))
+    val fi = GraftDocLog.listCommitFileInfos(dir)
+    assert(fi.map(f => (f.path.split('/').last, f.rows, f.minId, f.maxId)).toSet ==
+      written.files.map(f => (f.name, f.rows, f.minId, f.maxId)).toSet)
+    assert(written.files.map(_.rows).sum == 2L)
+    assert(GraftDocLog.findCommitSeqByTag(dir, odd).contains(1L))
+    assert(GraftDoc.snapshot(spark, dir).filter(col("_id") === "5")
+      .select("name").as[String].collect().toSeq == Seq("e"))
+  }
+
+  test("a plain append lists the table root at most twice and stats no root marker; tableState lists it once") {
+    val dir = tmp()
+    GraftDoc.write(Seq((1L, "a")).toDF("k", "name"), "k", dir)
+    val counting = Seq("fs.file.impl" -> classOf[CountingLocalFs].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    counting.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      CountingLocalFs.reset()
+      GraftDocLog.rootListings.set(0L)
+      GraftDoc.write(Seq((2L, "b")).toDF("k", "name"), "k", dir)
+      val root = new org.apache.hadoop.fs.Path(dir).toUri.getPath
+      val rootLists = CountingLocalFs.listed.asScala.count(_ == root)
+      assert(rootLists == GraftDocLog.rootListings.get(),
+        s"${CountingLocalFs.listed.asScala.toSeq} vs ${GraftDocLog.rootListings.get()}")
+      assert(rootLists >= 1 && rootLists <= 2, s"$rootLists root listings for one append")
+      val markers = Set(GraftDocLog.FormatFile, GraftDocLog.BucketsFile, GraftDocLog.SchemaFile)
+      val statted = CountingLocalFs.existsAsked.asScala.filter(markers).toSeq
+      assert(statted.isEmpty, s"exists stats on root markers: $statted")
+    } finally counting.foreach { case (k, _) => spark.conf.unset(k) }
+    assert(GraftDoc.snapshot(spark, dir).count() == 2)
+    GraftDocLog.rootListings.set(0L)
+    assert(GraftDocLog.tableState(dir) == ((2L, Set.empty[Long])))
+    assert(GraftDocLog.rootListings.get() == 1L)
+  }
+
+  test("crash points of the commit path: readers see the old or the new view, and the next append commits") {
+    import java.nio.file.Paths
+    def names(dir: String) =
+      GraftDoc.snapshot(spark, dir).select("name").as[String].collect().toSet
+    def append(dir: String, k: Long, name: String): Unit =
+      GraftDoc.write(Seq((k, name)).toDF("k", "name"), "k", dir)
+
+    // 1. claimed, then died before the rename: a claim with no commit dir
+    val claimed = tmp()
+    append(claimed, 1L, "a")
+    Files.createFile(Paths.get(claimed, "_claim_000000002"))
+    assert(names(claimed) == Set("a"))
+    assert(GraftDocLog.safeLatestSeq(claimed, GraftDocLog.DefaultClaimGraceMs) == 1L)
+    append(claimed, 2L, "b")
+    assert(names(claimed) == Set("a", "b"))
+    assert(GraftDocLog.latestCommitSeq(claimed) == 3L)
+
+    // 2. staged, then died before claiming: part files and a manifest
+    //    under _staging/ that were never renamed into a commit
+    val staged = tmp()
+    append(staged, 1L, "a")
+    val ghost = tmp()
+    append(ghost, 9L, "ghost")
+    val ghostCommit = Files.list(Paths.get(ghost)).iterator().asScala
+      .find(_.getFileName.toString.startsWith("commit_")).get
+    val orphan = Paths.get(staged, "_staging", "dead-writer")
+    Files.createDirectories(orphan)
+    Files.list(ghostCommit).iterator().asScala.foreach(p => Files.copy(p, orphan.resolve(p.getFileName)))
+    assert(names(staged) == Set("a"))
+    append(staged, 2L, "b")
+    assert(names(staged) == Set("a", "b"))
+    assert(GraftDocLog.latestCommitSeq(staged) == 2L)
+
+    // 3. renamed, then died before the watermark: epoch 1's commit is in
+    //    the log but `_epochs/<query>` still names epoch 0
+    val renamed = tmp()
+    val docSchema = StructType(Seq(StructField("_id", StringType), StructField("name", StringType)))
+    val info = new LogicalWriteInfo {
+      override def options(): CaseInsensitiveStringMap =
+        new CaseInsensitiveStringMap(java.util.Map.of("path", renamed))
+      override def queryId(): String = "query-crash-points"
+      override def schema(): StructType = docSchema
+    }
+    val w = new GraftDocWriteBuilder(info, renamed).build().toStreaming
+    val pInfo = new PhysicalWriteInfo { override def numPartitions(): Int = 1 }
+    def epoch(e: Long, name: String): Unit = {
+      val t = w.createStreamingWriterFactory(pInfo).createWriter(0, 0L, e)
+      t.write(InternalRow(UTF8String.fromString(s"e$e"), UTF8String.fromString(name)))
+      w.commit(e, Array(t.commit()))
+    }
+    epoch(0L, "zero")
+    val hw = Files.list(Paths.get(renamed, "_epochs")).iterator().asScala
+      .find(!_.getFileName.toString.startsWith(".")).get
+    val epoch0 = Files.readString(hw)
+    epoch(1L, "one")
+    Files.writeString(hw, epoch0)
+    Files.deleteIfExists(hw.resolveSibling(s".${hw.getFileName}.crc")) // as a crash leaves it
+    assert(names(renamed) == Set("zero", "one"))
+    epoch(1L, "one") // the replayed micro-batch is found in the manifests
+    assert(GraftDocLog.latestCommitSeq(renamed) == 2L)
+    epoch(2L, "two")
+    append(renamed, 3L, "batch")
+    assert(names(renamed) == Set("zero", "one", "two", "batch"))
+    assert(GraftDocLog.latestCommitSeq(renamed) == 4L)
+  }
+}
+
+/** `file:` that records the paths it lists and the names `exists` is asked
+  * about, for counting GraftDocLog's root reads. Installed with the file
+  * system cache off, so every lookup builds a fresh instance: the records
+  * are shared. */
+class CountingLocalFs extends graft.ForklessLocalFileSystem {
+  override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingLocalFs.listed.add(p.toUri.getPath)
+    super.listStatus(p)
+  }
+  override def exists(p: org.apache.hadoop.fs.Path): Boolean = {
+    CountingLocalFs.existsAsked.add(p.getName)
+    super.exists(p)
+  }
+}
+
+object CountingLocalFs {
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val existsAsked = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def reset(): Unit = { listed.clear(); existsAsked.clear() }
 }
