@@ -112,11 +112,13 @@ object GraftDoc {
     * first. Every commit is hash-bucketed on `_id` (B buckets, see
     * [[GraftDocDataSource]]), so the window partitions by the scan's hidden
     * `_bucket` column as well: when every file read carries the same B the
-    * scan is key-grouped on `_bucket` and each of its B tasks resolves its
-    * keys' versions locally, with no exchange. Otherwise — an untagged or
-    * mixed-B table, or `spark.sql.sources.v2.bucketing.enabled` off —
-    * `_bucket` reads one constant and the window pays one hash shuffle on
-    * `(_bucket, _id)`, grouping exactly as `_id` alone. */
+    * scan is key-grouped on `_bucket` and each bucket's task resolves its
+    * keys' versions locally, with no exchange — a read pinned to one key
+    * reads one bucket, so one task. Otherwise — a table whose untagged
+    * pre-bucket files or two B values have not been compacted away, or
+    * `spark.sql.sources.v2.bucketing.enabled` off — `_bucket` reads one
+    * constant and the window pays one hash shuffle on `(_bucket, _id)`,
+    * grouping exactly as `_id` alone. */
   private def newestFirst(df: DataFrame): DataFrame =
     df.withColumn("__rn", row_number().over(
       Window.partitionBy(col(GraftDocLog.BucketCol), col("_id"))
@@ -124,16 +126,16 @@ object GraftDoc {
 
   /** Upsert-resolved view: the latest version of each `_id`, minus keys
     * whose latest version is a tombstone. A full read of a bucketed table
-    * runs B tasks with no exchange; an untagged or mixed-B table costs one
-    * hash shuffle on `_id` after a pruned parallel file scan (see
+    * runs B tasks with no exchange; a mixed-layout table costs one hash
+    * shuffle on `_id` after a pruned parallel file scan (see
     * [[newestFirst]]). A read filtered to one key
     * (`snapshot(...).filter(col("_id") === k)`) reads only the files of
-    * the key's bucket and runs as one task with no exchange: the scan
-    * drops other keys' lines before the JSON parse and reports itself
-    * clustered on `_id` — which Spark uses while
+    * the key's bucket, drops other keys' lines before the JSON parse and
+    * runs as that bucket's one task with no exchange — while
     * `spark.sql.sources.v2.bucketing.enabled` is on (the default; off, the
-    * read falls back to the shuffle). The tombstone-seq set is a tiny
-    * driver-side manifest read baked into the plan as a literal filter.
+    * read falls back to the shuffle). The tombstone-seq set comes from the
+    * commit dir names of one root listing and is baked into the plan as a
+    * literal filter. A version-1 table (no `_format` marker) is refused.
     * Intra-commit duplicate `_id`s are a writer contract violation (the
     * reference store would apply them in arbitrary put order); dedupe
     * upstream if the batch can carry them. */
@@ -180,10 +182,11 @@ object GraftDoc {
     * bounds the scan cost and the merge-on-read window after many
     * streaming epochs. On a bucketed table this is one Spark job: the
     * snapshot's B key-grouped tasks each write their own bucket's file.
-    * A table written before the bucket layout is migrated here: it takes
-    * the session's `spark.sql.shuffle.partitions` as its B before the base
-    * is written, so the base and every later commit are bucketed (this
-    * fold still shuffles once). Crash-safe ordering — the compacted base is
+    * A table that still holds untagged pre-bucket files (or two B values)
+    * is made uniform here: the base is written in the recorded B, so once
+    * the older commits are dropped every file carries it (this fold still
+    * shuffles once). A version-1 table is refused, as by [[snapshot]].
+    * Crash-safe ordering — the compacted base is
     * committed before old commits are dropped, and `snapshot` stays
     * correct at every intermediate state (the base outranks everything
     * it absorbed).
@@ -202,8 +205,6 @@ object GraftDoc {
     * lives in `_epochs/`, outside the folded commit dirs. */
   def compact(spark: SparkSession, path: String): Unit = {
     val before = GraftDocLog.latestCommitSeq(path)
-    if (GraftDocLog.recordedBuckets(path).isEmpty)
-      GraftDocLog.stampBuckets(path, spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val tag = java.util.UUID.randomUUID().toString
     snapshot(spark, path).write.format("graft-doc").mode("append")
       .option(GraftDocLog.CommitTagOpt, tag).save(path)
@@ -211,20 +212,5 @@ object GraftDoc {
       throw new IllegalStateException(
         s"graft-doc: compaction base commit (tag $tag) not found under $path"))
     GraftDocLog.dropCommitsBelow(path, before + 1)
-    // Compaction is the format-migration point: every commit at or below
-    // the horizon is folded into the just-written base (current format,
-    // tombstones purged) and racers past the horizon were written by
-    // current code too — so the table is now provably flag-era and can be
-    // stamped with the `_format` marker. A legacy or marker-less table
-    // thereby upgrades to O(1) tombstone discovery on its first
-    // compaction instead of paying the manifest-scan fallback forever.
-    // REQUIREMENT: "racers were written by current code" assumes no
-    // pre-flag-era writer binary is still active against this table when
-    // compact() runs — in a mixed-version deployment window, a legacy
-    // writer's manifest-only tombstone landing after the stamp would be
-    // skipped by the fast path and its deletes would resurface. Upgrade
-    // all writers before running the first compaction (single-writer
-    // operation, the reference's own model, satisfies this trivially).
-    GraftDocLog.stampFormatMarker(path)
   }
 }

@@ -50,9 +50,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *    hash `HashPartitioning` uses) and writes one file per non-empty
   *    bucket, named `part-<pid>-<task>-b<bucket>of<B>-<idx>.jsonl` — so a
   *    commit holds up to tasks × B files. B is `spark.sql.shuffle.partitions`
-  *    of the session that creates the table (or that first compacts a
-  *    table written before the layout), recorded in `_buckets`; appends
-  *    reuse it;
+  *    of the session that creates the table, recorded in `_buckets`;
+  *    appends reuse it. This is the one layout writers produce: the first
+  *    append to a table written before it records B and tags its files,
+  *    and the reads below stay correct over the mix until
+  *    [[GraftDoc.compact]] makes the table uniform;
+  *  - the tombstone flag of a delete commit rides its dir name
+  *    (`commit_<seq>t_<uuid>`), marked by the `_format` file; a table with
+  *    commits and no `_format` predates the flag (version 1, deletes
+  *    recorded only in manifests) and is refused by every read and append,
+  *    naming its path, until it is rewritten with overwrite;
   *  - every part file's row count and `_id` min/max land in the commit
   *    manifest, giving the scan file-level skipping for `_id` and
   *    `_commit` predicates (the reference store's point-read-by-key
@@ -65,14 +72,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *    protocol) so a few big commits still parallelize;
   *  - [[GraftDoc.snapshot]] resolves latest-document-per-`_id` with a
   *    window over `(_bucket, _id)`. When every file it reads carries the
-  *    same B, the scan reports key-grouped partitioning on `_bucket`, so
-  *    a full read runs B tasks, one per bucket, and resolves versions with
-  *    no exchange. Untagged or mixed-B tables read `_bucket` as one
-  *    constant and pay one hash shuffle on `_id`, as does any read with
-  *    `spark.sql.sources.v2.bucketing.enabled` off. A read whose pushed
-  *    filters pin one `_id` skips other keys' lines before the JSON parse
-  *    and reports key-grouped partitioning on `_id`, so its versions
-  *    resolve in one task;
+  *    same B, the scan reports key-grouped partitioning on `_bucket` (each
+  *    split's bucket is its partition key), so a full read runs one task
+  *    per bucket and resolves versions with no exchange. A read whose
+  *    pushed filters pin one `_id` reads only that key's bucket, so the
+  *    same grouping gives it one task; it also skips other keys' lines
+  *    before the JSON parse. A table still mixing untagged and tagged
+  *    files, or two B values, reads `_bucket` as one constant and pays one
+  *    hash shuffle on `_id`, as does any read with
+  *    `spark.sql.sources.v2.bucketing.enabled` off;
   *  - [[GraftDoc.compact]] folds history into a single base commit so
   *    read amplification stays bounded.
   *
@@ -431,15 +439,6 @@ class GraftDocScan(required: StructType, path: String, pushed: Array[Filter],
   override def description(): String =
     s"graft-doc $path, PushedFilters: [${pushed.mkString(", ")}]"
 
-  /** The one `_id` the pushed filters pin, when `_id` is read. Every row
-    * such a scan can return shares that key, so the scan reports itself
-    * clustered on `_id`: the snapshot window's `ClusteredDistribution`
-    * over `(_bucket, _id)` is met without an exchange, and Spark groups
-    * the batch splits (all keyed alike) into one task. */
-  private val pinnedId: Option[String] =
-    if (!required.fieldNames.contains("_id")) None
-    else GraftDocFilters.wantedIds(pushed).filter(_.size == 1).map(_.head)
-
   private val wanted = GraftDocFilters.wantedIds(pushed).map(_.map(UTF8String.fromString))
 
   /** A bucketed file passes when one of the pinned keys hashes into it. */
@@ -487,8 +486,10 @@ class GraftDocScan(required: StructType, path: String, pushed: Array[Filter],
   /** Key-grouped by bucket: every admitted file carries the same B and the
     * query reads `_bucket` (the snapshot window partitions on it). Each
     * bucket then holds every version of its keys, so Spark runs one task
-    * per bucket and the window needs no exchange. A mixed table never
-    * qualifies, so no key's versions are split across two groups. */
+    * per bucket and the window needs no exchange; a read pinned to one
+    * `_id` has its files pruned to that key's bucket and so runs one task.
+    * A mixed table never qualifies, so no key's versions are split across
+    * two groups. */
   private lazy val bucketed: Boolean =
     keyGrouping && required.fieldNames.contains(GraftDocLog.BucketCol) &&
       files.nonEmpty && files.forall(_.buckets > 0) &&
@@ -497,22 +498,16 @@ class GraftDocScan(required: StructType, path: String, pushed: Array[Filter],
   private lazy val splits = splitsOf(files, bucketed)
 
   override def outputPartitioning(): Partitioning =
-    if (pinnedId.isDefined)
-      new KeyGroupedPartitioning(Array(Expressions.identity("_id")), 1)
-    else if (bucketed)
+    if (bucketed)
       new KeyGroupedPartitioning(Array(Expressions.identity(GraftDocLog.BucketCol)),
         files.map(_.bucket).distinct.size)
     else new UnknownPartitioning(0)
 
   /** The admitted files in byte-range splits, so a few large commit files
-    * still spread across the cluster; keyed by `_id` or by bucket when
-    * the scan reports that grouping. */
+    * still spread across the cluster; each split's bucket is its key when
+    * the scan reports the grouping. */
   override def planInputPartitions(): Array[InputPartition] =
-    pinnedId match {
-      case Some(id) => splits.map(GraftDocKeyedPartition(_, UTF8String.fromString(id)))
-      case None if bucketed => splits.map(s => GraftDocKeyedPartition(s, s.bucket))
-      case None => splits.toArray[InputPartition]
-    }
+    splits.toArray[InputPartition]
 
   /** Micro-batch slice: the files of commits in (start, end] — listed by
     * range, so a tailing reader's per-batch planning cost tracks the
@@ -668,16 +663,13 @@ class GraftDocMicroBatchStream(scan: GraftDocScan, path: String,
   override def stop(): Unit = ()
 }
 
-/** `bucket`: the value the split's rows read for `_bucket`. */
+/** `bucket`: the value the split's rows read for `_bucket`, and the key
+  * Spark groups the splits of a key-grouped scan by (it reads the key only
+  * when the scan reports [[KeyGroupedPartitioning]]). */
 case class GraftDocInputPartition(file: String, commitSeq: Long,
     start: Long, length: Long, tombstone: Boolean = false, bucket: Int = 0)
-    extends InputPartition
-
-/** A split of a key-grouped scan; Spark groups splits by `key` — the
-  * pinned `_id` (a `UTF8String`) or the file's bucket (an `Int`). */
-case class GraftDocKeyedPartition(split: GraftDocInputPartition, key: Any)
     extends HasPartitionKey {
-  override def partitionKey(): InternalRow = InternalRow(key)
+  override def partitionKey(): InternalRow = InternalRow(bucket)
 }
 
 /** Splits one task reads one after another. */
@@ -696,7 +688,6 @@ class GraftDocReaderFactory(requiredSchemaJson: String,
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case k: GraftDocKeyedPartition => reader(k.split)
       case s: GraftDocInputPartition => reader(s)
       case GraftDocPackedPartition(splits) => new PartitionReader[InternalRow] {
         private val rest = splits.iterator
@@ -857,15 +848,17 @@ class GraftDocWriteBuilder(info: LogicalWriteInfo, path: String)
         .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
         .getOrElse(Nil)
 
+    private def factory(stagingDir: String, buckets: Int) =
+      new GraftDocWriterFactory(stagingDir, info.schema().json, targetFileRows,
+        new SerializableHadoopConf(GraftDocLog.hadoopConf()), statsColumns, buckets)
+
     override def toBatch: BatchWrite = new BatchWrite {
       private val writeId = UUID.randomUUID().toString
       private var buckets = 0
 
       override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DataWriterFactory = {
         buckets = GraftDocLog.writeBuckets(path, truncateFirst)
-        new GraftDocWriterFactory(
-          GraftDocLog.stagingDir(path, writeId), info.schema().json, targetFileRows,
-          new SerializableHadoopConf(GraftDocLog.hadoopConf()), statsColumns, buckets)
+        factory(GraftDocLog.stagingDir(path, writeId), buckets)
       }
 
       override def commit(messages: Array[WriterCommitMessage]): Unit =
@@ -882,15 +875,13 @@ class GraftDocWriteBuilder(info: LogicalWriteInfo, path: String)
       private def epochDir(epochId: Long) =
         s"${GraftDocLog.stagingDir(path, writeId)}/epoch_$epochId"
 
-      // re-read per micro-batch, so a running stream adopts the B a
-      // compaction gives a table written before the bucket layout
+      // re-read per micro-batch, so a running stream adopts the B the
+      // table records once another writer truncated it
       @volatile private var buckets = 0
 
       override def createStreamingWriterFactory(pInfo: PhysicalWriteInfo): StreamingDataWriterFactory = {
         buckets = GraftDocLog.writeBuckets(path, truncate = false)
-        new GraftDocStreamingWriterFactory(
-          GraftDocLog.stagingDir(path, writeId), info.schema().json, targetFileRows,
-          new SerializableHadoopConf(GraftDocLog.hadoopConf()), statsColumns, buckets)
+        factory(GraftDocLog.stagingDir(path, writeId), buckets)
       }
 
       private val autoCompactCommits =
@@ -922,19 +913,16 @@ class GraftDocWriteBuilder(info: LogicalWriteInfo, path: String)
   }
 }
 
+/** Task writers for batch writes (staged under `stagingDir`) and for
+  * streaming epochs (under `stagingDir/epoch_<id>`). */
 class GraftDocWriterFactory(stagingDir: String, schemaJson: String,
     targetFileRows: Option[Long], conf: SerializableHadoopConf,
-    statsColumns: Seq[String] = Nil, buckets: Int = 0)
-    extends DataWriterFactory {
+    statsColumns: Seq[String], buckets: Int)
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftDocDataWriter(stagingDir, partitionId, taskId, schemaJson,
       targetFileRows, conf, statsColumns, buckets)
-}
 
-class GraftDocStreamingWriterFactory(stagingDir: String, schemaJson: String,
-    targetFileRows: Option[Long], conf: SerializableHadoopConf,
-    statsColumns: Seq[String] = Nil, buckets: Int = 0)
-    extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new GraftDocDataWriter(s"$stagingDir/epoch_$epochId", partitionId, taskId,
@@ -957,7 +945,7 @@ case class GraftDocFileStat(name: String, rows: Long,
     cols: Seq[GraftDocColStat] = Nil)
 
 /** Task-side writer: serializes rows to JSON lines in one part file per
-  * `_id` bucket (one file when `buckets` is 0, an untagged table), rolling
+  * `_id` bucket, rolling
   * a bucket to a new file every `targetFileRows` rows (small-files /
   * large-files control with zero shuffle — file boundaries are
   * task-local), and tracking each file's row count and `_id` min/max for
@@ -965,7 +953,7 @@ case class GraftDocFileStat(name: String, rows: Long,
 class GraftDocDataWriter(stagingDir: String, partitionId: Int, taskId: Long,
     schemaJson: String, targetFileRows: Option[Long],
     conf: SerializableHadoopConf,
-    statsColumns: Seq[String] = Nil, buckets: Int = 0) extends DataWriter[InternalRow] {
+    statsColumns: Seq[String], buckets: Int) extends DataWriter[InternalRow] {
 
   private val schema = GraftDocLog.schemaFromJson(schemaJson)
   private val json = new docjson.RowJsonWriter(schema)
@@ -992,11 +980,10 @@ class GraftDocDataWriter(stagingDir: String, partitionId: Int, taskId: Long,
     }.toArray
   private val stats = ArrayBuffer.empty[GraftDocFileStat]
   private val written = ArrayBuffer.empty[Path]
-  private val parts = new Array[Part](math.max(buckets, 1))
+  private val parts = new Array[Part](buckets)
 
   /** The open part file of one bucket and its manifest stats. */
   private final class Part(bucket: Int) {
-    private val tag = if (buckets > 0) s"-b${bucket}of$buckets" else ""
     var out: java.io.BufferedWriter = _
     private var file: Path = _
     private var idx = 0
@@ -1034,7 +1021,8 @@ class GraftDocDataWriter(stagingDir: String, partitionId: Int, taskId: Long,
 
     def roll(): Unit = {
       seal()
-      file = new Path(stagingDir, f"part-$partitionId%05d-$taskId$tag-$idx%04d.jsonl")
+      file = new Path(stagingDir,
+        f"part-$partitionId%05d-$taskId-b${bucket}of$buckets-$idx%04d.jsonl")
       written += file
       out = new java.io.BufferedWriter(
         new java.io.OutputStreamWriter(fs.create(file, true), "UTF-8"))
@@ -1046,7 +1034,7 @@ class GraftDocDataWriter(stagingDir: String, partitionId: Int, taskId: Long,
     val id =
       if (idOrdinal >= 0 && !row.isNullAt(idOrdinal)) row.getUTF8String(idOrdinal)
       else null
-    val b = if (buckets > 0) GraftDocLog.bucketOf(id, buckets) else 0
+    val b = GraftDocLog.bucketOf(id, buckets)
     if (parts(b) == null) parts(b) = new Part(b)
     val p = parts(b)
     if (p.out == null || targetFileRows.exists(p.rows >= _)) p.roll()
@@ -1109,10 +1097,11 @@ object GraftDocLog {
   val OpCol = "_op"
   /** Hidden metadata column: see [[GraftDocBucketColumn]]. */
   val BucketCol = "_bucket"
-  /** The table's bucket count B, one decimal line, written when the table
-    * is created (or truncated) and when [[GraftDoc.compact]] migrates a
-    * table written before the bucket layout. Writers read it; readers
-    * never do — each part file's name states its own bucket and B. */
+  /** The table's bucket count B, one decimal line, written by the commit
+    * that creates or truncates the table and by any commit that finds it
+    * missing (the first append to a table written before the bucket
+    * layout). Writers read it; readers never do — each part file's name
+    * states its own bucket and B. */
   val BucketsFile = "_buckets"
   val SchemaFile = "_schema.json"
   /** Additive schema evolution is APPEND-ONLY: each evolving writer
@@ -1133,12 +1122,11 @@ object GraftDocLog {
   /** Log-format version marker, written once when a table is CREATED.
     * Version 2 = the tombstone flag rides the commit dir name
     * (`commit_<seq>t_<uuid>`), so delete discovery needs no manifest
-    * reads. Tables WITHOUT the marker predate the flag (their tombstone
-    * commits are flagged only inside the manifest), so [[tableState]]
-    * falls back to the legacy manifest scan for them — deleted documents
-    * must never resurface just because the discovery fast-path got
-    * faster. A legacy table keeps its legacy planning cost until
-    * truncated (truncate empties the log and stamps the marker). */
+    * reads. A table with commits and no marker predates the flag (version
+    * 1: its tombstone commits are flagged only inside the manifest), and
+    * every read and append of it is refused by [[requireFormat]] — read
+    * as version 2, its deleted documents would resurface. Rewriting it
+    * with overwrite stamps the marker. */
   val FormatFile = "_format"
   val FormatVersion = "2"
   val TargetFileRowsOpt = "targetFileRows"
@@ -1377,15 +1365,15 @@ object GraftDocLog {
   // ------------------------------------------------------------ JSON codec
 
   /** A commit manifest: the writer's (queryId, epochId) for replay checks,
-    * an optional tag (compaction finds its base by it), the legacy
-    * tombstone flag, and each part file's stats. */
+    * an optional tag (compaction finds its base by it) and each part file's
+    * stats. */
   private[graft] case class Manifest(queryId: String, epochId: Long,
-      tag: Option[String], tombstone: Boolean, files: Seq[GraftDocFileStat])
+      tag: Option[String], files: Seq[GraftDocFileStat])
 
   /** The log's one JSON codec, and the one place its manifests and
     * `_epochs/<queryId>` watermarks are read and written: Jackson's tree
     * model (the repo's idiom, as in `AvroSchemaBridge`), compact output in
-    * field order — `{"queryId":…,"epochId":…,"tag":…,"tombstone":true,
+    * field order — `{"queryId":…,"epochId":…,"tag":…,
     * "files":[{"name":…,"rows":…,"minId":…,"maxId":…,"cols":[{"c":…,
     * "t":…,"min":…,"max":…}]}]}` with absent optionals omitted, and
     * `{"epochId":…,"seq":…}` for a watermark. */
@@ -1396,7 +1384,6 @@ object GraftDocLog {
     def manifestJson(m: Manifest): String = {
       val n = mapper.createObjectNode().put("queryId", m.queryId).put("epochId", m.epochId)
       m.tag.foreach(n.put("tag", _))
-      if (m.tombstone) n.put("tombstone", true)
       val files = n.putArray("files")
       m.files.foreach { f =>
         val o = files.addObject().put("name", f.name).put("rows", f.rows)
@@ -1414,7 +1401,7 @@ object GraftDocLog {
       val n = mapper.readTree(json)
       def opt(o: JsonNode, k: String) = Option(o.get(k)).map(_.asText)
       Manifest(n.path("queryId").asText, n.path("epochId").asLong,
-        opt(n, "tag"), n.path("tombstone").asBoolean,
+        opt(n, "tag"),
         n.path("files").asScala.toSeq.map { f =>
           GraftDocFileStat(f.path("name").asText, f.path("rows").asLong,
             opt(f, "minId"), opt(f, "maxId"),
@@ -1476,7 +1463,7 @@ object GraftDocLog {
     listCommitFileInfos(tablePath).map(fi => fi.seq -> fi.path)
 
   /** `bucket` of `buckets` as the file name states them; `buckets` 0 for
-    * an untagged file. */
+    * an untagged file (written before the bucket layout). */
   case class CommitFileInfo(seq: Long, path: String, bytes: Long, rows: Long,
       minId: Option[String], maxId: Option[String], tombstone: Boolean,
       colStats: Seq[GraftDocColStat] = Nil, bucket: Int = 0, buckets: Int = 0)
@@ -1512,7 +1499,7 @@ object GraftDocLog {
       toIncl: Long, withStats: Boolean = true,
       seqOk: Long => Boolean = _ => true): Iterator[(Long, Seq[CommitFileInfo])] = {
     val (fs, root) = fsFor(tablePath)
-    listRoot(fs, root).commits.iterator
+    requireFormat(listRoot(fs, root), tablePath).commits.iterator
       .filter(c => c.seq > fromExcl && c.seq <= toIncl && seqOk(c.seq))
       .map { c =>
         val stat = (if (withStats) LogCodec.readManifest(fs, c.path) else None)
@@ -1560,29 +1547,22 @@ object GraftDocLog {
     }
   }
 
-  /** B for a write about to start: the session's shuffle partition count
-    * for a table it creates or truncates, the recorded B for an append,
-    * and 0 (untagged files) for an append to a table written before the
-    * bucket layout — until compaction migrates it. */
-  def writeBuckets(tablePath: String, truncate: Boolean): Int = {
-    lazy val session = SQLConf.get.defaultNumShufflePartitions
-    if (truncate) session
-    else recordedBuckets(tablePath).getOrElse(
-      if (latestCommitSeq(tablePath) == 0L) session else 0)
-  }
+  /** B for a write about to start: the recorded B for an append, else
+    * (a table being created or truncated, or one written before the bucket
+    * layout) the session's shuffle partition count, which the commit then
+    * records. */
+  def writeBuckets(tablePath: String, truncate: Boolean): Int =
+    (if (truncate) None else recordedBuckets(tablePath))
+      .getOrElse(SQLConf.get.defaultNumShufflePartitions)
 
-  /** Record `buckets` as the table's B. */
-  def stampBuckets(tablePath: String, buckets: Int): Unit = {
-    val (fs, root) = fsFor(tablePath)
-    writeFileAtomic(fs, new Path(root, BucketsFile), buckets.toString)
-  }
-
-  /** Stamp the `_format` version marker unconditionally — called by
-    * compaction, the point at which a legacy table's pre-flag commits
-    * have provably been folded away (see [[GraftDoc.compact]]). */
-  def stampFormatMarker(tablePath: String): Unit = {
-    val (fs, root) = fsFor(tablePath)
-    writeFile(fs, new Path(root, FormatFile), FormatVersion, overwrite = true)
+  /** `listed`, unless it shows a version-1 table (see [[FormatFile]]). */
+  private def requireFormat(listed: RootListing, tablePath: String): RootListing = {
+    if (listed.commits.nonEmpty && !listed.hasFormat)
+      throw new IllegalStateException(
+        s"graft-doc: $tablePath is a version-1 table (commits but no $FormatFile " +
+          "marker): its deletes are recorded only in commit manifests, which are " +
+          "no longer read for them. Rewrite the table with overwrite.")
+    listed
   }
 
   /** One-pass consistent view for snapshot construction: (latest commit
@@ -1591,34 +1571,17 @@ object GraftDocLog {
     * point-in-time read — a delete or write landing between plan
     * construction and execution is invisible instead of half-visible
     * (the tombstone set and the file list can never disagree). Cost is
-    * ONE root listing, which also shows the `_format` marker, and ZERO
-    * manifest reads: the tombstone flag rides the commit dir name
+    * ONE root listing, which also shows the `_format` marker (a version-1
+    * table is refused, see [[FormatFile]]), and ZERO manifest reads: the
+    * tombstone flag rides the commit dir name
     * (`commit_<seq>t_<uuid>`), so delete discovery on a long-unmaintained
     * table (thousands of CDC epochs, no compaction) stays flat instead of
     * paying O(#commits) driver FS round-trips — `GraftDocConnectorSpec`
     * pins this with a manifest-read counter over 50 epochs. */
   def tableState(tablePath: String): (Long, Set[Long]) = {
     val (fs, root) = fsFor(tablePath)
-    val listed = listRoot(fs, root)
-    val (flagged, unflagged) = listed.commits.partition(_.tombstone)
-    if (listed.commits.isEmpty || listed.hasFormat)
-      (listed.latestSeq, flagged.map(_.seq).toSet)
-    else {
-      // legacy (pre-marker) table: tombstone commits carry the flag only
-      // in their manifest — scan the unflagged ones so old deletes never
-      // resurface (O(#commits), the cost this table format always paid).
-      // A missing or unreadable manifest fails LOUDLY: degrading to
-      // "not a tombstone" on a transient I/O error would silently
-      // resurface deleted documents — the exact corruption this fallback
-      // exists to prevent. The caller can retry; the store cannot
-      // un-delete.
-      val legacy = unflagged.filter(c => LogCodec.readManifest(fs, c.path)
-        .getOrElse(throw new java.io.IOException(
-          s"graft-doc: legacy commit ${c.path} has no manifest; cannot " +
-            "determine its tombstone state (snapshot would be unsafe)"))
-        .tombstone)
-      (listed.latestSeq, (flagged ++ legacy).map(_.seq).toSet)
-    }
+    val listed = requireFormat(listRoot(fs, root), tablePath)
+    (listed.latestSeq, listed.commits.filter(_.tombstone).map(_.seq).toSet)
   }
 
   /** Live commit-dir count — one root listStatus, no file reads; the
@@ -1746,7 +1709,7 @@ object GraftDocLog {
       stats: Seq[GraftDocFileStat] = Nil,
       tag: Option[String] = None,
       tombstone: Boolean = false,
-      buckets: Int = 0): Unit =
+      buckets: Int): Unit =
     tableLocks.computeIfAbsent(tablePath, _ => new Object).synchronized {
     val (fs, root) = fsFor(tablePath)
     val staging = new Path(stagingDir)
@@ -1764,18 +1727,21 @@ object GraftDocLog {
       listed.commits.foreach(c => fs.delete(c.path, true))
       listed.claims.foreach(c => fs.delete(c.path, false))
       LogCodec.dropWatermarks(fs, root)
+    } else {
+      // an append never gives a version-1 table the marker: its
+      // manifest-flagged tombstones would go undiscovered (the write's
+      // abort drops the staged files)
+      requireFormat(listed, tablePath)
     }
-    // stamp the format version on table CREATION only (no commits yet —
-    // fresh table or just truncated): a legacy table must never gain the
-    // marker while legacy commits remain, or their manifest-flagged
-    // tombstones would go undiscovered (see [[FormatFile]])
-    val creating = truncateFirst || listed.commits.isEmpty
-    if (creating && !listed.hasFormat)
+    // past the check, a table without the marker is being created (no
+    // commits yet, or just truncated)
+    if (!listed.hasFormat)
       writeFile(fs, new Path(root, FormatFile), FormatVersion, overwrite = true)
-    // the creating (or truncating) write's B becomes the table's; a racing
-    // creator that lost keeps its own B in its file names, which readers
-    // see as a mixed table
-    if (buckets > 0 && creating && (truncateFirst || !listed.hasBuckets))
+    // a truncating write's B becomes the table's, as does the B of any
+    // write that finds none recorded (a new table, or the first append to
+    // one written before the bucket layout); a racing creator that lost
+    // keeps its own B in its file names, which readers see as a mixed table
+    if (truncateFirst || !listed.hasBuckets)
       writeFileAtomic(fs, new Path(root, BucketsFile), buckets.toString)
 
     // schema stability across commits: an append whose fields conflict
@@ -1832,7 +1798,7 @@ object GraftDocLog {
       listed.schemaDeltas.foreach { case (_, p) => fs.delete(p, false) }
     }
 
-    LogCodec.writeManifest(fs, staging, Manifest(queryId, epochId, tag, tombstone, stats))
+    LogCodec.writeManifest(fs, staging, Manifest(queryId, epochId, tag, stats))
     if (!hasSchema) {
       if (!tombstone) writeFile(fs, schemaPath, schema.json, overwrite = false)
       else { fs.delete(staging, true)

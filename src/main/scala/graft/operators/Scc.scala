@@ -79,8 +79,8 @@ object Scc {
       // Cut both inputs ONCE: minReach's hook join consumes `edges`
       // every inner round, so an uncut coreEdges would replay the two
       // trim semi-joins per round. The two propagations are independent
-      // (same core, opposite edge direction) — submit them from two
-      // driver threads so their per-round jobs interleave on the
+      // (same core, opposite edge direction) — [[DriverPar]] submits them
+      // from two driver threads so their per-round jobs interleave on the
       // cluster instead of serializing (the scheduler fills idle slots
       // with whichever propagation has work; halves the critical path
       // when rounds are overhead-bound).
@@ -88,14 +88,8 @@ object Scc {
       val coreEdgesC = IterationCheckpoint.cut(live
         .join(core.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(core.select(col("node").as("dst")), Seq("dst"), "left_semi"))
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fF = Future(minReach(coreC, coreEdgesC))
-      val gF = Future(minReach(coreC,
-        coreEdgesC.select(col("dst").as("src"), col("src").as("dst"))))
-      val f = Await.result(fF, Duration.Inf)
-      val g = Await.result(gF, Duration.Inf)
+      val Seq(f, g) = DriverPar.map(Seq(coreEdgesC,
+        coreEdgesC.select(col("dst").as("src"), col("src").as("dst"))))(minReach(coreC, _))
       val settledNow = f.join(g.withColumnRenamed("lab", "glab"), Seq("node"))
         .filter(col("lab") === col("glab"))
         .select(col("node"), col("lab").as("scc"))

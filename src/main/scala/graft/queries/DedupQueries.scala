@@ -1614,7 +1614,7 @@ object DedupQueries {
                 col("max_cluster").cast("long").as("max_cluster"))
           }
           // the five levels are INDEPENDENT CC chains of micro-stage jobs
-          // at ~0.1 task occupancy (BimodalProbe) — overlapping a few of
+          // at ~0.1 task occupancy (JobProfile `occ=`) — overlapping a few of
           // them from driver threads back-fills each other's scheduling
           // gaps (guide §2.6); each level's own rounds stay sequential,
           // and the output union keeps the deterministic threshold order.

@@ -792,7 +792,7 @@ object SimilarityQueries {
         // against the in-plan frame — and it is the real build order
         // (memberships always derive from the centroids the index
         // actually stores). It also halves the centroid recomputation:
-        // the round-8 bimodality root cause (Q5mProbe) was 22 Spark
+        // the round-8 bimodality root cause (a listener probe) was 22 Spark
         // jobs per execution, 4 of them replaying the adaptive-k
         // count-agg + centroid filter once per downstream action.
         centroids(e).write.mode("overwrite").parquet(s"$p/cent")

@@ -3,16 +3,21 @@ package graft.tools
 import graft.GraftSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-/** Driver-overhead decomposition for the low-occupancy queries
-  * (BimodalProbe's occ=0.03-0.14 family): runs ONE named query in a
-  * warmed JVM and prints, per attempt, the number of Spark JOBS and
-  * STAGES it ran, the wall covered by at least one running job vs the
-  * wall covered by none (= pure driver think time: Catalyst planning,
-  * codegen, commit/checkpoint I/O, foreachBatch orchestration), and the
-  * top job-gap spans. This splits "low occupancy" into (a) gaps BETWEEN
-  * jobs (driver work between actions) and (b) idle cores DURING jobs
-  * (micro-stages / skew), which point at different fixes.
+/** Driver-overhead and attempt-variance decomposition for one query:
+  * runs ONE named query in a warmed JVM and prints, per attempt, the
+  * number of Spark JOBS, STAGES and tasks it ran, the executor run time
+  * and task-side GC of those tasks, the JVM's GC time, the task occupancy
+  * (executor run time / (wall × cpus)), the wall covered by at least one
+  * running job vs the wall covered by none (= pure driver think time:
+  * Catalyst planning, codegen, commit/checkpoint I/O, foreachBatch
+  * orchestration), and the top job-gap spans. This splits "low
+  * occupancy" (the 0.03-0.14 family of iterative folds) into (a) gaps
+  * BETWEEN jobs (driver work between actions), (b) idle cores DURING jobs
+  * (micro-stages / skew) and (c) GC pressure, which point at different
+  * fixes, and shows which of them a slow attempt of a spread-out query
+  * owes its time to.
   *
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.JobProfile qc8 2"
   */
@@ -39,6 +44,11 @@ object JobProfile {
     val done = mutable.ArrayBuffer[Span]()
     val stages = new java.util.concurrent.atomic.AtomicLong(0)
     val tasks = new java.util.concurrent.atomic.AtomicLong(0)
+    val taskRunMs = new java.util.concurrent.atomic.AtomicLong(0)
+    val taskGcMs = new java.util.concurrent.atomic.AtomicLong(0)
+    def jvmGcMs: Long =
+      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+        .asScala.map(_.getCollectionTime).sum
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.synchronized {
@@ -58,7 +68,11 @@ object JobProfile {
         stages.incrementAndGet(); ()
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet(); ()
+        tasks.incrementAndGet()
+        Option(e.taskMetrics).foreach { m =>
+          taskRunMs.addAndGet(m.executorRunTime)
+          taskGcMs.addAndGet(m.jvmGCTime)
+        }
       }
     })
 
@@ -72,10 +86,14 @@ object JobProfile {
       done.synchronized(done.clear())
       stages.set(0)
       tasks.set(0)
+      taskRunMs.set(0)
+      taskGcMs.set(0)
+      val gc0 = jvmGcMs
       val w0 = System.currentTimeMillis()
       fn(spark, sfDir).count()
       val w1 = System.currentTimeMillis()
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      val jvmGc = jvmGcMs - gc0
       val spans = done.synchronized(done.toVector)
         .filter(s => s.end >= w0 && s.start <= w1)
         .sortBy(_.start)
@@ -93,6 +111,8 @@ object JobProfile {
       val wall = w1 - w0
       println(f"[jobprofile] attempt=$i wall=${wall / 1e3}%.2fs jobs=${spans.size} " +
         f"stages=${stages.get} tasks=${tasks.get} " +
+        f"task_time=${taskRunMs.get / 1e3}%.2fs task_gc=${taskGcMs.get / 1e3}%.2fs " +
+        f"jvm_gc=${jvmGc / 1e3}%.2fs occ=${taskRunMs.get.toDouble / (wall * cpus)}%.2f " +
         f"job_covered=${(wall - gapTotal) / 1e3}%.2fs between_jobs=${gapTotal / 1e3}%.2fs " +
         f"top_gaps=${gaps.sortBy(g => g._1 - g._2).take(5).map(g => f"${(g._2 - g._1) / 1e3}%.2f").mkString(",")}")
       // the slowest jobs with their call sites / descriptions: which

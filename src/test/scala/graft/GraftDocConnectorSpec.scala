@@ -586,40 +586,52 @@ class GraftDocConnectorSpec extends SparkSpec {
     assert(GraftDoc.log(spark, dir).count() == 2) // base holds only live docs
   }
 
-  test("legacy (pre-marker) tables: manifest-flagged tombstones still excluded") {
+  test("v1 (pre-marker) tables are refused by path until overwritten") {
     val dir = tmp()
     GraftDoc.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "name"), "k", dir)
     GraftDoc.delete(spark, dir, Seq(2L).toDF("k"))
-    // rewrite the on-disk layout to the PRE-FLAG format: drop the version
-    // marker and strip the 't' from the tombstone commit's dir name, so
-    // the flag survives only inside the manifest — exactly what a table
-    // written before the dir-name flag looks like
+    // rewrite the on-disk layout to version 1: drop the version marker and
+    // strip the 't' from the tombstone commit's dir name, so the delete is
+    // recorded only in its manifest — what a table written before the
+    // dir-name flag looks like
     val root = java.nio.file.Paths.get(dir)
     java.nio.file.Files.deleteIfExists(root.resolve(GraftDocLog.FormatFile))
+    java.nio.file.Files.deleteIfExists(root.resolve(s".${GraftDocLog.FormatFile}.crc"))
     val tombDir = java.nio.file.Files.list(root).iterator().asScala
       .find(p => p.getFileName.toString.matches("commit_[0-9]+t_.*"))
       .getOrElse(fail("expected a flagged tombstone commit dir"))
     java.nio.file.Files.move(tombDir,
       root.resolve(tombDir.getFileName.toString
         .replaceFirst("(commit_[0-9]+)t_", "$1_")))
-    // fast path alone would resurface doc 2; the legacy fallback must not
-    assert(GraftDocLog.tableState(dir)._2 == Set(2L),
-      "legacy fallback should discover the manifest-flagged tombstone")
-    assert(GraftDoc.snapshot(spark, dir).orderBy("_id")
-      .select("_id").as[String].collect().toSeq == Seq("1", "3"),
-      "legacy tombstone commit resurfaced a deleted document")
-    // compaction is the migration point: folds the legacy commits away,
-    // stamps the marker, deletes still hold, fast path from here on
-    GraftDoc.compact(spark, dir)
-    assert(java.nio.file.Files.exists(root.resolve(GraftDocLog.FormatFile)),
-      "compaction should stamp the format marker")
+    // read as version 2 the delete of key 2 would be lost: every read,
+    // compaction and append fails, naming the table
+    def refused(what: String)(f: => Any): Unit = {
+      val e = intercept[Exception](f)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(m => m.contains(dir) && m.contains("version-1") &&
+        m.contains("overwrite")), s"$what: $msgs")
+    }
+    refused("snapshot")(GraftDoc.snapshot(spark, dir).collect())
+    refused("liveView")(GraftDoc.liveView(spark, dir).collect())
+    refused("readStream") {
+      val q = GraftDoc.readStream(spark, dir, withOp = true)
+        .writeStream.format("memory").queryName("v1_refused")
+        .option("checkpointLocation", tmp())
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+    }
+    refused("compact")(GraftDoc.compact(spark, dir))
+    refused("append")(GraftDoc.write(Seq((4L, "d")).toDF("k", "name"), "k", dir))
+    assert(!java.nio.file.Files.exists(root.resolve(GraftDocLog.FormatFile)))
+    // a rewrite with overwrite stamps the marker and makes it readable
+    GraftDoc.write(Seq((1L, "a"), (3L, "c")).toDF("k", "name"), "k", dir, overwrite = true)
+    assert(java.nio.file.Files.exists(root.resolve(GraftDocLog.FormatFile)))
     assert(GraftDoc.snapshot(spark, dir).orderBy("_id")
       .select("_id").as[String].collect().toSeq == Seq("1", "3"))
-    // and a NEW table carries the marker, keeping the O(1) fast path
-    val fresh = tmp()
-    GraftDoc.write(Seq((9L, "z")).toDF("k", "name"), "k", fresh)
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(fresh, GraftDocLog.FormatFile)))
+    assert(rows(GraftDoc.liveView(spark, dir)) == Seq("1" -> "a", "3" -> "c"))
+    GraftDoc.compact(spark, dir)
+    assert(rows(GraftDoc.snapshot(spark, dir)) == Seq("1" -> "a", "3" -> "c"))
   }
 
   test("deleting from a non-existent table is rejected") {
@@ -1421,13 +1433,14 @@ class GraftDocConnectorSpec extends SparkSpec {
   }
 
   test("mixed layouts never split a key's versions: untagged then tagged, and two B values") {
-    // untagged history, then a recorded B (a migration whose fold has not
-    // landed) and tagged commits over the same keys
+    // untagged history, then appends (the first records B) writing tagged
+    // files over the same keys
     val mixed = untag(historyTable())
-    GraftDocLog.stampBuckets(mixed, 4)
     // B = 4 history, then a racing creator's B = 3
     val twoB = historyTable()
-    GraftDocLog.stampBuckets(twoB, 3)
+    val twoBRoot = java.nio.file.Paths.get(twoB)
+    Files.deleteIfExists(twoBRoot.resolve(s".${GraftDocLog.BucketsFile}.crc"))
+    Files.writeString(twoBRoot.resolve(GraftDocLog.BucketsFile), "3")
     Seq(mixed -> Set("", "of4"), twoB -> Set("of4", "of3")).foreach { case (d, tags) =>
       GraftDoc.write(Seq((3L, "v5_3"), (5L, "v5_5"), (9L, "v5_9"), (7L, "v5_7"))
         .toDF("k", "name"), "k", d)
@@ -1446,30 +1459,38 @@ class GraftDocConnectorSpec extends SparkSpec {
     }
   }
 
-  test("compaction migrates an untagged table to the bucket layout") {
+  test("a pre-bucket table is tagged from its next append, then compacted") {
     val dir = untag(historyTable())
     val want = rows(GraftDoc.snapshot(spark, dir))
     assert(GraftDocLog.recordedBuckets(dir).isEmpty)
-    // appends keep writing untagged files until the migration
-    GraftDoc.write(Seq((41L, "v1_41")).toDF("k", "name"), "k", dir)
-    assert(bucketCounts(dir) == Set(""))
-    GraftDoc.compact(spark, dir)
+    // the first append records the session's B and tags its own files
+    GraftDoc.write(Seq((41L, "v1_41"), (3L, "v5_3")).toDF("k", "name"), "k", dir)
     assert(GraftDocLog.recordedBuckets(dir).contains(4))
+    assert(bucketCounts(dir) == Set("", "of4"))
+    val expected = (want.toMap ++ Seq("41" -> "v1_41", "3" -> "v5_3")).toSeq.sortBy(_._1)
+    val keys = Seq("3", "41", "5", "8")
+    def reads() = (rows(GraftDoc.snapshot(spark, dir)),
+      rows(GraftDoc.liveView(spark, dir)), keys.map(lookup(dir, _)))
+    val on = reads()
+    assert(on._1 == expected && on._2 == expected)
+    assert(on == withBucketing(on = false)(reads()))
+    GraftDoc.compact(spark, dir)
     assert(bucketCounts(dir) == Set("of4"))
     val got = GraftDoc.snapshot(spark, dir)
-    assert(rows(got) == (want :+ ("41" -> "v1_41")).sortBy(_._1))
+    assert(rows(got) == expected)
+    assert(keys.map(lookup(dir, _)) == on._3)
     assert(windowShuffles(got) == 0)
   }
 
   test("a pinned lookup reads only the files of its key's bucket") {
-    import graft.connector.GraftDocKeyedPartition
+    import graft.connector.GraftDocInputPartition
     val dir = historyTable()
     val all = GraftDocLog.listCommitFiles(dir).map(_._2)
     Seq("3", "7", "12", "40").foreach { k =>
       val tag = s"-b${GraftDocLog.bucketOf(UTF8String.fromString(k), 4)}of4-"
       val q = GraftDoc.snapshot(spark, dir).filter(col("_id") === k)
       val files = batchScan(q).inputPartitions.map {
-        case p: GraftDocKeyedPartition => p.split.file
+        case p: GraftDocInputPartition => p.file
       }.distinct
       assert(files.nonEmpty && files.forall(_.contains(tag)), s"key $k read $files")
       assert(files.size < all.size)
@@ -1507,16 +1528,19 @@ class GraftDocConnectorSpec extends SparkSpec {
 
   private val odd = "q\"uo\\te \u0001\u001f\t\n\r é 😀 end"
 
-  private def oddManifest(tag: Option[String], tombstone: Boolean) =
-    GraftDocLog.Manifest(s"query $odd", -1L, tag, tombstone, Seq(
+  private def oddManifest(tag: Option[String]) =
+    GraftDocLog.Manifest(s"query $odd", -1L, tag, Seq(
       GraftDocFileStat("part-00000-0-b1of4-0.jsonl", 12L, Some(s"a$odd"), Some(s"z$odd"),
         Seq(GraftDocColStat(s"name$odd", "s", s"min$odd", s"max$odd"),
           GraftDocColStat("n", "l", "-3", "40"))),
       GraftDocFileStat("part-00001-1-0.jsonl", 0L, None, None)))
 
   /** The manifest writer tables were written with before the Jackson codec
-    * (a hand-written escaper), kept so that those manifests provably read. */
-  private def handWrittenManifest(m: GraftDocLog.Manifest): String = {
+    * (a hand-written escaper), kept so that those manifests provably read.
+    * `tombstone` adds the flag that writer also set on a delete's manifest,
+    * which the codec ignores (the flag rides the commit dir name). */
+  private def handWrittenManifest(m: GraftDocLog.Manifest,
+      tombstone: Boolean = false): String = {
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -1540,14 +1564,14 @@ class GraftDocConnectorSpec extends SparkSpec {
       s"""{"name":${jstr(f.name)},"rows":${f.rows}$ids$cols}"""
     }.mkString("[", ",", "]")
     val tagPart = m.tag.map(t => s""","tag":${jstr(t)}""").getOrElse("")
-    val tombPart = if (m.tombstone) ""","tombstone":true""" else ""
+    val tombPart = if (tombstone) ""","tombstone":true""" else ""
     s"""{"queryId":${jstr(m.queryId)},"epochId":${m.epochId}$tagPart$tombPart,"files":$files}"""
   }
 
   test("log codec: manifests and watermarks round-trip quotes, backslashes, control chars and non-BMP text") {
     val codec = GraftDocLog.LogCodec
-    for (m <- Seq(oddManifest(Some(s"tag$odd"), tombstone = true),
-        oddManifest(None, tombstone = false).copy(epochId = 42L, files = Nil)))
+    for (m <- Seq(oddManifest(Some(s"tag$odd")),
+        oddManifest(None).copy(epochId = 42L, files = Nil)))
       assert(codec.parseManifest(codec.manifestJson(m)) == m)
     assert(codec.parseWatermark(codec.watermarkJson(7L, 123456789012L)) == Some((7L, 123456789012L)))
     assert(codec.parseWatermark("""{"epochId":7}""").isEmpty)
@@ -1556,10 +1580,10 @@ class GraftDocConnectorSpec extends SparkSpec {
 
   test("log codec: a manifest in the hand-written format of earlier writers parses to the same stats") {
     val codec = GraftDocLog.LogCodec
-    val m = oddManifest(Some(s"tag$odd"), tombstone = true)
-    assert(codec.parseManifest(handWrittenManifest(m)) == m)
+    val m = oddManifest(Some(s"tag$odd"))
+    assert(codec.parseManifest(handWrittenManifest(m, tombstone = true)) == m)
     // the grammar is unchanged: plain text serializes byte for byte alike
-    val plain = GraftDocLog.Manifest("q-1", 3L, Some("base"), tombstone = false,
+    val plain = GraftDocLog.Manifest("q-1", 3L, Some("base"),
       Seq(GraftDocFileStat("part-0.jsonl", 5L, Some("1"), Some("9"),
         Seq(GraftDocColStat("n", "l", "1", "9")))))
     assert(codec.manifestJson(plain) == handWrittenManifest(plain))
